@@ -65,10 +65,9 @@ from . import geo  # noqa: F401,E402
 #
 # Round-12 instantiation — NINE rule-2 seats + TWO standing rows-only
 # seats:
-#   pipeline_corpus_build          near-dup pair stage → staged
-#                        corpus_pairs distillation (operators/staging.py,
-#                        VERDICT r11 item 1; M=100 43.6 → 19.7 s)
-#   pipeline_drop_reasons          same staged conversion (46.0 → 15.9 s)
+#   pipeline_corpus_build          near-dup pair stage rebuilt over the
+#                        shared gate survivors (VERDICT r11 item 1)
+#   pipeline_drop_reasons          same pair-stage change
 #   graph_kcore                    peel-loop rework: degrees from one
 #                        map-side explode of the single orientation,
 #                        census edge counts as Σdeg over the node table
@@ -76,12 +75,10 @@ from . import geo  # noqa: F401,E402
 #                        3-scalar collect per round (49.2 → 36.6 s)
 #   similarity_ann_hyperplane_recall  NEW (VERDICT r11 item 7) — the
 #                        measured-recall contract of the seeded
-#                        random-hyperplane production LSH tier (whose
-#                        index is the staged hp_index distillation)
+#                        random-hyperplane production LSH tier
 #   bm25_search, text_search_rank, search_prf_expand, tfidf_terms,
 #   similarity_maxsim    the retrieval family's shared per-doc tf index
-#                        is now the staged doc_tf distillation (read +
-#                        persist instead of compute + persist)
+#                        is the shared map-side doc_tf_frame build
 #   stream_dedup_state, mm_decode_features  (VERDICT r11 item 8) — the
 #                        two never-window rows-only keys: both have green
 #                        oracle companions, but a rows>0 driver row each

@@ -33,7 +33,7 @@ from .dedup import (
     _SHINGLES_SQL,
     _MINHASH_SIG_SQL,
 )
-from .graph import connected_components
+from .graph import connected_components, doc_pair_edges
 from .text import (
     _EN_MARKERS,
     _ES_MARKERS,
@@ -46,45 +46,12 @@ from .text import (
 from .curation import _PACK_CTE_SQL, _PACK_SHARD_SQL, pack_next_fit
 
 
-def _corpus_pair_edges(
-    spark: SparkSession, sf_dir: str, survivors: DataFrame
-) -> DataFrame:
-    """The verified near-dup pair table (doc_a, doc_b) over the gated
-    corpus. Default: banded-minhash pairs built INLINE over the caller's
-    already-lineage-cut survivor frame — the same set
-    ``corpus_gate_survivors`` defines, computed fresh inside each
-    pipeline's own plan (nothing persisted across runs). With a staging
-    zone configured (``SPARK_GRAFT_STAGING_DIR``), the write-once
-    ``corpus_pairs`` staged distillation is read instead — built once per
-    fixture content over ``corpus_gate_survivors`` and shared by both
-    pipelines (measured M=100: 43.6 → 19.7 s and 46.0 → 15.9 s on a warm
-    zone)."""
-    import os
-
-    from ..operators.staging import staged_edges
-
-    if os.environ.get("SPARK_GRAFT_STAGING_DIR"):
-        return staged_edges(spark, sf_dir, "corpus_pairs").select(
-            "doc_a", "doc_b"
-        )
-    from .dedup import banded_minhash_pairs
-
-    return banded_minhash_pairs(survivors.select("doc_id", "text")).select(
-        "doc_a", "doc_b"
-    )
-
-
 def corpus_gate_survivors(cat: Catalog) -> DataFrame:
     """Stages 1-3 of the corpus build — quality gate, language gate, exact
     dedup — as one deterministic map + one window shuffle over ``documents``:
     the canonical survivor set ``(doc_id, source, text, n_tok)``.
-
-    Shared by ``pipeline_corpus_build``, ``pipeline_drop_reasons`` AND the
-    ``corpus_pairs`` staged distillation builder (operators/staging.py), so
-    the staged pair table is by construction built over exactly the set the
-    consuming pipelines see. If these gate semantics change, bump the
-    ``corpus_pairs`` version string in ``staging._KINDS`` in the same commit
-    — the staged entries carry the old gate's survivors otherwise."""
+    ``pipeline_drop_reasons`` replays the same gates inline, because it
+    also reports each dropped document's reason."""
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
@@ -217,13 +184,10 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = checkpoint_truncate(corpus_gate_survivors(cat))
 
     # Stage 4: near-dup clusters over survivors; keep each cluster's min
-    # id. Pairs come from _corpus_pair_edges: by default the banded
-    # minhash build runs inline over k (this pipeline's own lineage-cut
-    # survivor set — shingles + signatures + band joins inside this
-    # query's timed plan); a configured staging zone serves the shared
-    # write-once table instead. The oracle always derives pairs from base
-    # tables, so every green hash re-proves staged == inline.
-    edges = _corpus_pair_edges(spark, sf_dir, k)
+    # id. The banded minhash build runs over k (this pipeline's own
+    # lineage-cut survivor set — shingles + signatures + band joins inside
+    # this query's timed plan).
+    edges = doc_pair_edges(k)
     labels = connected_components(k.select("doc_id"), edges)
     canon = (
         labels.where(F.col("doc_id") == F.col("cluster_rep"))
@@ -468,11 +432,8 @@ def pipeline_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Same survivor set as corpus_gate_survivors by construction (the
-    # shared gate); _corpus_pair_edges builds the pair table inline over
-    # it by default, or reads the staged corpus_pairs table when a
-    # staging zone is configured — the unchanged base-table oracle proves
-    # staged == inline either way.
-    edges = _corpus_pair_edges(spark, sf_dir, survivors)
+    # shared gate).
+    edges = doc_pair_edges(survivors)
     labels = connected_components(survivors, edges)
 
     reason = (

@@ -693,17 +693,12 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: component labels are linear in docs, the score join is
     co-partitioned on doc_id, and the survivor window partitions by
     cluster_rep — no stage touches pair-count-squared data."""
-    from ..catalog import Catalog as _Cat
-    from ..operators.staging import staged_edges
-    from .graph import connected_components
+    from .graph import connected_components, doc_pair_edges
 
-    cat = _Cat(spark, sf_dir)
-    # r11: staged doc_pairs distillation (operators/staging.py) — one
-    # pair build per fixture, shared by the document-cluster family.
-    edges = staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
-    labels = connected_components(cat.documents.select("doc_id"), edges).select(
-        "doc_id", "cluster_rep"
-    )
+    cat = Catalog(spark, sf_dir)
+    labels = connected_components(
+        cat.documents.select("doc_id"), doc_pair_edges(cat.documents)
+    ).select("doc_id", "cluster_rep")
     scored = _cls_margin_cols(cat).select(
         "doc_id",
         (F.col("margin_milli") / (F.lit(1000.0) * F.col("n_toks"))).alias("score"),

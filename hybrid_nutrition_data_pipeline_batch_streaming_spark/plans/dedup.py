@@ -1372,12 +1372,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     afternoon and a re-scan-per-candidate at corpus scale. The thresholds
     compare against the same double Jaccard both engines derive from
     identical integer set sizes, so the filter is bit-identical."""
-    from ..operators.staging import staged_edges
-
-    # r11: the verified pair table is the staged doc_pairs distillation
-    # (operators/staging.py) — the "generated ONCE" the docstring promises
-    # now holds ACROSS queries, not just within this one.
-    pairs = staged_edges(spark, sf_dir, "doc_pairs")
+    cat = Catalog(spark, sf_dir)
+    pairs = banded_minhash_pairs(cat.documents.select("doc_id", "text"))
     thr = pairs.sparkSession.createDataFrame(
         [(t,) for t in _SWEEP_THRESHOLDS], "threshold double"
     )

@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..session import checkpoint_truncate, scratch_checkpoint
+from .dedup import banded_minhash_pairs
 from .registry import ORACLE, query
 
 MAX_ROUNDS = 15  # >> near-dup cluster diameter; loop exits early on fixpoint
@@ -143,6 +144,34 @@ def connected_components(
     )
 
 
+def doc_pair_edges(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b): the verified banded-MinHash near-dup pair graph over
+    any (doc_id, text, ...) frame — the edge base of the document-cluster
+    family and of the corpus pipelines' near-dup stage."""
+    return banded_minhash_pairs(docs.select("doc_id", "text")).select(
+        "doc_a", "doc_b"
+    )
+
+
+def cust_supp_edges(cat: Catalog) -> DataFrame:
+    """(custkey, suppkey): the DISTINCT customer→supplier fulfillment edges
+    from orders⋈lineitem — the edge base of ``graph_pagerank``,
+    ``graph_kcore``, ``recursive_path_counts`` and ``path_counts_census``.
+    Raw key pairs: each consumer applies its own node encoding map-side."""
+    return (
+        cat.orders.select("o_orderkey", "o_custkey")
+        .join(
+            cat.lineitem.select("l_orderkey", "l_suppkey"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
+        .select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("l_suppkey").alias("suppkey"),
+        )
+        .distinct()
+    )
+
+
 def _cc_oracle() -> str:
     edges_sql = ORACLE["dedup_minhash_banded"].strip()
     return f"""
@@ -238,18 +267,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round convergence actions, so all rounds compose into ONE
     lazy plan — per-round shuffles are equi-joins and groupBy-sums on the
     node id, exactly the Pregel schedule."""
-    # The orders⋈lineitem distillation (operators/staging.py): built
-    # inline and lineage-cut here by default — computed from the base
-    # parquet inside this query's own plan (the cut stops the union below
-    # evaluating the join+distinct twice); a configured staging zone
-    # serves the shared family-level table as a leaf scan instead.
     # Node ids are parity-encoded LONGS internally (customer→2k,
     # supplier→2k+1, like graph_bfs_khop) — every per-round shuffle keys
     # on the node id, and fixed 8-byte keys hash/compare/ship cheaper
     # than 'c123'/'s45' strings; the string ids are reconstructed only in
     # the final projection so the output (and oracle) are unchanged.
-    from ..operators.staging import staged_edges
-
     # r12 fusion (guide §2.4 — two operations keyed the same way share one
     # exchange): the und mirror is ONE map-side explode of the single
     # stored orientation (consumes the unmaterialized join+distinct once,
@@ -259,7 +281,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three). The whole distillation → mirror → degree chain is a single
     # eager cut; measured 3.37 → 2.67 s cold at sf0.1, ranks bit-identical
     # (integer arithmetic — the window count equals the groupBy count).
-    e = staged_edges(spark, sf_dir, "cust_supp").select(
+    e = cust_supp_edges(Catalog(spark, sf_dir)).select(
         (F.col("custkey") * 2).alias("src"),
         (F.col("suppkey") * 2 + 1).alias("dst"),
     )
@@ -316,16 +338,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id. ``keep`` marks the one survivor per cluster — the actual
     keep/drop decision a dedup pipeline ships. Singletons (no near-dup) keep
     themselves, so this is a total map over the corpus."""
-    from ..operators.staging import staged_edges
-
     cat = Catalog(spark, sf_dir)
-    # r11: the verified pair table comes from the staged doc_pairs
-    # distillation (operators/staging.py) — one shingle+minhash+verify
-    # build per fixture, shared by the whole document-cluster family; the
-    # oracle still derives pairs from the documents table, so the green
-    # hash re-proves staged == inline.
-    edges = staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
-    labels = connected_components(cat.documents.select("doc_id"), edges)
+    labels = connected_components(
+        cat.documents.select("doc_id"), doc_pair_edges(cat.documents)
+    )
     sizes = labels.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "cluster_rep")
@@ -374,17 +390,11 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse — wedge counts stay near-linear — and the canonical a<b ordering
     already implements the "orient by degree" trick's worst case; at 100 TB
     add the degree-ordering refinement to bound skew from hub nodes."""
-    from ..operators.staging import staged_edges
-
-    # r11: staged doc_pairs distillation (see dedup_connected_components).
     # r12: eager lineage cut instead of a lazy .persist() — the three
     # self-join legs materialize concurrently and raced to compute the
     # uncached pair table (measured 1.98 → 1.74 s cold at sf0.1; exec
     # 0.56 → 0.12 s with the build paid once at construction).
-
-    edges = checkpoint_truncate(
-        staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
-    )
+    edges = checkpoint_truncate(doc_pair_edges(Catalog(spark, sf_dir).documents))
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     return (
         e1.join(e2, F.col("e2.doc_a") == F.col("e1.doc_b"))
@@ -431,10 +441,7 @@ def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     (expensive, unmaterialized) banded pair generation, and a union
     consumes that pipeline twice while the explode consumes it once
     (measured at M=100: 90.8 s → the pair-generation cost once)."""
-    from ..operators.staging import staged_edges
-
-    # r11: staged doc_pairs distillation (see dedup_connected_components).
-    edges = staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
+    edges = doc_pair_edges(Catalog(spark, sf_dir).documents)
     und = edges.select(F.explode(F.array("doc_a", "doc_b")).alias("node"))
     deg = und.groupBy("node").agg(F.count("*").alias("degree"))
     return deg.groupBy("degree").agg(F.count("*").cast("long").alias("n_nodes"))
@@ -567,17 +574,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-5: parity-encoded LONG node ids (the pagerank/BFS scheme) — the
     # output is a census, so ids never surface and every per-round semi-join
     # ships 8-byte keys instead of strings.
-    # The initial distillation (operators/staging.py): built inline by
-    # default and cut with scratch_checkpoint — SERIALIZED blocks, the
-    # primitive the r5/r8 M=100 study picked for this frame class (the
-    # deserialized fallback OOMed the 8 g heap; the edge set is read by
-    # the round-0 degree pass and the round-1 semi-joins). A configured
-    # staging zone serves the shared family-level table as a parquet leaf
-    # instead — a reliable on-disk materialization with zero executor
-    # storage-pool footprint, shared with graph_pagerank and both
-    # path-count queries.
-    from ..operators.staging import staged_edges
-
+    # The initial edge set is cut with scratch_checkpoint — SERIALIZED
+    # blocks, the primitive the r5/r8 M=100 study picked for this frame
+    # class (the deserialized fallback OOMed the 8 g heap; the edge set is
+    # read by the round-0 degree pass and the round-1 semi-joins).
     # r12 peel-loop rework (VERDICT r11 item 6): the census needs only the
     # NODE-DEGREE table per round, so (a) degrees come from ONE map-side
     # explode of the single orientation (the old union-with-self doubling
@@ -591,7 +591,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # study in SCALE.md; edge-scale work per round is now exactly the
     # semi-join filter + checkpoint write + one degree shuffle, which is
     # the synchronous-peel minimum.
-    edges = staged_edges(spark, sf_dir, "cust_supp", cut=scratch_checkpoint).select(
+    edges = scratch_checkpoint(cust_supp_edges(Catalog(spark, sf_dir))).select(
         (F.col("custkey") * 2).alias("src"),
         (F.col("suppkey") * 2 + 1).alias("dst"),
     )
@@ -718,20 +718,21 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     reusable), the visited anti-join gains a bloom pre-filter, and hub skew
     lands on AQE's skew-join split."""
     li = Catalog(spark, sf_dir).lineitem
-    # ONE distinct over the fact table (operators/staging.py): built
-    # inline and lineage-cut here by default (the cut keeps the union's
-    # two orientations from evaluating the distinct twice — the same
-    # halved-write discipline the r5 M=100 study established); a
-    # configured staging zone serves the table shared with
-    # graph_jaccard_sim as a leaf scan. Both orientations derive from the
-    # single stored orientation (the mirror is a reader-side column
-    # swap). Frontier/visited cuts below stay: level h's plan
-    # otherwise EMBEDS levels 0..h-1 (frontier ⋈ edges, anti ⋈ visited) —
-    # exponential plan growth and per-level re-analysis even under cache
-    # (same measured pathology as the CC loop; see module docstring).
-    from ..operators.staging import staged_edges
-
-    pairs_ck = staged_edges(spark, sf_dir, "part_supp", cut=checkpoint_truncate).select(
+    # ONE distinct over the fact table, lineage-cut (the cut keeps the
+    # union's two orientations from evaluating the distinct twice — the
+    # same halved-write discipline the r5 M=100 study established). Both
+    # orientations derive from the single stored orientation (the mirror
+    # is a reader-side column swap). Frontier/visited cuts below stay:
+    # level h's plan otherwise EMBEDS levels 0..h-1 (frontier ⋈ edges,
+    # anti ⋈ visited) — exponential plan growth and per-level re-analysis
+    # even under cache (same measured pathology as the CC loop; see module
+    # docstring).
+    pairs_ck = checkpoint_truncate(
+        li.select(
+            F.col("l_partkey").alias("partkey"),
+            F.col("l_suppkey").alias("suppkey"),
+        ).distinct()
+    ).select(
         (F.col("partkey") * 2).alias("s"),
         (F.col("suppkey") * 2 + 1).alias("t"),
     )
@@ -829,25 +830,15 @@ def graph_jaccard_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     max part degree of every shipped fixture, so test results are
     bit-identical; on skewed production data it is THE knob."""
     # r13 (guide §2.4 — one exchange instead of two): the sorted distinct
-    # supplier bag per part is ONE ``collect_set`` aggregation. Inline (no
-    # staging zone) it runs STRAIGHT OVER the raw lineitem projection — the
-    # partial collect_set dedups map-side, so the separate
-    # distinct-(p,s)-keyed exchange the staged ``part_supp`` builder paid
-    # disappears (bag build measured 1.09 → 0.70 s cold at sf0.1, full
-    # query 3.54 → 2.06 s min interleaved with the 2-generator explode
-    # below; rows identical). With a staging zone configured the shared
-    # distilled table is leaf-scanned instead, and collect_set over the
-    # already-distinct leaf builds the identical bag.
-    from ..operators.staging import _staging_root, staged_edges
-
-    if _staging_root() is None:
-        adj0 = Catalog(spark, sf_dir).lineitem.select(
-            F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-        )
-    else:
-        adj0 = staged_edges(spark, sf_dir, "part_supp").select(
-            F.col("suppkey").alias("s"), F.col("partkey").alias("p")
-        )
+    # supplier bag per part is ONE ``collect_set`` aggregation STRAIGHT
+    # OVER the raw lineitem projection — the partial collect_set dedups
+    # map-side, so a separate distinct-(p,s)-keyed exchange is never paid
+    # (bag build measured 1.09 → 0.70 s cold at sf0.1, full query 3.54 →
+    # 2.06 s min interleaved with the 2-generator explode below; rows
+    # identical).
+    adj0 = Catalog(spark, sf_dir).lineitem.select(
+        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
+    )
     # ONE part-keyed shuffle does dedup + cap + wedge generation: collect
     # each part's (distinct, sorted) supplier bag, drop hub bags, and emit
     # the C(d,2) ordered pairs map-side from the bag — no adjacency
@@ -1124,11 +1115,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row edge total broadcasts into the closed form. At ~1e9 edges
     the 4m² term moves to DECIMAL(38,0)."""
     cat = Catalog(spark, sf_dir)
-    from ..operators.staging import staged_edges
-
-    # r11: staged doc_pairs distillation (see dedup_connected_components).
-    edges = staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
-    edges = checkpoint_truncate(edges)
+    edges = checkpoint_truncate(doc_pair_edges(cat.documents))
     langs = cat.documents.select("doc_id", "lang")
     tot = edges.agg(F.count("*").cast("long").alias("m"))
     ends = edges.select(

@@ -382,16 +382,15 @@ _RECURSIVE_WALK_SQL = """
 """
 
 
-# The Spark-side statement: identical recursion, but the edges CTE reads the
-# FAMILY-LEVEL STAGED distillation (operators/staging.py — r11, VERDICT r10
-# item 6) instead of re-running orders⋈lineitem+DISTINCT. The ORACLE stays
+# The Spark-side statement: identical recursion, but the edges CTE reads a
+# lineage-cut temp view of ``plans/graph.py::cust_supp_edges`` instead of
+# re-running orders⋈lineitem+DISTINCT per recursion level. The ORACLE stays
 # the self-contained _RECURSIVE_WALK_SQL above: DuckDB recomputes the edges
-# from the base tables, so the green hash also re-proves the staged table
-# equals the inline distillation.
-_RECURSIVE_WALK_STAGED_SQL = """
+# from the base tables.
+_RECURSIVE_WALK_CUT_SQL = """
     WITH RECURSIVE edges AS (
         SELECT 'c' || custkey AS src, 's' || suppkey AS dst
-        FROM staged_cust_supp
+        FROM cust_supp_edges
     ), und AS (
         SELECT src, dst FROM edges
         UNION ALL
@@ -434,20 +433,17 @@ def recursive_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     result as two per-level weighted-count aggregates (the r9
     census-over-enumeration lesson applied to recursion) and is the
     production path; this query stays as the WITH RECURSIVE surface
-    coverage, exact at the fixture gate. Since r11 the edges CTE reads the
-    family-level staged distillation (operators/staging.py); the oracle
-    still derives edges from the base tables, so the green hash also
-    re-proves staged == inline."""
-    from ..operators.staging import staged_edges
+    coverage, exact at the fixture gate. The edges CTE reads the
+    family-level distillation (``plans/graph.py::cust_supp_edges``); the
+    oracle derives edges from the base tables."""
+    from .graph import cust_supp_edges
 
-    # cut=checkpoint_truncate: the recursive CTE re-reads the view per
-    # level — inline, each read would otherwise recompute the
-    # join+distinct (a configured staging zone makes it a leaf scan and
-    # the cut is skipped).
-    staged_edges(
-        spark, sf_dir, "cust_supp", cut=checkpoint_truncate
-    ).createOrReplaceTempView("staged_cust_supp")
-    return spark.sql(_RECURSIVE_WALK_STAGED_SQL)
+    # Lineage cut: the recursive CTE re-reads the view per level, and each
+    # read would otherwise recompute the join+distinct.
+    checkpoint_truncate(
+        cust_supp_edges(Catalog(spark, sf_dir))
+    ).createOrReplaceTempView("cust_supp_edges")
+    return spark.sql(_RECURSIVE_WALK_CUT_SQL)
 
 
 @query("path_counts_census", oracle=_RECURSIVE_WALK_SQL)
@@ -463,17 +459,12 @@ def path_counts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerating form trips Spark's recursion row guard. The same
     census-over-enumeration move as round-9's join_range_binned: when
     the output is a COUNT, never materialize what you can aggregate.
-    The distillation (operators/staging.py) is built inline and
-    lineage-cut by default — the und mirror and the seed filter would
-    otherwise evaluate the join+distinct three times; a configured
-    staging zone serves the family-level table (shared with
-    graph_pagerank, graph_kcore, recursive_path_counts) as a leaf
-    parquet scan and the cut is skipped. The oracle always derives edges
-    from the base tables, so the green hash re-proves staged == inline
-    every round."""
-    from ..operators.staging import staged_edges
+    The distillation (``plans/graph.py::cust_supp_edges``) is
+    lineage-cut — the und mirror and the seed filter would otherwise
+    evaluate the join+distinct three times."""
+    from .graph import cust_supp_edges
 
-    edges = staged_edges(spark, sf_dir, "cust_supp", cut=checkpoint_truncate).select(
+    edges = checkpoint_truncate(cust_supp_edges(Catalog(spark, sf_dir))).select(
         F.concat(F.lit("c"), F.col("custkey")).alias("src"),
         F.concat(F.lit("s"), F.col("suppkey")).alias("dst"),
     )

@@ -49,9 +49,8 @@ def doc_tf_frame(documents: DataFrame) -> DataFrame:
     doc_id join to re-attach dl) with zero shuffles — the difference
     between shuffling the whole 100 TB token stream and shuffling nothing.
 
-    Emits (doc_id, dl, tfs:array<struct<tok,tf>>). Consumed by the
-    ``doc_tf`` staged-distillation builder (operators/staging.py); query
-    code reads the staged table via ``_doc_tf`` below.
+    Emits (doc_id, dl, tfs:array<struct<tok,tf>>). Query code reads the
+    lineage-cut form via ``_doc_tf`` below.
     """
     return (
         documents.where(F.col("text") != "")
@@ -77,33 +76,23 @@ def doc_tf_frame(documents: DataFrame) -> DataFrame:
 
 
 def _doc_tf(cat: Catalog):
-    """The shared per-doc tf index (r12): by default ``doc_tf_frame``
-    computed inline + persisted — the map-side RLE build runs inside each
-    consumer's own timed plan, computed fresh from the documents parquet
-    every invocation (no cross-run persistence). With a staging zone
-    configured (``SPARK_GRAFT_STAGING_DIR``), the ``doc_tf`` staged
-    distillation is read instead — built once per fixture content, a ~2×
-    win for the five-query family on a warm zone (measured M=100: ~3 s
-    per cold nested read vs 5.9 s per compute).
+    """The shared per-doc tf index (r12): ``doc_tf_frame`` computed inline
+    and lineage-cut — the map-side RLE build runs inside each consumer's
+    own timed plan, computed fresh from the documents parquet every
+    invocation.
 
-    The ``.persist()`` is LOAD-BEARING either way: (a) it is the optimizer
-    barrier — explode() directly over the un-persisted nested-lambda
-    projections sends Catalyst into a runaway optimization loop (measured
-    on Spark 4.1: .explain() alone pegs a core for minutes; the
-    InMemoryRelation substitution makes the generator input a plain
-    attribute); (b) the heavy consumers (search_prf_expand,
+    The cut is LOAD-BEARING: (a) it is the optimizer barrier — explode()
+    directly over the uncut nested-lambda projections sends Catalyst into
+    a runaway optimization loop (measured on Spark 4.1: .explain() alone
+    pegs a core for minutes; the cut's scan leaf makes the generator input
+    a plain attribute); (b) the heavy consumers (search_prf_expand,
     similarity_maxsim, bm25's stats leg) reference the index two-plus
     times. Do not inline ``doc_tf_frame`` into the consumers."""
-    from ..operators.staging import staged_edges
-
     # r12: eager cut (was a lazy persist) — still the same optimizer
     # barrier (the scan leaf is a plain attribute source), but the two-plus
     # consumer legs no longer race to fill it (bm25 0.72 → 0.63 s, tfidf
-    # 0.99 → 0.78 s, prf 1.51 → 1.14 s interleaved). The cut is passed INTO
-    # staged_edges (ADVICE r12) so it applies only to the inline form — a
-    # configured staging zone's parquet leaf is already a lineage cut, and
-    # eagerly re-copying it into executor storage is pure waste.
-    return staged_edges(cat.spark, cat.sf_dir, "doc_tf", cut=checkpoint_truncate)
+    # 0.99 → 0.78 s, prf 1.51 → 1.14 s interleaved).
+    return checkpoint_truncate(doc_tf_frame(cat.documents))
 
 
 @query(

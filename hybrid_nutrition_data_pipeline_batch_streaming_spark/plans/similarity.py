@@ -506,8 +506,7 @@ def hp_index_frame(emb: DataFrame) -> DataFrame:
     (ints + one double per vector), band candidate joins ship 8-byte ids
     instead of 64-double arrays, and the rescore joins the embeddings
     table back by vec_id for the exact vectors. Consumed inline (with a
-    persist) by ``similarity_ann_hyperplane`` and by the ``hp_index``
-    staged distillation builder (operators/staging.py).
+    lineage cut) by ``similarity_ann_hyperplane``.
 
     r12 optimization (guide §4.2 — hand whole Arrow batches to vectorized
     native code): the 32 per-(band,bit) projections and the norm are ONE
@@ -591,29 +590,21 @@ def similarity_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index form (buckets + norms, ``hp_index_frame``) is the FAISS
     convention — codes only, never raw vectors: the band joins ship 8-byte
     ids + ints, and the exact rescore joins the embeddings table back by
-    vec_id. By default the index is computed INLINE from the embeddings
-    parquet inside this query's own plan and eagerly localCheckpointed
-    for the one plan's 9 references (qb + 8 band joins + the rescore
-    norms) — eager, not a lazy persist, because the 8 band joins' broadcast
-    stages materialize CONCURRENTLY and a lazy cache lets several of them
-    race to compute the index before any block is published (measured at
-    sf0.1: exec 1.2-3.8 s lazy vs a steady 0.9 s eager); with a staging
-    zone configured (``SPARK_GRAFT_STAGING_DIR``) it is the write-once
-    ``hp_index`` staged distillation instead — built once per fixture,
-    ~1% of the vector payload, the build-once/probe-many ANN contract.
-    Correctness is carried by the oracle-backed recall contract
-    ``similarity_ann_hyperplane_recall`` (the staged==inline pin in
-    tests/test_staging.py keeps that transfer valid either way)."""
-    from ..operators.staging import staged_edges
-
+    vec_id. The index is computed INLINE from the embeddings parquet
+    inside this query's own plan and eagerly lineage-cut for the one
+    plan's 9 references (qb + 8 band joins + the rescore norms) — eager,
+    not a lazy persist, because the 8 band joins' broadcast stages
+    materialize CONCURRENTLY and a lazy cache lets several of them race
+    to compute the index before any block is published (measured at
+    sf0.1: exec 1.2-3.8 s lazy vs a steady 0.9 s eager). Correctness is
+    carried by the oracle-backed recall contract
+    ``similarity_ann_hyperplane_recall``, which wraps this query."""
     cat = Catalog(spark, sf_dir)
-    index = staged_edges(
-        spark, sf_dir, "hp_index", cut=checkpoint_truncate
-    )
+    index = checkpoint_truncate(hp_index_frame(cat.embeddings))
     vecs = cat.embeddings.select(
         "vec_id", _to_double(F.col("embedding")).alias("e")
     )
-    # Probe cut touches ONLY the staged index (ints): the band joins must
+    # Probe cut touches ONLY the index (ints): the band joins must
     # not re-derive an embeddings join per band — the query-side vectors
     # enter exactly once, in the broadcast rescore payload below.
     qb = index.where(F.col("vec_id") < N_QUERIES)

@@ -122,6 +122,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _apply_checkpoint_dir(spark)
+    ensure_package_on_workers(spark)
     return spark
 
 
@@ -306,14 +307,17 @@ _PKG_SHIPPED: set[str] = set()
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship this package to Python worker processes via ``addPyFile``.
 
-    Python data-source workers (``format("wire_topic")`` /
-    ``format("nutrition_items")``) re-import the module that defines the
-    DataSource class in a separate process; they do NOT inherit the
-    driver's ``sys.path`` inserts. When the driver process was started
-    outside the repo root (a packaged deployment, or a tool run from a
-    scratch cwd), that re-import fails with PYTHON_DATA_SOURCE_ERROR even
-    though the driver itself imported fine. Two mechanisms, because
-    workers come in two flavors:
+    Python workers — data-source readers (``format("wire_topic")`` /
+    ``format("nutrition_items")``) and pandas-UDF / applyInPandas tasks
+    alike — re-import the package modules their pickled functions
+    reference in a separate process; they do NOT inherit the driver's
+    ``sys.path`` inserts. When the driver process was started outside the
+    repo root (a packaged deployment, or a tool run from a scratch cwd),
+    that re-import fails (PYTHON_DATA_SOURCE_ERROR, or ModuleNotFoundError
+    in a UDF worker) even though the driver itself imported fine. So
+    ``get_spark`` and ``ensure_runtime_conf`` call this for every session
+    the engine builds or is handed. Two mechanisms, because workers come
+    in two flavors:
 
     - ``SparkContext.addPyFile`` of a package zip — reaches EXECUTOR-side
       python workers (batch read tasks) via the standard pyFiles include
@@ -328,14 +332,14 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
       only place these runners execute; on executors the stale path is
       simply ignored.
 
-    Must run BEFORE ``spark.dataSource.register`` (the per-function env
-    is captured at registration). Idempotent per application. The zip is
-    named by a CONTENT DIGEST of the shipped sources (ADVICE r7: a
-    pid-keyed name is both a /tmp leak — every driver process writes a
-    new zip nothing cleans up — and a staleness hazard: /tmp outlives
-    processes, so pid reuse could ship an outdated zip while the driver
-    runs current code). Same sources → same path, reused across
-    processes; any source edit → new digest → fresh zip.
+    Must run BEFORE ``spark.dataSource.register`` and before any UDF is
+    built (the per-function env is captured at creation). Idempotent per
+    application. The zip is named by a CONTENT DIGEST of the shipped
+    sources (ADVICE r7: a pid-keyed name is both a /tmp leak — every
+    driver process writes a new zip nothing cleans up — and a staleness
+    hazard: /tmp outlives processes, so pid reuse could ship an outdated
+    zip while the driver runs current code). Same sources → same path,
+    reused across processes; any source edit → new digest → fresh zip.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
@@ -404,3 +408,4 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
             pass
     _size_shuffle_partitions(spark)
     _apply_checkpoint_dir(spark)
+    ensure_package_on_workers(spark)

@@ -53,7 +53,7 @@ def test_registry_priority_window():
     }
     assert core_regressions <= set(plans.PRIORITY)
     rotated_in = {
-        # rule 2 sample: plan/oracle changed in r12 (staged corpus_pairs /
+        # rule 2 sample: plan/oracle changed in r12 (corpus pair stage /
         # doc_tf consumers; the kcore peel rework; the hyperplane contract)
         "pipeline_corpus_build", "pipeline_drop_reasons",
         "graph_kcore", "similarity_ann_hyperplane_recall",
@@ -911,3 +911,85 @@ def test_wire_source_streams_from_scratch_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "SCRATCH_CWD_OK 6" in proc.stdout
+
+
+@pytest.mark.parametrize("session", ["engine", "foreign"])
+def test_udf_query_runs_from_scratch_cwd(tmp_path, sf_dir, session):
+    """A query that registers no data source but runs package code in a
+    Python worker (``pipeline_corpus_build``'s applyInPandas packing) must
+    work from a driver whose cwd is not the repo root. The package reaches
+    the workers only if the session shipped it: ``get_spark`` ("engine")
+    and ``ensure_runtime_conf`` (reached via the catalog on a "foreign"
+    session the engine did not build) both do."""
+    import subprocess
+    import sys as _sys
+    import textwrap
+
+    build = {
+        "engine": "from hybrid_nutrition_data_pipeline_batch_streaming_spark"
+        ".session import get_spark\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=2)",
+        "foreign": "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate())",
+    }[session]
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        {{build}}
+        from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import QUERIES
+        n = QUERIES["pipeline_corpus_build"](spark, {sf_dir!r}).count()
+        assert n > 0, n
+        print("UDF_SCRATCH_CWD_OK", n)
+        """
+    ).replace("{build}", build)
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)  # the driver must not inherit the repo path
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [_sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-3000:]
+    assert "UDF_SCRATCH_CWD_OK" in proc.stdout
+
+
+def test_package_environment_options_are_allowlisted():
+    """Every environment variable the package reads is an option someone
+    has to know about: adding one must be a deliberate edit to this list.
+    Every ``os.environ`` / ``getenv`` read must name its variable as a
+    string literal, so the scan below is complete."""
+    import re
+
+    allowed = {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_DRIVER_MEMORY",
+        "SPARK_GRAFT_CHECKPOINT_DIR",
+        "TEST_ORACLE_SF_DIR",
+    }
+    access = re.compile(r"\benviron\b|\bgetenv\b")
+    literal = re.compile(
+        r"""\benviron(?:\.get|\.setdefault|\.pop)?\s*[(\[]\s*["']([A-Za-z0-9_]+)["']"""
+        r"""|\bgetenv\s*\(\s*["']([A-Za-z0-9_]+)["']"""
+    )
+    pkg = os.path.join(REPO_ROOT, "hybrid_nutrition_data_pipeline_batch_streaming_spark")
+    read, unnamed = set(), []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            names = [a or b for a, b in literal.findall(src)]
+            read.update(names)
+            if len(access.findall(src)) != len(names):
+                unnamed.append(os.path.relpath(path, REPO_ROOT))
+    assert not unnamed, f"environment read without a literal name in {unnamed}"
+    assert read == allowed

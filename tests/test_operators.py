@@ -1,5 +1,6 @@
 """Operator-contract tests that the hash oracle can't express."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hybrid_nutrition_data_pipeline_batch_streaming_spark import plans
@@ -1219,7 +1220,7 @@ def test_multiprobe_wide_recall_contract(spark):
     assert set(want) < full
 
 
-def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path, monkeypatch):
+def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path):
     """r11 kcore early-exit: when a peel round drops no node, the loop
     fills the remaining census rows instead of rewriting the edge set
     (survivor-count == node-count is a sound set-equality test under
@@ -1227,9 +1228,6 @@ def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path, monkeypatch):
     fixpoint fires EARLY: a dense biclique (nothing ever peels — round-1
     exit must still emit all KCORE_ROUNDS identical rows) and a sparse
     star (cascades to empty, then stays all-zero)."""
-    # ADVICE r11: isolate this test's synthetic-fixture staged entries so
-    # they never land in (or prune) the repo's shared staging root.
-    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path / "staged"))
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans.graph import (
         KCORE_K,
         KCORE_ROUNDS,
@@ -1271,3 +1269,47 @@ def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path, monkeypatch):
         for r in plans.QUERIES["graph_kcore"](spark, sf2).collect()
     )
     assert got2 == [(i, 0, 0) for i in range(1, KCORE_ROUNDS + 1)]
+
+
+class _CapturedCC(Exception):
+    """Raised by the capturing stand-in once a caller's CC inputs are in."""
+
+
+@pytest.mark.parametrize(
+    "query_name",
+    [
+        "dedup_connected_components",
+        "dedup_keep_best",
+        "pipeline_corpus_build",
+        "pipeline_drop_reasons",
+        "er_golden_records",
+    ],
+)
+def test_cc_edge_endpoints_are_nodes(spark, monkeypatch, query_name):
+    """``connected_components`` seeds its labels from the edge endpoints and
+    never semi-joins them against ``nodes`` (plans/graph.py, r13 loop
+    rework), so every caller must pass edges whose endpoints are a subset
+    of its nodes — an endpoint outside them would surface as a phantom
+    cluster member. Capture the exact (nodes, edges) pair each caller
+    hands over and anti-join the endpoints against the nodes."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (
+        corpus,
+        graph,
+    )
+
+    captured = []
+
+    def capture(nodes, edges, *args, **kwargs):
+        captured.append((nodes, edges))
+        raise _CapturedCC
+
+    # curation/textmatch import it from plans.graph at call time; corpus
+    # binds it at module import.
+    monkeypatch.setattr(graph, "connected_components", capture)
+    monkeypatch.setattr(corpus, "connected_components", capture)
+    with pytest.raises(_CapturedCC):
+        plans.QUERIES[query_name](spark, SF)
+    (nodes, edges), = captured
+    ends = edges.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+    assert ends.count() > 0, "vacuous: the caller produced no edges"
+    assert ends.join(nodes.select("doc_id"), "doc_id", "left_anti").count() == 0

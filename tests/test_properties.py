@@ -275,7 +275,7 @@ def test_bpe_merge_regex_matches_python_greedy(spark, words, n_merges):
 )
 def test_doc_tf_matches_counter(spark, texts):
     """The map-side run-length tf encoder (plans/search.doc_tf_frame — the
-    doc_tf staged-distillation builder) must agree
+    shared retrieval index builder) must agree
     with collections.Counter over ANY text — including empty tokens from
     repeated/trailing spaces and non-ASCII — and dl must equal the token
     count. Guards the r7 HOF rework against sort/boundary off-by-ones."""
