@@ -207,9 +207,9 @@ def main() -> None:
 
     # Best-of-3 per query, COLD-cache convention (VERDICT r7 item 2): every
     # repeat starts from an empty CacheManager — the registry wrapper
-    # releases all cached fragments at each top-level query invocation, and
-    # the explicit clearCache below keeps that true even if the wrapper
-    # convention changes. Queries that persist() intermediates therefore
+    # releases the previous query's cached fragments at each top-level query
+    # invocation, and the explicit clearCache below keeps that true even if
+    # the wrapper convention changes. Queries that persist() intermediates therefore
     # rebuild them each repeat: timings measure the full cold plan, never a
     # warm re-read of a previous run's cache.
     #

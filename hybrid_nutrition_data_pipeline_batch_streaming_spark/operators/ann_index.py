@@ -40,6 +40,7 @@ from ..plans.similarity import (
     _norm,
     _to_double,
 )
+from ..session import persist
 
 
 def build_lsh_index(embeddings: DataFrame, path: str) -> None:
@@ -56,7 +57,7 @@ def build_lsh_index(embeddings: DataFrame, path: str) -> None:
         e.alias("e"),
         *[_band_bucket(e, b).alias(f"b{b}") for b in range(N_BANDS)],
     ).withColumn("n", _norm(F.col("e")))
-    base = base.persist()
+    base = persist(base)
     postings = None
     for b in range(N_BANDS):
         piece = base.select(
@@ -95,7 +96,7 @@ def query_lsh_index(
         qe.alias("qe"),
         *[_band_bucket(qe, b).alias(f"qb{b}") for b in range(N_BANDS)],
     ).withColumn("qn", _norm(F.col("qe")))
-    q = q.persist()
+    q = persist(q)
     postings = spark.read.parquet(os.path.join(path, "postings"))
     cand = None
     for b in range(N_BANDS):

@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import persist
+
 
 def build_text_index(documents: DataFrame, path: str) -> None:
     """Materialize the inverted index for a (doc_id, text) DataFrame."""
@@ -39,7 +41,7 @@ def build_text_index(documents: DataFrame, path: str) -> None:
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
     tf = tok.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    tf = tf.persist()
+    tf = persist(tf)
     pfx = F.substring("tok", 1, 1).alias("tok_pfx")
     (
         tf.select("doc_id", "tok", "tf", pfx)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..operators.blocking import capped_blocking_join, capped_pair_sql
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -685,9 +685,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform fixtures can't show a local win (the dedup_incremental
     precedent, SCALE.md round-5)."""
     cat = Catalog(spark, sf_dir)
-    sh = cat.documents.select(
-        "doc_id", "source", _shingles(F.col("text")).alias("shingles")
-    ).persist()  # read 2× below (sizes + the posting build); without the
+    sh = persist(
+        cat.documents.select(
+            "doc_id", "source", _shingles(F.col("text")).alias("shingles")
+        )
+    )  # read 2× below (sizes + the posting build); without the
     # persist each read re-runs the zip_with shingling — profiled 1.9× slower
     # at sf0.1
     # Inverted-index formulation: |A∩B| by counting per-pair postings-list
@@ -962,9 +964,11 @@ def dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     join runs on rare-shingle posting lists — the structural answer to
     hot-shingle skew, instead of salting around it."""
     cat = Catalog(spark, sf_dir)
-    sh = cat.documents.select(
-        "doc_id", "source", _shingles(F.col("text")).alias("shingles")
-    ).persist()  # feeds postings, prefix build, and the verification join
+    sh = persist(
+        cat.documents.select(
+            "doc_id", "source", _shingles(F.col("text")).alias("shingles")
+        )
+    )  # feeds postings, prefix build, and the verification join
     ex = sh.select("doc_id", "source", F.explode("shingles").alias("s"))
     # Global order key: document frequency within the block (shingles are
     # distinct per doc, so count(*) counts documents), ties by shingle text.
@@ -1157,7 +1161,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same b=2×r=2 banding as `dedup_minhash_banded`; left join keeps
     unmatched new docs (the common case) without a second scan."""
     cat = Catalog(spark, sf_dir)
-    sig = (
+    sig = persist(
         cat.documents.select("doc_id", _shingles(F.col("text")).alias("shingles"))
         .withColumn("digests", F.transform(F.col("shingles"), F.md5))
         .select(
@@ -1168,7 +1172,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k in range(N_MINHASHES)
             ],
         )
-        .persist()
     )
     # Band joins and the pair-dedup ship IDS + band keys only — the shingle
     # arrays (the wide payload, ~100 tokens/doc) attach AFTERWARDS, to just

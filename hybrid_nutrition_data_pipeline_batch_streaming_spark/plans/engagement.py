@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 #: Overflow guard for the decayed score: weights are 2^weeks, so cap the
@@ -82,7 +82,7 @@ def running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: examined and kept LAZY — trivially-rebuildable corpus-sized
     # projection (the measured class where an eager cut regresses M=100;
     # see OPTIMIZATION_r12.md persist sweep).
-    daily = cat.events.select(F.to_date("ts").alias("d"), "user_id").persist()
+    daily = persist(cat.events.select(F.to_date("ts").alias("d"), "user_id"))
     firsts = daily.groupBy("user_id").agg(F.min("d").alias("first_d"))
     newby = firsts.groupBy(F.col("first_d").alias("d")).agg(
         F.count("*").alias("new_users")
@@ -178,7 +178,7 @@ def agg_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running score, add the new week at weight 1), keeping magnitudes
     bounded forever. Two shuffles: (user, day) pre-aggregate, then user."""
     cat = Catalog(spark, sf_dir)
-    daily = (
+    daily = persist(
         cat.events.select(
             "user_id",
             F.to_date("ts").alias("d"),
@@ -193,7 +193,6 @@ def agg_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Persisted: the rollup feeds both the epoch scalar and the
         # weighting pass — one events scan instead of two.
-        .persist()
     )
     epoch = daily.agg(F.min("d").alias("day0"))
     weeks = F.expr("datediff(d, day0) DIV 7")
@@ -422,7 +421,7 @@ def bitmap_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Persisted: the word table is the bitmap index and both self-join
     # sides read it — one events scan + bitmap build instead of two.
-    words = (
+    words = persist(
         seg.groupBy("event_type", F.expr("user_id DIV 63").alias("word_idx"))
         .agg(
             F.bit_or(
@@ -431,7 +430,6 @@ def bitmap_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("bits")
         )
-        .persist()
     )
     a = words.select(
         F.col("event_type").alias("seg_a"),
@@ -629,10 +627,9 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: days is the fact-scale distinct and feeds dau, the island
     # window AND the date-bounds scalar — uncached, the events scan +
     # distinct would run four times. (user, day)-cardinality cache.
-    days = (
+    days = persist(
         cat.events.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .persist()
     )
     dau = days.groupBy("d").agg(F.count("*").alias("dau"))
     # Merge each user's [d, d+27] cover intervals: a new island starts when
@@ -798,7 +795,7 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is additionally cached for its two consumers (classification and the
     # churn probe) so the user-window runs once. Both caches are
     # (user, week)-cardinality.
-    weeks = (
+    weeks = persist(
         cat.events.select(
             "user_id",
             F.expr(
@@ -806,14 +803,12 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wk"),
         )
         .distinct()
-        .persist()
     )
     w_all = Window.partitionBy("user_id")
     w_seq = Window.partitionBy("user_id").orderBy("wk")
-    flagged = (
+    flagged = persist(
         weeks.withColumn("first_wk", F.min("wk").over(w_all))
         .withColumn("prev_wk", F.lag("wk").over(w_seq))
-        .persist()
     )
     classed = flagged.select(
         "wk",

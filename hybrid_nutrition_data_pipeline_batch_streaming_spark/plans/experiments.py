@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 #: Attribution lookback: touches older than this many µs credit nothing.
@@ -303,9 +303,9 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     # event scans).
     # r12: examined and kept LAZY — trivially-rebuildable corpus-sized
     # filter (the measured class where an eager cut regresses M=100).
-    ev = cat.events.where(
-        F.col("event_type").isin("click", "purchase")
-    ).persist()
+    ev = persist(
+        cat.events.where(F.col("event_type").isin("click", "purchase"))
+    )
     c = ev.where(F.col("event_type") == "click").select(
         "user_id",
         F.col("event_id").alias("click_id"),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -526,12 +526,14 @@ def table_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: v1 feeds the three v2 perturbation branches AND the diff
     # join's left side — uncached, orders was scanned four times (the md5
     # gate can't push down).
-    v1 = cat.orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.expr("CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)").alias(
-            "cents"
-        ),
-    ).persist()
+    v1 = persist(
+        cat.orders.select(
+            F.col("o_orderkey").alias("k"),
+            F.expr("CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)").alias(
+                "cents"
+            ),
+        )
+    )
     gated = v1.withColumn(
         "g",
         F.conv(F.substring(F.md5(F.col("k").cast("string")), 1, 4), 16, 10)
@@ -658,8 +660,8 @@ def fifo_match_lots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: examined and kept LAZY — corpus-sized prefix-sum tables
     # (sf0.1 A/Bs read 0.86 and 1.07 across two sweeps — neutral — and the
     # measured M=100 class regresses under eager cuts).
-    s = cum("F", "cs").withColumnsRenamed({"qty": "sq"}).persist()
-    d = cum("O", "cd").withColumnsRenamed({"qty": "dq"}).persist()
+    s = persist(cum("F", "cs").withColumnsRenamed({"qty": "sq"}))
+    d = persist(cum("O", "cd").withColumnsRenamed({"qty": "dq"}))
     overlap = F.least(F.col("cs"), F.col("cd")) - F.greatest(
         F.col("cs") - F.col("sq"), F.col("cd") - F.col("dq")
     )

@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..functions.parity import MONEY, QTY, dsum
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 
@@ -775,7 +775,7 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplication (2·cw ≥ W, 10·cw ≥ 9·W — no division at all). No
     table-scale sort at any size."""
     cat = Catalog(spark, sf_dir)
-    hist = (
+    hist = persist(
         cat.lineitem.select(
             F.col("l_quantity").cast("long").alias("qty"),
             F.expr(
@@ -786,7 +786,6 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("w_cents").cast("long").alias("w"))
         # Persisted: the weight-histogram feeds both the total weight and
         # the cumulative pass - one lineitem scan instead of two.
-        .persist()
     )
     tot = hist.agg(F.sum("w").cast("long").alias("w_total"))
     w_cum = Window.orderBy("qty").rowsBetween(Window.unboundedPreceding, 0)

@@ -19,17 +19,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import query_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-
-#: Nesting depth of query invocations — composite plans invoke other
-#: registered queries as building blocks (e.g. graph_jaccard_sim consumes
-#: dedup_minhash_banded), and the cache release below must fire only at the
-#: TOP-level entry: clearing mid-build would drop frames the outer plan has
-#: already persisted. Single-threaded by the harness contract.
-_DEPTH = 0
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -39,40 +34,25 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     external-I/O, iterative) — the driver then applies its weaker rows-only
     check.
 
-    Each registered callable is wrapped so that a TOP-LEVEL invocation first
-    releases the caches left behind by the previous query
-    (``session.release_caches`` — ADVICE r7: plan functions persist
-    intermediates their callers materialize later, so the release point is
-    the start of the NEXT query, by which time the prior result has been
-    consumed). This bounds a long-lived session's storage to one query's
-    working set without forfeiting intra-query single-scan caching.
+    Each registered callable builds inside ``session.query_scope``. A
+    top-level invocation first releases the ``QueryScope`` of its session's
+    previous top-level query — plan functions persist intermediates their
+    callers materialize later (ADVICE r7), so the release point is the start
+    of the next query, by which time the prior result has been consumed —
+    then opens a fresh scope that owns the frames, cuts and memory-sink
+    views this query makes. A registered query invoked inside another one's
+    build joins the outer scope.
 
-    CONTRACT (ADVICE r8): the release clears the SparkContext-wide shared
-    CacheManager, so it assumes the harness shape every consumer here has —
-    ONE session, queries invoked SEQUENTIALLY, each result materialized
-    before the next query is built (the driver window, the parity sweep,
-    bench, pytest all satisfy it). A caller that interleaves two queries'
-    build/materialize phases, or shares the context with another session
-    that holds its own caches, loses those fragments — correctness is
-    unaffected (cleared frames recompute from lineage), but the single-scan
-    persist benefit silently degrades to multi-scan. Don't embed wrapped
-    queries in such a harness without switching the release strategy to
-    per-plan unpersist.
+    CONTRACT: materialize each query's result before building the next
+    top-level query on the same session — its lineage cuts are freed then
+    and cannot be recomputed.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str, *args, **kwargs) -> DataFrame:
-            global _DEPTH
-            if _DEPTH == 0:
-                from ..session import release_caches
-
-                release_caches(spark)
-            _DEPTH += 1
-            try:
+            with query_scope(spark):
                 return fn(spark, sf_dir, *args, **kwargs)
-            finally:
-                _DEPTH -= 1
 
         QUERIES[name] = wrapped
         if oracle is not None:

@@ -10,7 +10,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..functions.parity import MONEY, dsum
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 
@@ -1367,13 +1367,10 @@ def join_delta_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fill pipelines into the first consumer pass while an eager cut pays a
     # separate full materialization job. Eager cuts stay reserved for
     # BOUNDED frames (vocabulary/domain/node-scale).
-    o = (
-        cat.orders.select(
-            "o_orderkey", "o_orderpriority", is_delta_o.alias("is_d")
-        )
-        .persist()
+    o = persist(
+        cat.orders.select("o_orderkey", "o_orderpriority", is_delta_o.alias("is_d"))
     )
-    lp = (
+    lp = persist(
         cat.lineitem.select(
             "l_orderkey",
             F.expr(
@@ -1381,7 +1378,6 @@ def join_delta_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cents"),
             is_delta_l.alias("is_d"),
         )
-        .persist()
     )
     o_b = o.where(~F.col("is_d")).drop("is_d")
     o_d = o.where(F.col("is_d")).drop("is_d")

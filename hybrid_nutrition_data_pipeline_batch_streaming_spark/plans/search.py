@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 #: Bag-of-words size for the ranking demo (the corpus's top-N tokens).
@@ -139,9 +139,9 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12: examined and kept LAZY — corpus-sized bigram explode (the
     # measured class where an eager cut regresses M=100).
-    bg = cat.documents.select(
-        "doc_id", F.explode(bigrams).alias("ph")
-    ).persist()
+    bg = persist(
+        cat.documents.select("doc_id", F.explode(bigrams).alias("ph"))
+    )
     top1 = (
         bg.groupBy("ph")
         .agg(F.count("*").alias("c"))
@@ -413,7 +413,7 @@ def similarity_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old c0²+c1²+… chain), division and MAX are order-free. Measured
     1.0 s → 0.6 s warm at sf0.1; MATCH=True against the r6 plan."""
     cat = Catalog(spark, sf_dir)
-    docs = (
+    docs = persist(
         cat.documents.where(F.col("text") != "")
         .select("doc_id", F.split(F.col("text"), " ").alias("s"))
         .select(
@@ -442,7 +442,6 @@ def similarity_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The persist is load-bearing: m1/m2/m3 each reference ev, and
         # HOF chains are outside codegen CSE — uncached, the whole
         # embed pipeline would re-evaluate per reference.
-        .persist()
     )
     tf = _doc_tf(cat).select(F.explode("tfs").alias("e")).select(
         "e.tok", F.col("e.tf").cast("long").alias("tf")

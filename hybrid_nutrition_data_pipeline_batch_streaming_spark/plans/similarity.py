@@ -45,7 +45,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..operators.blocking import capped_blocking_join, capped_pair_sql
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import ORACLE, query
 
 N_QUERIES = 20  # bounded probe set
@@ -1152,13 +1152,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager 15.2 s vs lazy 10.5 s (two blocking ~100 MB materializations
     # vs persist fills that pipeline into the first consumer pass); the
     # sf0.1 eager win (1.85 → 1.38 s) was the small-input race.
-    base = (
+    base = persist(
         cat.embeddings.select(
             "vec_id",
             _to_double(F.col("embedding")).alias("e"),
             _norm_s(_RAW_E).alias("n"),
         )
-        .persist()
     )
     cent = base.where(F.col("vec_id") < SEM_CELLS).select(
         F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n").alias("cn")
@@ -1179,7 +1178,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cell")
         )
     )
-    enr = assign.join(base, "vec_id").persist()  # vec_id, cell, e, n
+    enr = persist(assign.join(base, "vec_id"))  # vec_id, cell, e, n
     lhs = enr.select(
         F.col("vec_id").alias("a_id"), "cell", F.col("e").alias("ae"), F.col("n").alias("an")
     )
@@ -1898,7 +1897,7 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm_s(_RAW_E).alias("cn"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    short = (
+    short = persist(
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("cand_id"))
         .select(
@@ -1911,7 +1910,6 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= MMR_SHORTLIST)
-        .persist()
     )
     s1 = short.where(F.col("rank") == 1).select(
         "query_id",
@@ -2193,9 +2191,9 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7: both legs read ONE persisted double-converted embedding table
     (the corpus previously scanned+converted once per leg per side)."""
     cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e")
-    ).persist()
+    emb = persist(
+        cat.embeddings.select("vec_id", _to_double(F.col("embedding")).alias("e"))
+    )
 
     def _topk(ndims: int | None) -> DataFrame:
         take = (lambda col: F.slice(col, 1, ndims)) if ndims else (lambda c: c)

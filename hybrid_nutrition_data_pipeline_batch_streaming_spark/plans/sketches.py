@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 #: KMV sketch size (bottom-k).
@@ -445,15 +445,14 @@ def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
 
     def users(etype: str) -> DataFrame:
-        return (
+        return persist(
             cat.events.where(F.col("event_type") == etype)
             .select(F.col("user_id").cast("string").alias("v"))
             .distinct()
-            .persist()
         )
 
     def sketch(us: DataFrame) -> DataFrame:
-        return (
+        return persist(
             us.select(
                 F.conv(F.substring(F.md5(F.col("v")), 1, 12), 16, 10)
                 .cast("long")
@@ -461,7 +460,6 @@ def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("h")
             .limit(KMV_K)
-            .persist()
         )
 
     a_users, b_users = users("click"), users("purchase")
@@ -677,7 +675,7 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production store only `partials` is ever materialized; the direct
     # rebuild exists to verify the merge, so the triple-scan is an
     # artifact of shipping the proof in-band.)
-    rho = rho.persist()
+    rho = persist(rho)
     partials = rho.groupBy("m", "reg").agg(F.max("rho").alias("m_j"))
     regs = spark.range(HLL_M).withColumnRenamed("id", "reg")
     merged = (

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 
@@ -848,7 +848,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the vocab cut and the coverage rollup as weighted counts
     # (Σc ≡ the per-token row count the r1-r6 plan re-exploded the corpus
     # to get). Persisted for its two consumers.
-    lt = tok.groupBy("lang", "t").agg(F.count("*").alias("c")).persist()
+    lt = persist(tok.groupBy("lang", "t").agg(F.count("*").alias("c")))
     tf = lt.groupBy("t").agg(F.sum("c").alias("c"))
     vocab = tf.orderBy(F.desc("c"), "t").limit(VOCAB_TOP_K).select(
         "t", F.lit(1).alias("in_vocab")

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..functions.parity import MONEY, dsum
-from ..session import checkpoint_truncate
+from ..session import checkpoint_truncate, persist
 from .registry import query
 
 
@@ -68,25 +68,22 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # M=100 A/B read eager 16.3 s vs lazy 12.1 s (the sf0.1 win, 1.07 →
     # 0.80 s, was the small-input race; the persist fill pipelines into
     # the first consumer pass at scale).
-    ev = (
+    ev = persist(
         cat.events.select("user_id", "event_type", F.col("ts").alias("ts"))
         .where(F.col("event_type").isin("signup", "click", "purchase"))
-        .persist()
     )
 
-    s1 = (
+    s1 = persist(
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .persist()
     )
-    s2 = (
+    s2 = persist(
         ev.where(F.col("event_type") == "click")
         .join(s1, "user_id")
         .where(F.col("ts") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .persist()
     )
     s3 = (
         ev.where(F.col("event_type") == "purchase")
@@ -294,10 +291,9 @@ def gap_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     # Persisted: the per-(user, day) rollup feeds both the spine bounds
     # and the fill join — uncached, the events scan + rollup ran twice.
-    daily = (
+    daily = persist(
         cat.events.groupBy("user_id", F.col("ts").cast("date").alias("d"))
         .agg(dsum(F.col("value")).alias("day_value"))
-        .persist()
     )
     spine = (
         daily.groupBy("user_id")
@@ -1026,10 +1022,9 @@ def conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     # One persisted type-filtered scan feeds both stages (was two full
     # event scans).
-    ev = (
+    ev = persist(
         cat.events.select("user_id", "event_type", "ts")
         .where(F.col("event_type").isin("signup", "purchase"))
-        .persist()
     )
     s1 = (
         ev.where(F.col("event_type") == "signup")
@@ -1195,10 +1190,9 @@ def funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds all three stages (was three); s1/s2 cached for their two
     consumers each."""
     cat = Catalog(spark, sf_dir)
-    ev = (
+    ev = persist(
         cat.events.select("user_id", "event_type", "ts")
         .where(F.col("event_type").isin("signup", "click", "purchase"))
-        .persist()
     )
 
     def within(e_ts, prev_ts):
@@ -1208,19 +1202,17 @@ def funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= _FUNNEL_CAP_US
         )
 
-    s1 = (
+    s1 = persist(
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .persist()
     )
-    s2 = (
+    s2 = persist(
         ev.where(F.col("event_type") == "click")
         .join(s1, "user_id")
         .where((F.col("ts") >= F.col("t1")) & within(F.col("ts"), F.col("t1")))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .persist()
     )
     s3 = (
         ev.where(F.col("event_type") == "purchase")
@@ -1529,13 +1521,12 @@ def ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: detr (fact rollup + trend window) feeds both the seasonal
     # aggregate and the final join — uncached, the events scan + rollup +
     # window ran twice. Calendar-bounded cache.
-    detr = (
+    detr = persist(
         daily.withColumn("win_sum", F.sum("c").over(w7).cast("long"))
         .withColumn("win_n", F.count("*").over(w7))
         .withColumn(
             "d_scaled", F.col("c") * F.col("win_n") - F.col("win_sum")
         )
-        .persist()
     )
     seas = detr.groupBy(
         F.col("event_type").alias("et2"), F.col("dow").alias("dow2")
@@ -1747,7 +1738,7 @@ def period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the monthly rollup reads date-partitioned parquet and the
     join pattern is unchanged — deltas never touch fact-table rows."""
     cat = Catalog(spark, sf_dir)
-    monthly = (
+    monthly = persist(
         cat.orders.select(
             F.trunc(F.col("o_orderdate").cast("date"), "MM").alias("m"),
             F.expr(
@@ -1759,7 +1750,6 @@ def period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Persisted: the monthly rollup is fact-scale to compute and feeds
         # the current series AND both alignment sides — uncached, the
         # orders scan + rollup ran three times. ~|months| rows cached.
-        .persist()
     )
     cur = monthly.alias("cur")
     mom = monthly.select(
@@ -1918,14 +1908,13 @@ def forecast_eval_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     # Persisted: the rollup self-joins (forecast side vs actual side) —
     # uncached, the events scan + rollup ran twice.
-    daily = (
+    daily = persist(
         cat.events.select(
             "event_type",
             F.col("ts").cast("timestamp").cast("date").alias("d"),
         )
         .groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .persist()
     )
     f = daily.select(
         F.col("event_type").alias("et_f"),
@@ -2011,14 +2000,13 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-execute ~6× per run, which at 100 TB is six full fact scans. The
     # cache itself is calendar-bounded (event_type × days), tiny at any
     # corpus size.
-    daily = (
+    daily = persist(
         cat.events.select(
             "event_type",
             F.col("ts").cast("timestamp").cast("date").alias("d"),
         )
         .groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .persist()
     )
     stats = daily.groupBy("event_type").agg(
         F.count("*").alias("n"), F.sum("y").cast("long").alias("s")

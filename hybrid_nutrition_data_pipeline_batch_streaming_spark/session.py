@@ -30,9 +30,12 @@ state falls into; NOTES.md (round 9) carries the per-site audit table.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: SQL (runtime-settable) configs every session should carry. Applied both at
 #: build time and defensively at catalog time (the driver may hand us a
@@ -109,13 +112,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or par))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # Belt-and-braces for the lineage-cut lifecycle (ADVICE r12):
-        # release_caches() frees cut blocks deterministically per query, but
-        # any frame that escapes the registry wrapper (a harness calling
-        # checkpoint_truncate directly) is reclaimed by the ContextCleaner
-        # once its RDD is GC'd — and with a RELIABLE checkpoint dir this conf
-        # also deletes the checkpoint FILES on GC, which otherwise accumulate
-        # per invocation forever.
+        # Belt-and-braces for the lineage-cut lifecycle (ADVICE r12): a
+        # QueryScope frees its query's cut blocks deterministically, but a
+        # cut made outside any scope (a harness calling checkpoint_truncate
+        # directly) is reclaimed by the ContextCleaner once its RDD is GC'd
+        # — and with a RELIABLE checkpoint dir this conf also deletes the
+        # checkpoint FILES on GC, which otherwise accumulate per invocation
+        # forever.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in RUNTIME_CONF.items():
@@ -169,12 +172,12 @@ def checkpoint_truncate(df, eager: bool = True):
     M=100 OOM remedy — the double compute is the price of keeping the
     blocks out of executor storage; the checkpoint FILES are reclaimed by
     the ContextCleaner (``cleanCheckpoints=true`` in ``get_spark``) and the
-    deterministic per-query release below.
+    query scope's release.
 
-    Every cut frame is TRACKED so ``release_caches`` can free its blocks at
-    the next top-level query (localCheckpoint blocks live in executor
-    storage but never register in the CacheManager, so ``clearCache`` alone
-    leaks them across a long session — ADVICE r12).
+    Every cut frame joins the active ``QueryScope``, which frees its blocks
+    at the session's next top-level query (localCheckpoint blocks live in
+    executor storage but never register in the CacheManager, so nothing
+    else frees them across a long session — ADVICE r12).
 
     ``eager=False`` (r13) truncates the LOGICAL plan immediately (the
     Catalyst re-analysis relief is unchanged — the frame becomes a leaf at
@@ -189,62 +192,97 @@ def checkpoint_truncate(df, eager: bool = True):
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        return _track_cut(df.checkpoint(eager=eager))
-    return _track_cut(df.localCheckpoint(eager=eager))
+        return _own(df.checkpoint(eager=eager))
+    return _own(df.localCheckpoint(eager=eager))
 
 
-#: Lineage-cut frames issued since the last release — localCheckpoint /
-#: checkpoint blocks live OUTSIDE the CacheManager, so clearCache() never
-#: frees them (ADVICE r12); release_caches unpersists them explicitly. The
-#: strong references are intentional: lifecycle is bounded by the registry's
-#: per-query release, not by GC timing.
-_CUT_FRAMES: list = []
+#: The scope of the top-level query being built; None between queries.
+_ACTIVE_SCOPE: ContextVar[QueryScope | None] = ContextVar("query_scope", default=None)
 
 
-def _track_cut(df):
-    _CUT_FRAMES.append(df)
+class QueryScope:
+    """What one top-level query made: its persisted frames, lineage cuts and
+    memory-sink views.
+
+    Plan functions persist intermediates that several legs of the SAME query
+    read (NOTES r7) but return an UNMATERIALIZED frame, so they cannot
+    unpersist before returning without losing the single scan the persist
+    buys. Lineage-cut blocks never register in the CacheManager (ADVICE
+    r12), and each ``run_to_memory`` pass registers a view. In a long-lived
+    session all three would accumulate without bound — disk-backed blocks
+    are not LRU-evicted (ADVICE r7) — so the scope records each as it is
+    made and ``release`` frees exactly those, leaving alone what other
+    queries or other sessions on the shared context have cached.
+
+    A cut frame is UNRECOVERABLE once its blocks are freed (its lineage is
+    truncated by design), so a caller must materialize each query's result
+    before invoking the next top-level query on the same session.
+    """
+
+    def __init__(self) -> None:
+        self.frames: list[DataFrame] = []
+        self.views: list[tuple[SparkSession, str]] = []
+
+    def release(self) -> None:
+        for df in self.frames:
+            try:
+                if df.is_cached:
+                    df.unpersist(blocking=False)
+                else:  # a cut: its analyzed plan is a LogicalRDD over the blocks
+                    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            except Exception:
+                pass  # foreign plan shape / already-stopped context: best effort
+        for spark, name in self.views:
+            spark.catalog.dropTempView(name)
+        self.frames.clear()
+        self.views.clear()
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession) -> Iterator[QueryScope]:
+    """Build one registered query inside a ``QueryScope``.
+
+    Inside another query's build (a composite such as dedup_cluster_report
+    consuming dedup_connected_components) this joins the active scope.
+    Otherwise it releases the previous top-level scope of THIS session —
+    whose result has been consumed by then — and opens a fresh one, held
+    on the session object until that session's next top-level query.
+    """
+    active = _ACTIVE_SCOPE.get()
+    if active is not None:
+        yield active
+        return
+    prev = getattr(spark, "_hybridnutrition_scope", None)
+    if prev is not None:
+        prev.release()
+    scope = spark._hybridnutrition_scope = QueryScope()
+    token = _ACTIVE_SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _ACTIVE_SCOPE.reset(token)
+
+
+def _own(df: DataFrame) -> DataFrame:
+    """Record a persisted frame or lineage cut with the active scope. Outside
+    a scope this is a no-op: the ContextCleaner reclaims an untracked cut
+    once its RDD is garbage-collected."""
+    scope = _ACTIVE_SCOPE.get()
+    if scope is not None:
+        scope.frames.append(df)
     return df
 
 
-def release_caches(spark: SparkSession) -> None:
-    """Drop every cached plan fragment in this context's CacheManager, and
-    free the storage blocks of every lineage cut issued since the last
-    release.
+def own_view(spark: SparkSession, name: str) -> None:
+    """Record a temp view (a memory-sink table) with the active scope."""
+    scope = _ACTIVE_SCOPE.get()
+    if scope is not None:
+        scope.views.append((spark, name))
 
-    Plan functions ``.persist()`` intermediates that are read by multiple
-    legs of the SAME query (the cache-boundary discipline, NOTES r7), but
-    they return an UNMATERIALIZED frame — the caller collects later — so
-    they cannot unpersist before returning without forfeiting the very
-    single-scan property the persist buys (an unpersisted fragment is
-    recomputed per consumer). In a long-lived session running many queries
-    (the driver's 50-query window, the parity sweep, bench) those
-    MEMORY_AND_DISK entries would otherwise accumulate without bound —
-    disk-backed blocks are not LRU-evicted (ADVICE r7). The query registry
-    calls this at each top-level query invocation, bounding live cache to
-    one query's working set; harnesses may also call it directly between
-    repeats. Correctness is unaffected for persisted fragments (a cleared
-    fragment recomputes from lineage).
 
-    Lineage cuts (``checkpoint_truncate`` / ``scratch_checkpoint``) need
-    the second step (ADVICE r12): their blocks never register in the
-    CacheManager, so without explicit unpersist they accumulate in executor
-    storage until the ContextCleaner happens to GC the RDD — the documented
-    "bounds live cache to one query's working set" contract held only for
-    persists. NOTE the sequencing contract this sharpens: a cut frame is
-    UNRECOVERABLE once its blocks are freed (lineage is truncated by
-    design), so a caller must materialize each query's result before
-    invoking the next top-level query — the same harness shape the
-    registry wrapper already requires.
-    """
-    spark.catalog.clearCache()
-    for df in _CUT_FRAMES:
-        try:
-            # The cut frame's analyzed plan is a LogicalRDD over the
-            # checkpointed RDD; unpersist its blocks (blocking=False).
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass  # foreign plan shape / already-stopped context: best effort
-    _CUT_FRAMES.clear()
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by the active query scope."""
+    return _own(df.persist())
 
 
 def scratch_checkpoint(df):
@@ -264,9 +302,6 @@ def scratch_checkpoint(df):
     - distributed master, no dir: ``localCheckpoint`` (nothing reliable
       to write to), accepting the recompute-on-loss trade.
 
-    Override either way with the engine conf
-    ``spark.hybridnutrition.scratchCheckpoint=local|reliable``.
-
     The local blocks are stored SERIALIZED (StorageLevel.MEMORY_AND_DISK,
     not the deserialized default) — measured at M=100 (VERDICT r7 item 6,
     SCALE.md round-8): the deserialized default's storage footprint
@@ -277,27 +312,11 @@ def scratch_checkpoint(df):
     """
     from pyspark.storagelevel import StorageLevel
 
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    level = StorageLevel.MEMORY_AND_DISK
-    mode = spark.conf.get("spark.hybridnutrition.scratchCheckpoint", "auto")
-    if mode == "local":
-        return _track_cut(df.localCheckpoint(eager=True, storageLevel=level))
-    if mode == "reliable":
-        # ADVICE r8: an explicit 'reliable' override with NO checkpoint dir
-        # configured would silently degrade (via checkpoint_truncate) to a
-        # plain DESERIALIZED localCheckpoint — neither reliable nor the
-        # serialized level this helper's OOM analysis requires. The operator
-        # asked for durability the session cannot provide: fail loudly.
-        if sc.getCheckpointDir() is None:
-            raise RuntimeError(
-                "scratchCheckpoint=reliable requires a checkpoint dir "
-                "(set SPARK_GRAFT_CHECKPOINT_DIR or sc.setCheckpointDir)"
-            )
-        return _track_cut(df.checkpoint(eager=True))
+    sc = df.sparkSession.sparkContext
     if not sc.master.startswith("local") and sc.getCheckpointDir() is not None:
-        return _track_cut(df.checkpoint(eager=True))
-    return _track_cut(df.localCheckpoint(eager=True, storageLevel=level))
+        return _own(df.checkpoint(eager=True))
+    level = StorageLevel.MEMORY_AND_DISK
+    return _own(df.localCheckpoint(eager=True, storageLevel=level))
 
 
 #: Application ids that already had the package zip shipped via addPyFile.

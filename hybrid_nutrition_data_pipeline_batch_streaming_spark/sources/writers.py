@@ -200,7 +200,18 @@ def compact_files(
         return files_before, files_before  # already compact — no rewrite
 
     tmp = path.rstrip("/") + ".compact-tmp"
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    # coalesce only merges partitions, so the read must yield >= n_out; by
+    # default small files pack per core, fewer than n_out on small hosts.
+    key = "spark.sql.files.minPartitionNum"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(n_out))
+    try:
+        spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     # atomic-ish swap: the rewrite lands fully before the old dir is replaced
     old = path.rstrip("/") + ".compact-old"
     shutil.rmtree(old, ignore_errors=True)

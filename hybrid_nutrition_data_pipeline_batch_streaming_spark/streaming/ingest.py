@@ -252,7 +252,7 @@ def run_to_memory(
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    from ..session import default_parallelism
+    from ..session import default_parallelism, own_view
 
     key = "spark.sql.shuffle.partitions"
     n = spark.conf.get(
@@ -266,4 +266,5 @@ def run_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
+    own_view(spark, name)
     return spark.table(name)

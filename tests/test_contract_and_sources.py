@@ -960,8 +960,9 @@ def test_udf_query_runs_from_scratch_cwd(tmp_path, sf_dir, session):
 
 
 def test_package_environment_options_are_allowlisted():
-    """Every environment variable the package reads is an option someone
-    has to know about: adding one must be a deliberate edit to this list.
+    """Every environment variable and engine Spark-conf key
+    (``spark.hybridnutrition.*``) the package reads is an option someone
+    has to know about: adding one must be a deliberate edit to these lists.
     Every ``os.environ`` / ``getenv`` read must name its variable as a
     string literal, so the scan below is complete."""
     import re
@@ -978,8 +979,9 @@ def test_package_environment_options_are_allowlisted():
         r"""\benviron(?:\.get|\.setdefault|\.pop)?\s*[(\[]\s*["']([A-Za-z0-9_]+)["']"""
         r"""|\bgetenv\s*\(\s*["']([A-Za-z0-9_]+)["']"""
     )
+    conf_key = re.compile(r"""["'](spark\.hybridnutrition\.[A-Za-z0-9_.]+)["']""")
     pkg = os.path.join(REPO_ROOT, "hybrid_nutrition_data_pipeline_batch_streaming_spark")
-    read, unnamed = set(), []
+    read, unnamed, conf_keys = set(), [], set()
     for root, _dirs, files in os.walk(pkg):
         for f in files:
             if not f.endswith(".py"):
@@ -988,8 +990,10 @@ def test_package_environment_options_are_allowlisted():
             with open(path, encoding="utf-8") as fh:
                 src = fh.read()
             names = [a or b for a, b in literal.findall(src)]
+            conf_keys.update(conf_key.findall(src))
             read.update(names)
             if len(access.findall(src)) != len(names):
                 unnamed.append(os.path.relpath(path, REPO_ROOT))
     assert not unnamed, f"environment read without a literal name in {unnamed}"
     assert read == allowed
+    assert conf_keys == {"spark.hybridnutrition.streamShufflePartitions"}

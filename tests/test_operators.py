@@ -416,9 +416,8 @@ def test_scratch_checkpoint_gates_on_deployment(spark, tmp_path):
     are unrecoverable — losing an executor mid-loop fails the query. The
     scratch_checkpoint helper must therefore gate on deployment: local
     master → localCheckpoint even when a reliable dir is configured (the
-    measured 253→207 s kcore win); explicit conf override → honored both
-    ways. (The distributed-master branch can't execute on local[*]; its
-    selection logic is what the override paths exercise.)"""
+    measured 253→207 s kcore win). (The distributed-master branch can't
+    execute on local[*].)"""
     import os
 
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import (
@@ -429,54 +428,16 @@ def test_scratch_checkpoint_gates_on_deployment(spark, tmp_path):
     assert sc.master.startswith("local")
     ckpt = str(tmp_path / "reliable")
     sc.setCheckpointDir(ckpt)
-    key = "spark.hybridnutrition.scratchCheckpoint"
     try:
         df = spark.range(10)
-        # auto + local master: local blocks, nothing written to the dir.
+        # local master: local blocks, nothing written to the dir.
         scratch_checkpoint(df).collect()
         assert not [
             f for root, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")
-        ], "local master must not write reliable checkpoints in auto mode"
-        # reliable override: files land under the configured dir.
-        spark.conf.set(key, "reliable")
-        scratch_checkpoint(df).collect()
-        assert [
-            f for root, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")
-        ], "reliable override must write to the checkpoint dir"
-        # local override with a dir configured: still local blocks (count
-        # of reliable files unchanged).
-        before = sum(
-            len(fs) for _, _, fs in os.walk(ckpt)
-        )
-        spark.conf.set(key, "local")
-        scratch_checkpoint(df).collect()
-        assert sum(len(fs) for _, _, fs in os.walk(ckpt)) == before
+        ], "local master must not write reliable checkpoints"
     finally:
-        spark.conf.unset(key)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
         assert sc.getCheckpointDir() is None
-
-
-def test_scratch_checkpoint_reliable_without_dir_raises(spark):
-    """ADVICE r8: an explicit ``scratchCheckpoint=reliable`` override with
-    NO checkpoint dir configured must fail loudly — the old silent path
-    degraded to a plain DESERIALIZED localCheckpoint, which is neither
-    reliable nor the serialized level the helper's own M=100 OOM analysis
-    requires (the worst of both)."""
-    import pytest as _pytest
-
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import (
-        scratch_checkpoint,
-    )
-
-    assert spark.sparkContext.getCheckpointDir() is None
-    key = "spark.hybridnutrition.scratchCheckpoint"
-    spark.conf.set(key, "reliable")
-    try:
-        with _pytest.raises(RuntimeError, match="checkpoint dir"):
-            scratch_checkpoint(spark.range(5))
-    finally:
-        spark.conf.unset(key)
 
 
 def test_query_invocation_releases_previous_caches(spark):
@@ -484,42 +445,90 @@ def test_query_invocation_releases_previous_caches(spark):
     materialize later, so nothing inside a query can unpersist them — in a
     long-lived session (driver's 50-query window) disk-backed cache entries
     would accumulate unboundedly. Pin the registry contract: a TOP-LEVEL
-    query invocation clears the CacheManager before building (previous
-    query's result is already consumed by then), while NESTED invocations
-    (composite plans consuming other registered queries) must NOT clear —
-    that would drop frames the outer plan already persisted."""
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (
-        registry,
-    )
+    query invocation releases the frames the previous top-level query's
+    scope persisted (its result is already consumed by then), while NESTED
+    invocations (composite plans consuming other registered queries) join
+    the outer scope and must NOT release — that would drop frames the outer
+    plan already persisted."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark import session as S
 
     cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached(df) -> bool:
+        return cm.lookupCachedData(df._jdf).isDefined()
+
     # similarity_maxsim persists its chunk-bag frame (r12: most former
     # exemplars — graph_triangles, similarity_ann_lsh, er_golden_records —
     # switched their persists to eager localCheckpoints, which never
     # register in the CacheManager; maxsim's cut measured a loss and
-    # stays a lazy persist).
-    plans.QUERIES["similarity_maxsim"](spark, SF).count()
-    assert not cm.isEmpty(), "expected similarity_maxsim to leave cached frames"
-    # The nested-invocation contract, probed at the mechanism level: with
-    # _DEPTH held (as during an outer query's build), a registered-query
-    # call must NOT clear the cache the outer build already registered.
-    registry._DEPTH += 1
-    try:
+    # stays a lazy persist). Built inside an outer scope, as during a
+    # composite's build, it joins that scope.
+    with S.query_scope(spark) as outer:
+        plans.QUERIES["similarity_maxsim"](spark, SF).count()
+        persisted = [df for df in outer.frames if df.is_cached]
+        assert persisted and all(map(cached, persisted)), (
+            "expected similarity_maxsim to leave cached frames"
+        )
         plans.QUERIES["flagship_revenue"](spark, SF)
-        assert not cm.isEmpty(), "nested invocation must not clear outer caches"
-    finally:
-        registry._DEPTH -= 1
+        assert all(map(cached, persisted)), (
+            "nested invocation must not release outer caches"
+        )
     plans.QUERIES["flagship_revenue"](spark, SF)  # no persists of its own
-    assert cm.isEmpty(), "top-level invocation must release prior caches"
-    assert registry._DEPTH == 0
+    assert not any(map(cached, persisted)), (
+        "top-level invocation must release prior caches"
+    )
+    assert S._ACTIVE_SCOPE.get() is None
+
+
+def test_query_scope_leaves_other_sessions_caches(spark):
+    """Sessions on one SparkContext (the JDBC endpoint's, a newSession of
+    a dashboard) share its CacheManager. A top-level query releases only
+    what its own session's previous query made, so a frame another session
+    cached stays cached."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    held = spark.newSession().range(37).selectExpr("id * 7 AS v").persist()
+    try:
+        assert held.count() == 37
+        assert cm.lookupCachedData(held._jdf).isDefined()
+        plans.QUERIES["flagship_revenue"](spark, SF).collect()
+        assert cm.lookupCachedData(held._jdf).isDefined(), (
+            "a query must not release another session's cache"
+        )
+    finally:
+        held.unpersist()
+
+
+def test_stream_memory_views_released_per_query(spark):
+    """Every run_to_memory pass registers a memory-sink temp view. The
+    query scope drops the previous query's views at the next top-level
+    query, so repeated stream passes in one session keep one pass's worth
+    of mem_* views registered instead of 2 → 4 → 6."""
+
+    def mem_views() -> set[str]:
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("mem_")
+        }
+
+    before = mem_views()
+    plans.QUERIES["stream_tumbling_live"](spark, SF).collect()
+    first = mem_views()
+    added = first - before
+    assert added, "expected the stream pass to register a memory-sink view"
+    for _ in range(2):
+        plans.QUERIES["stream_tumbling_live"](spark, SF).collect()
+        assert len(mem_views()) == len(first)
+    assert not added & mem_views(), "the first pass's views must be dropped"
 
 
 def test_release_caches_frees_lineage_cut_blocks(spark):
     """ADVICE r12 (medium): localCheckpoint blocks never register in the
-    CacheManager, so ``clearCache`` alone leaked every eager cut across a
-    long-lived session. ``release_caches`` must now free the tracked cut
-    frames' storage blocks too — and a fresh top-level query invocation
-    (the registry's release point) must do the same implicitly."""
+    CacheManager, so nothing that only clears cached plans frees them, and
+    every eager cut once leaked across a long-lived session. Releasing a
+    query scope must free the storage blocks of the cut frames made in it
+    — and a fresh top-level query invocation (the registry's release
+    point) must do the same implicitly for the previous query's scope."""
     from hybrid_nutrition_data_pipeline_batch_streaming_spark import session as S
 
     def cut_blocks() -> int:
@@ -536,21 +545,24 @@ def test_release_caches_frees_lineage_cut_blocks(spark):
             _t.sleep(0.1)
         return False
 
-    S.release_caches(spark)  # start clean
+    with S.query_scope(spark):  # start clean: releases the previous scope
+        pass
     settles_to(0)  # drain any async removals from earlier tests
     base = cut_blocks()
-    cut = S.checkpoint_truncate(spark.range(1000).select(F.col("id") * 2))
-    assert cut.count() == 1000
+    with S.query_scope(spark) as scope:
+        cut = S.checkpoint_truncate(spark.range(1000).select(F.col("id") * 2))
+        assert cut.count() == 1000
     assert cut_blocks() > base, "expected the eager cut to hold storage blocks"
-    assert cut in S._CUT_FRAMES or any(
-        d._jdf.equals(cut._jdf) for d in S._CUT_FRAMES
-    ), "checkpoint_truncate must track its frame for release"
-    S.release_caches(spark)
-    assert settles_to(base), "release_caches must free cut blocks"
-    assert not S._CUT_FRAMES, "tracked cut list must be drained"
+    assert any(d is cut for d in scope.frames), (
+        "checkpoint_truncate must record its frame with the active scope"
+    )
+    scope.release()
+    assert settles_to(base), "releasing the scope must free cut blocks"
+    assert not scope.frames, "released scope must be drained"
     # The registry wrapper path: a top-level query releases the previous
     # query's cuts at entry.
-    cut2 = S.checkpoint_truncate(spark.range(500).select(F.col("id") + 1))
+    with S.query_scope(spark):
+        cut2 = S.checkpoint_truncate(spark.range(500).select(F.col("id") + 1))
     assert cut2.count() == 500 and cut_blocks() > base
     plans.QUERIES["flagship_revenue"](spark, SF)
     assert settles_to(base), "top-level invocation must free prior cuts"
@@ -565,14 +577,12 @@ def test_nested_composite_query_end_to_end(spark):
     materialization would read freed localCheckpoint blocks and fail. The
     end-to-end collect — after a prior query left release-able state — is
     the regression canary."""
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (
-        registry,
-    )
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark import session as S
 
     # Leave prior state for the composite's top-level release to clear.
     plans.QUERIES["similarity_maxsim"](spark, SF).count()
     rows = plans.QUERIES["dedup_cluster_report"](spark, SF).collect()
-    assert registry._DEPTH == 0
+    assert S._ACTIVE_SCOPE.get() is None
     assert rows, "composite query returned no clusters"
     assert all(r.cluster_size >= 2 for r in rows)
 
