@@ -16,9 +16,8 @@ so both queries build the classic structures from relational ops:
 
 Scale shape: both are explode → ONE corpus-wide groupBy (the posting
 build); query terms are a broadcast singleton/handful, so probing is
-map-side. At 100 TB the posting table is the persisted artifact (the
-``operators/ann_index.py`` pattern applied to tokens) and the per-query
-work is partition-pruned posting reads — the same build-once/probe-many
+map-side. At 100 TB the posting table is the persisted artifact and the
+per-query work is partition-pruned posting reads — a build-once/probe-many
 split, noted per query.
 """
 
@@ -129,7 +128,7 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture-proof; substituting a literal phrase drops the derivation
     subquery and keeps the probe plan. At 100 TB the posting stream is a
     persisted table bucketed by phrase key and the probe reads one bucket —
-    build-once/probe-many, as `operators/ann_index.py` does for vectors."""
+    build-once/probe-many."""
     cat = Catalog(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     n1 = F.greatest(F.size(toks) - 1, F.lit(0))
@@ -555,8 +554,7 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index), and final ranking; term sets stay broadcast-sized by
     construction. The corpus text is exploded exactly once; at 100 TB the
     tf table is the persisted posting store and each round is a pruned
-    posting read (the ``operators/ann_index.py`` build-once/probe-many
-    split, twice)."""
+    posting read (the build-once/probe-many split, twice)."""
     cat = Catalog(spark, sf_dir)
     docs = _doc_tf(cat)  # map-side per-doc tf; no corpus shuffle (r7)
     tf = docs.select("doc_id", F.explode("tfs").alias("e")).select(

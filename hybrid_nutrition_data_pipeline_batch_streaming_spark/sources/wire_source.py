@@ -19,16 +19,17 @@ way the reference consumer consumes Kafka (`consumer/consume_items.py`):
   production Kafka's per-task consumer, not a driver-side drain. Ranges
   split at ``maxRowsPerPartition`` so a large backlog fans out.
 
-Round 6 — REAL topic partitions: when the topic was CREATEd with more than
-one partition, ``partitions()`` maps one-to-one onto broker partitions
-(plus offset-range splits within each), the checkpoint offset is a
-per-partition map (``{"0": o0, "1": o1}``, Kafka's offset-JSON shape), the
-schema gains a ``partition`` column, and the group commit is per
-(group, topic, partition). Single-partition topics keep the round-5 schema
-(``offset, value``) and checkpoint format — existing queries and
-checkpoints are untouched.
+Topic partitions: ``partitions()`` maps one-to-one onto broker partitions
+(plus offset-range splits within each) and the group commit is per
+(group, topic, partition); a topic never CREATEd is the same path with one
+partition. Two formats depend on the partition count, each decided in one
+helper pair: the checkpoint offset (``_encode_offsets``/``_decode_offsets``:
+``{"offset": n}`` for 1 partition, the format existing checkpoints and
+progress readers hold; Kafka's per-partition map ``{"0": o0, "1": o1}``
+otherwise) and the row shape (``_schema``/``_shape_rows``: ``offset, value``
+for 1 partition, with a leading ``partition`` column otherwise).
 
-Round 6 — retention + auto.offset.reset: the broker's RETAIN command
+Retention + auto.offset.reset: the broker's RETAIN command
 deletes a log prefix (offsets never renumber, Kafka's retention model), a
 fetch below the retained start raises OffsetOutOfRange, and the consumer's
 ``offsetReset`` option decides: ``earliest`` (default — the reference's
@@ -54,7 +55,34 @@ from pyspark.sql.datasource import (
 )
 
 SCHEMA = "offset bigint, value string"
-SCHEMA_MP = "partition int, offset bigint, value string"
+
+
+def _schema(n_parts: int) -> str:
+    """Row shape of a topic with ``n_parts`` partitions (see ``_shape_rows``)."""
+    return SCHEMA if n_parts == 1 else "partition int, " + SCHEMA
+
+
+def _shape_rows(
+    rows: list[tuple[int, str]], part: int, n_parts: int
+) -> list[tuple]:
+    """Fetched ``(offset, value)`` rows of partition ``part`` in ``_schema``."""
+    if n_parts == 1:
+        return rows
+    return [(part, off, value) for off, value in rows]
+
+
+def _encode_offsets(offsets: list[int]) -> dict:
+    """Per-partition offsets -> checkpoint offset JSON."""
+    if len(offsets) == 1:
+        return {"offset": offsets[0]}
+    return {str(p): off for p, off in enumerate(offsets)}
+
+
+def _decode_offsets(offset: dict, n_parts: int) -> list[int]:
+    """Checkpoint offset JSON -> per-partition offsets."""
+    if n_parts == 1:
+        return [offset["offset"]]
+    return [offset.get(str(p), 0) for p in range(n_parts)]
 
 
 class _OffsetRange(InputPartition):
@@ -65,14 +93,13 @@ class _OffsetRange(InputPartition):
         topic: str,
         start: int,
         end: int,
-        part: int = 0,
-        with_part_col: bool = False,
-        reset: str = "error",
+        part: int,
+        n_parts: int,
+        reset: str,
     ):
         self.host, self.port, self.topic = host, port, topic
         self.start, self.end = start, end
-        self.part = part
-        self.with_part_col = with_part_col
+        self.part, self.n_parts = part, n_parts
         self.reset = reset
 
 
@@ -82,8 +109,9 @@ def _fetch_range(partition: _OffsetRange) -> Iterator[tuple]:
     client = WireClient(partition.host, partition.port)
     try:
         try:
-            rows = client.fetch_part(
-                partition.topic, partition.part, partition.start, partition.end
+            rows = client.fetch(
+                partition.topic, partition.start, partition.end,
+                part=partition.part,
             )
         except OffsetOutOfRange as oor:
             # Broker retention deleted part of the planned range between
@@ -105,8 +133,9 @@ def _fetch_range(partition: _OffsetRange) -> Iterator[tuple]:
             seek = min(max(partition.start, oor.start), partition.end)
             for attempt in range(5):
                 try:
-                    rows = client.fetch_part(
-                        partition.topic, partition.part, seek, partition.end
+                    rows = client.fetch(
+                        partition.topic, seek, partition.end,
+                        part=partition.part,
                     )
                     break
                 except OffsetOutOfRange as again:
@@ -120,30 +149,26 @@ def _fetch_range(partition: _OffsetRange) -> Iterator[tuple]:
             )
     finally:
         client.close()
-    if partition.with_part_col:
-        for off, value in rows:
-            yield (partition.part, off, value)
-    else:
-        yield from rows
+    yield from _shape_rows(rows, partition.part, partition.n_parts)
 
 
-def _split_ranges(
+def _offset_ranges(
     host: str,
     port: int,
     topic: str,
-    part: int,
-    lo: int,
-    hi: int,
+    bounds: list[tuple[int, int]],
     step: int,
-    with_part_col: bool,
     reset: str = "error",
 ) -> list[_OffsetRange]:
+    """One input partition per ``step`` offsets of each broker partition's
+    ``[lo, hi)`` in ``bounds``; an empty range still yields one (empty)
+    input partition."""
+    n_parts = len(bounds)
     return [
-        _OffsetRange(
-            host, port, topic, s, min(s + step, hi), part, with_part_col, reset
-        )
-        for s in range(lo, hi, step)
-    ] or [_OffsetRange(host, port, topic, lo, hi, part, with_part_col, reset)]
+        _OffsetRange(host, port, topic, s, min(s + step, hi), p, n_parts, reset)
+        for p, (lo, hi) in enumerate(bounds)
+        for s in range(lo, hi, step) or [lo]
+    ]
 
 
 class _WireStreamReader(DataSourceStreamReader):
@@ -170,54 +195,35 @@ class _WireStreamReader(DataSourceStreamReader):
 
         return WireClient(self.host, self.port)
 
-    # -- offset bookkeeping: {"offset": n} for 1-partition topics (the
-    # round-5 checkpoint format), {"0": n0, "1": n1, ...} for real
-    # multi-partition topics (Kafka's per-partition offset map).
     def initialOffset(self) -> dict:
         # No checkpoint: resume from the group's commit, else from the
         # EARLIEST RETAINED offset (not 0 — retention may have deleted a
         # prefix before this consumer ever started). A committed offset
         # below the log start is handled by the reset policy at fetch time.
+        offsets = []
         with self._client() as c:
-            if self.n_parts == 1:
-                committed = c.committed(self.group, self.topic)
-                earliest = c.start_offset(self.topic)
-                return {"offset": committed if committed >= 0 else earliest}
-            out = {}
             for p in range(self.n_parts):
-                committed = c.committed_part(self.group, self.topic, p)
+                committed = c.committed(self.group, self.topic, part=p)
                 if committed < 0:
-                    committed = c.start_offset_part(self.topic, p)
-                out[str(p)] = committed
-            return out
+                    committed = c.start_offset(self.topic, part=p)
+                offsets.append(committed)
+        return _encode_offsets(offsets)
 
     def latestOffset(self) -> dict:
         with self._client() as c:
-            if self.n_parts == 1:
-                return {"offset": c.end_offset(self.topic)}
-            return {
-                str(p): c.end_offset_part(self.topic, p)
-                for p in range(self.n_parts)
-            }
+            return _encode_offsets(
+                [c.end_offset(self.topic, part=p) for p in range(self.n_parts)]
+            )
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        if self.n_parts == 1:
-            return _split_ranges(
-                self.host, self.port, self.topic, 0,
-                start["offset"], end["offset"], self.max_rows, False,
-                self.offset_reset,
-            )
-        out: list[InputPartition] = []
-        for p in range(self.n_parts):
-            key = str(p)
-            out.extend(
-                _split_ranges(
-                    self.host, self.port, self.topic, p,
-                    start.get(key, 0), end.get(key, 0), self.max_rows, True,
-                    self.offset_reset,
-                )
-            )
-        return out
+        bounds = zip(
+            _decode_offsets(start, self.n_parts),
+            _decode_offsets(end, self.n_parts),
+        )
+        return _offset_ranges(
+            self.host, self.port, self.topic, list(bounds), self.max_rows,
+            self.offset_reset,
+        )
 
     def read(self, partition: _OffsetRange) -> Iterator[tuple]:
         return _fetch_range(partition)
@@ -226,18 +232,15 @@ class _WireStreamReader(DataSourceStreamReader):
         # Manual consumer-group commit on epoch completion — the wire twin
         # of the reference's consumer.commit() after processing.
         with self._client() as c:
-            if self.n_parts == 1:
-                c.commit(self.group, self.topic, end["offset"])
-            else:
-                for p in range(self.n_parts):
-                    c.commit_part(self.group, self.topic, p, end[str(p)])
+            for p, off in enumerate(_decode_offsets(end, self.n_parts)):
+                c.commit(self.group, self.topic, off, part=p)
 
 
 class _WireBatchReader(DataSourceReader):
-    """``spark.read.format("wire_topic")`` — the whole topic (or an explicit
-    ``startOffset``/``endOffset`` range on 1-partition topics) as a batch
-    frame, range-partitioned so each task fetches its own slice — Kafka's
-    batch-read mode. Multi-partition topics read every partition."""
+    """``spark.read.format("wire_topic")`` — every partition of the topic
+    (or an explicit ``startOffset``/``endOffset`` range on 1-partition
+    topics) as a batch frame, range-partitioned so each task fetches its
+    own slice — Kafka's batch-read mode."""
 
     def __init__(self, options: dict, n_parts: int):
         self.host = options.get("host", "127.0.0.1")
@@ -247,42 +250,34 @@ class _WireBatchReader(DataSourceReader):
         self.end = options.get("endoffset")
         self.max_rows = int(options.get("maxrowsperpartition", 10_000))
         self.n_parts = n_parts
+        # A single offset cannot bound several partitions' logs; ignoring
+        # it would silently read the whole topic.
+        for name, value in (("startOffset", self.start), ("endOffset", self.end)):
+            if value is not None and n_parts > 1:
+                raise ValueError(
+                    f"{name} applies to 1-partition topics only; topic"
+                    f" {self.topic!r} has {n_parts} partitions"
+                )
 
     def partitions(self) -> list[InputPartition]:
         from ..streaming.wirebroker import WireClient
 
-        if self.n_parts == 1:
-            with WireClient(self.host, self.port) as c:
-                end = (
-                    int(self.end) if self.end is not None
-                    else c.end_offset(self.topic)
-                )
-                # Default lower bound is the earliest RETAINED offset (an
-                # explicit startOffset below it fails at fetch — data loss
-                # must be asked for, never silent in batch mode).
-                start = (
-                    int(self.start) if self.start is not None
-                    else c.start_offset(self.topic)
-                )
-            return _split_ranges(
-                self.host, self.port, self.topic, 0,
-                start, end, self.max_rows, False,
-            )
-        out: list[InputPartition] = []
+        # Default lower bound is the earliest RETAINED offset (an explicit
+        # startOffset below it fails at fetch — data loss must be asked
+        # for, never silent in batch mode).
         with WireClient(self.host, self.port) as c:
             bounds = [
-                (c.start_offset_part(self.topic, p),
-                 c.end_offset_part(self.topic, p))
+                (
+                    int(self.start) if self.start is not None
+                    else c.start_offset(self.topic, part=p),
+                    int(self.end) if self.end is not None
+                    else c.end_offset(self.topic, part=p),
+                )
                 for p in range(self.n_parts)
             ]
-        for p, (start, end) in enumerate(bounds):
-            out.extend(
-                _split_ranges(
-                    self.host, self.port, self.topic, p,
-                    start, end, self.max_rows, True,
-                )
-            )
-        return out
+        return _offset_ranges(
+            self.host, self.port, self.topic, bounds, self.max_rows
+        )
 
     def read(self, partition: _OffsetRange) -> Iterator[tuple]:
         return _fetch_range(partition)
@@ -306,7 +301,7 @@ class WireTopicDataSource(DataSource):
             return c.n_partitions(self.options["topic"])
 
     def schema(self) -> str:
-        return SCHEMA_MP if self._n_parts() > 1 else SCHEMA
+        return _schema(self._n_parts())
 
     def reader(self, schema) -> DataSourceReader:
         return _WireBatchReader(self.options, self._n_parts())

@@ -232,15 +232,12 @@ def run_to_memory(
     never resizes them, and every micro-batch pays per-partition state
     machinery (store init/commit, task launch) regardless of data volume.
     For the bounded AvailableNow runs this helper exists for, the state
-    keyspace is micro-batch-scale, so the query runs with
-    ``spark.hybridnutrition.streamShufflePartitions`` partitions (default
-    ``min(cores, 8)``) captured at query start and restored after —
-    measured at sf0.1/local[32]: stream_tumbling_live 1.54 → 0.94 s,
+    keyspace is micro-batch-scale, so the query runs with ``min(cores, 8)``
+    shuffle partitions, set at query start and restored after — measured
+    at sf0.1/local[32]: stream_tumbling_live 1.54 → 0.94 s,
     stream_static_enrich 1.61 → 1.06 s, results identical (exact
-    aggregations; partitioning only moves rows). A production deployment
-    with large state sets the conf to its state-volume target (~one store
-    per core, or keyspace/128 MB); this is the same parameterised lever as
-    ``session._size_shuffle_partitions``, not a local[32] constant.
+    aggregations; partitioning only moves rows). Large-state streams would
+    want one store per core or keyspace/128 MB instead.
     """
     spark = df.sparkSession
     name = table or f"mem_{uuid.uuid4().hex[:12]}"
@@ -255,12 +252,8 @@ def run_to_memory(
     from ..session import default_parallelism, own_view
 
     key = "spark.sql.shuffle.partitions"
-    n = spark.conf.get(
-        "spark.hybridnutrition.streamShufflePartitions",
-        str(min(default_parallelism(), 8)),
-    )
     prev = spark.conf.get(key)
-    spark.conf.set(key, n)
+    spark.conf.set(key, str(min(default_parallelism(), 8)))
     try:
         q = writer.start()
         q.awaitTermination()

@@ -381,17 +381,64 @@ class ParquetUpsertStore:
             return None
         return self.spark.read.parquet(*paths)
 
-    def merge(self, batch: DataFrame) -> None:
-        """LWW-merge one micro-batch: read touched buckets, union, dedup,
-        write new snapshot dirs, commit one manifest.
+    def _commit_buckets(
+        self,
+        rows: DataFrame,
+        touched: list[int],
+        version: int,
+        buckets: dict[int, str],
+    ) -> None:
+        """Rewrite the ``touched`` buckets from ``rows`` and commit them as
+        manifest ``version + 1``, then GC. A touched bucket with no rows
+        left drops out of the manifest.
 
         Every on-disk name this attempt creates is ATTEMPT-UNIQUE
         (``.stage-{attempt}`` workspace, ``b{b}-v{V}-{attempt}`` snapshot
         dirs), and nothing pre-existing is ever deleted before the commit —
-        so two merges racing from the same base version never touch each
+        so two writers racing from the same base version never touch each
         other's files; the put-if-absent manifest link alone decides the
         winner, and the loser's dirs (removed on the spot, or by later GC)
         were never visible to any reader."""
+        new_version = version + 1
+        attempt = uuid.uuid4().hex[:8]
+        stage = os.path.join(self._data_dir, f".stage-{attempt}")
+        renamed: list[str] = []
+        try:
+            (
+                rows.withColumn(BUCKET_COL, self._bucket())
+                .repartition(len(touched), BUCKET_COL)
+                .write.mode("overwrite")
+                .partitionBy(BUCKET_COL)
+                .parquet(stage)
+            )
+            new_buckets = dict(buckets)
+            for b in touched:
+                stage_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
+                if not os.path.isdir(stage_dir):
+                    new_buckets.pop(b, None)  # bucket fully emptied
+                    continue
+                snap = f"b{b}-v{new_version:06d}-{attempt}"
+                dst = os.path.join(self._data_dir, snap)
+                os.rename(stage_dir, dst)
+                renamed.append(dst)
+                new_buckets[b] = snap
+            try:
+                self._commit_manifest(new_version, new_buckets)  # ← visibility point
+            except ConcurrentWriteError:
+                # Lost the race: the winner's store state is untouched (our
+                # names are unique); drop our never-visible dirs and let the
+                # caller rebase.
+                for d in renamed:
+                    shutil.rmtree(d, ignore_errors=True)
+                raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        self._gc_unreferenced()
+
+    def merge(self, batch: DataFrame) -> None:
+        """LWW-merge one micro-batch: read touched buckets, union, dedup,
+        write new snapshot dirs, commit one manifest (``_commit_buckets``:
+        attempt-unique names, put-if-absent manifest link)."""
         with_bucket = batch.withColumn(BUCKET_COL, self._bucket())
         # Driver-side list of touched bucket ids — bounded by n_buckets,
         # never by data volume.
@@ -417,40 +464,7 @@ class ParquetUpsertStore:
             # strict default: a schema drift is an error, never silent
             merged = current.unionByName(batch)
         deduped = dedup_last_write_wins(merged, key=self.key, ts=self.ts_col)
-        new_version = version + 1
-        attempt = uuid.uuid4().hex[:8]
-        stage = os.path.join(self._data_dir, f".stage-{attempt}")
-        renamed: list[str] = []
-        try:
-            (
-                deduped.withColumn(BUCKET_COL, self._bucket())
-                .repartition(len(touched), BUCKET_COL)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(stage)
-            )
-            new_buckets = dict(buckets)
-            for b in touched:
-                stage_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
-                if not os.path.isdir(stage_dir):
-                    continue  # no surviving rows for this bucket (can't happen under LWW)
-                snap = f"b{b}-v{new_version:06d}-{attempt}"
-                dst = os.path.join(self._data_dir, snap)
-                os.rename(stage_dir, dst)
-                renamed.append(dst)
-                new_buckets[b] = snap
-            try:
-                self._commit_manifest(new_version, new_buckets)  # ← visibility point
-            except ConcurrentWriteError:
-                # Lost the race: the winner's store state is untouched (our
-                # names are unique); drop our never-visible dirs and let the
-                # caller rebase.
-                for d in renamed:
-                    shutil.rmtree(d, ignore_errors=True)
-                raise
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        self._gc_unreferenced()
+        self._commit_buckets(deduped, touched, version, buckets)
 
     def delete(self, keys: DataFrame) -> int:
         """Key-targeted delete (GDPR / right-to-be-forgotten): rewrite ONLY
@@ -485,38 +499,7 @@ class ParquetUpsertStore:
         n_after = survivors.count()
         if n_after == n_before:
             return 0  # nothing matched: don't burn a version
-        new_version = version + 1
-        attempt = uuid.uuid4().hex[:8]
-        stage = os.path.join(self._data_dir, f".stage-{attempt}")
-        renamed: list[str] = []
-        try:
-            (
-                survivors.withColumn(BUCKET_COL, self._bucket())
-                .repartition(len(touched), BUCKET_COL)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(stage)
-            )
-            new_buckets = dict(buckets)
-            for b in touched:
-                stage_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
-                if not os.path.isdir(stage_dir):
-                    new_buckets.pop(b, None)  # bucket fully emptied
-                    continue
-                snap = f"b{b}-v{new_version:06d}-{attempt}"
-                dst = os.path.join(self._data_dir, snap)
-                os.rename(stage_dir, dst)
-                renamed.append(dst)
-                new_buckets[b] = snap
-            try:
-                self._commit_manifest(new_version, new_buckets)
-            except ConcurrentWriteError:
-                for d in renamed:
-                    shutil.rmtree(d, ignore_errors=True)
-                raise
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        self._gc_unreferenced()
+        self._commit_buckets(survivors, touched, version, buckets)
         return n_before - n_after
 
 

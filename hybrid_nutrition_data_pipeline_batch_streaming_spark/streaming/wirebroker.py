@@ -3,51 +3,43 @@
 The sandbox has no Kafka broker or client jar, so the engine's S1/S2 rows
 were config-builders plus a Python-source stand-in. This module closes the
 remaining gap — REAL BYTES OVER A REAL SOCKET — with a minimal
-produce/fetch/commit broker speaking newline-delimited UTF-8:
-
-    PRODUCE <topic> <json-value>        -> OK <offset>
-    END <topic>                         -> OK <end-offset>
-    FETCH <topic> <start> <end>         -> MSG <offset> <json-value> ... DONE
-    COMMIT <group> <topic> <offset>     -> OK
-    COMMITTED <group> <topic>           -> OK <offset|-1>
-    QUIT                                -> (closes connection)
-
-Round-6 multi-partition mode (one append-only log PER PARTITION, the real
-Kafka topic model — partition id in the protocol, offsets dense per
-partition, consumer-group commits per (group, topic, partition)):
+produce/fetch/commit broker speaking newline-delimited UTF-8. A topic is
+one append-only log PER PARTITION (the Kafka topic model: offsets dense per
+partition, consumer-group commits per (group, topic, partition)), and every
+read and commit names its partition; a topic never CREATEd has one:
 
     CREATE <topic> <nparts>                      -> OK <nparts>
     PARTS <topic>                                -> OK <nparts>
+    PRODUCE <topic> <json-value>                 -> OK <offset>
     PRODUCEK <topic> <key> <json-value>          -> OK <part> <offset>
     PRODUCEP <topic> <part> <json-value>         -> OK <offset>
-    ENDP <topic> <part>                          -> OK <end-offset>
-    FETCHP <topic> <part> <start> <end>          -> MSG ... DONE
-    COMMITP <group> <topic> <part> <offset>      -> OK
-    COMMITTEDP <group> <topic> <part>            -> OK <offset|-1>
-
-Round-6 log retention (Kafka's retention.ms/retention.bytes model: a
-PREFIX of the log is deleted, offsets are never renumbered, the log keeps
-a start offset — reading below it is an offset-out-of-range error, which
-is exactly the situation the reference's ``auto_offset_reset="earliest"``
-(`consumer/consume_items.py:27`) exists to handle):
-
-    RETAIN <topic> <part> <keep_last_n>          -> OK <new-start-offset>
-    START <topic>                                -> OK <start-offset>
-    STARTP <topic> <part>                        -> OK <start-offset>
-
-    FETCH/FETCHP below the start offset          -> ERR OffsetOutOfRange
+    START <topic> <part>                         -> OK <start-offset>
+    END <topic> <part>                           -> OK <end-offset>
+    FETCH <topic> <part> <start> <end>           -> MSG <offset> <json-value>
+                                                    ... DONE
+                                                 |  ERR OffsetOutOfRange
                                                     start=<s> end=<e>
+    COMMIT <group> <topic> <part> <offset>       -> OK
+    COMMITTED <group> <topic> <part>             -> OK <offset|-1>
+    RETAIN <topic> <part> <keep_last_n>          -> OK <new-start-offset>
+    QUIT                                         -> (closes connection)
 
-``PRODUCEK`` routes by key hash (crc32(key) % nparts — the keyed-producer
-contract: same key, same partition, per-partition order preserved). The
-legacy single-partition commands keep working against partition 0 of
-1-partition topics, so round-5 clients are untouched; unkeyed PRODUCE to a
-multi-partition topic is an ERR (explicit routing only).
+The three produce verbs route differently: ``PRODUCE`` appends to a
+1-partition topic (an ERR on a multi-partition topic — explicit routing
+only), ``PRODUCEK`` routes by key hash (crc32(key) % nparts — the
+keyed-producer contract: same key, same partition, per-partition order
+preserved) and ``PRODUCEP`` names the partition.
+
+Log retention follows Kafka's retention.ms/retention.bytes model: RETAIN
+deletes a PREFIX of the log, offsets are never renumbered, the log keeps a
+start offset, and a FETCH below it is an offset-out-of-range error, which
+is exactly the situation the reference's ``auto_offset_reset="earliest"``
+(`consumer/consume_items.py:27`) exists to handle.
 
 Semantics mirror the reference consumer/producer pair:
 
-- append-only per-topic log, offsets dense from 0 — Kafka's single-partition
-  topic model (`producer/produce_items.py:30-41` sends, the broker assigns);
+- append-only per-partition log, offsets dense from 0 — Kafka's topic
+  model (`producer/produce_items.py:30-41` sends, the broker assigns);
 - consumer groups with MANUAL commit: the reference disables auto-commit
   and commits after each processed record (`consumer/consume_items.py:27-29`
   ``enable_auto_commit=False``, `:107` ``consumer.commit()``); here COMMIT
@@ -117,8 +109,8 @@ class WireBroker:
     def __init__(self, host: str = "127.0.0.1") -> None:
         self._host = host
         self._lock = threading.Lock()
-        # topic -> one append-only log per partition (legacy topics
-        # auto-create with a single partition).
+        # topic -> one append-only log per partition (topics never
+        # CREATEd auto-create with a single partition).
         self._topics: dict[str, list[_PartLog]] = {}
         self._commits: dict[tuple[str, str, int], int] = {}
         self._server: _Server | None = None
@@ -154,8 +146,8 @@ class WireBroker:
 
     # -- protocol -----------------------------------------------------------
     def _log(self, topic: str, part: int) -> _PartLog:
-        """The partition's log; caller holds the lock. Auto-creates legacy
-        1-partition topics on partition-0 access, errors on out-of-range."""
+        """The partition's log; caller holds the lock. Auto-creates a
+        1-partition topic on partition-0 access, errors on out-of-range."""
         parts = self._topics.get(topic)
         if parts is None:
             if part != 0:
@@ -217,17 +209,13 @@ class WireBroker:
                 log.rows.append(value)
                 off = log.end - 1
             return [f"OK {part} {off}" if cmd == "PRODUCEK" else f"OK {off}"]
-        if cmd in ("END", "ENDP", "START", "STARTP"):
-            if cmd in ("ENDP", "STARTP"):
-                topic, part_s = rest.split(" ")
-                part = int(part_s)
-            else:
-                topic, part = rest, 0
+        if cmd in ("END", "START"):
+            topic, part_s = rest.split(" ")
             with self._lock:
                 if topic not in self._topics:
                     return ["OK 0"]
-                log = self._log(topic, part)
-                return [f"OK {log.end if cmd in ('END', 'ENDP') else log.start}"]
+                log = self._log(topic, int(part_s))
+                return [f"OK {log.end if cmd == 'END' else log.start}"]
         if cmd == "RETAIN":
             topic, part_s, keep_s = rest.split(" ")
             part, keep = int(part_s), int(keep_s)
@@ -245,18 +233,13 @@ class WireBroker:
                     del log.rows[:drop]
                     log.start += drop
                 return [f"OK {log.start}"]
-        if cmd in ("FETCH", "FETCHP"):
-            if cmd == "FETCHP":
-                topic, part_s, start_s, end_s = rest.split(" ")
-                part = int(part_s)
-            else:
-                topic, start_s, end_s = rest.split(" ")
-                part = 0
+        if cmd == "FETCH":
+            topic, part_s, start_s, end_s = rest.split(" ")
             start, end = int(start_s), int(end_s)
             with self._lock:
                 if topic not in self._topics:
                     return ["DONE"]
-                log = self._log(topic, part)
+                log = self._log(topic, int(part_s))
                 # Kafka semantics: a fetch below the log start offset (the
                 # requested records were deleted by retention) is an ERROR,
                 # not an empty or silently-shifted read — the CONSUMER's
@@ -274,25 +257,15 @@ class WireBroker:
             out = [f"MSG {off} {json.dumps(v)}" for off, v in chunk]
             out.append("DONE")
             return out
-        if cmd in ("COMMIT", "COMMITP"):
-            if cmd == "COMMITP":
-                group, topic, part_s, off_s = rest.split(" ")
-                part = int(part_s)
-            else:
-                group, topic, off_s = rest.split(" ")
-                part = 0
+        if cmd == "COMMIT":
+            group, topic, part_s, off_s = rest.split(" ")
             with self._lock:
-                self._commits[(group, topic, part)] = int(off_s)
+                self._commits[(group, topic, int(part_s))] = int(off_s)
             return ["OK"]
-        if cmd in ("COMMITTED", "COMMITTEDP"):
-            if cmd == "COMMITTEDP":
-                group, topic, part_s = rest.split(" ")
-                part = int(part_s)
-            else:
-                group, topic = rest.split(" ")
-                part = 0
+        if cmd == "COMMITTED":
+            group, topic, part_s = rest.split(" ")
             with self._lock:
-                return [f"OK {self._commits.get((group, topic, part), -1)}"]
+                return [f"OK {self._commits.get((group, topic, int(part_s)), -1)}"]
         return [f"ERR unknown command {cmd!r}"]
 
 
@@ -345,38 +318,6 @@ class WireClient:
         self._send(f"PRODUCE {topic} {json.dumps(value)}")
         return int(self._expect_ok())
 
-    def end_offset(self, topic: str) -> int:
-        self._send(f"END {topic}")
-        return int(self._expect_ok())
-
-    def fetch(self, topic: str, start: int, end: int) -> list[tuple[int, str]]:
-        self._send(f"FETCH {topic} {start} {end}")
-        out: list[tuple[int, str]] = []
-        while True:
-            reply = self._recv_line()
-            if reply == "DONE":
-                return out
-            if not reply.startswith("MSG "):
-                _maybe_oor(reply)
-                raise RuntimeError(f"broker error: {reply}")
-            _, off, payload = reply.split(" ", 2)
-            out.append((int(off), json.loads(payload)))
-
-    def start_offset(self, topic: str) -> int:
-        """Earliest retained offset (Kafka beginningOffsets); 0 unless
-        RETAIN has deleted a prefix."""
-        self._send(f"START {topic}")
-        return int(self._expect_ok())
-
-    def commit(self, group: str, topic: str, offset: int) -> None:
-        self._send(f"COMMIT {group} {topic} {offset}")
-        self._expect_ok()
-
-    def committed(self, group: str, topic: str) -> int:
-        self._send(f"COMMITTED {group} {topic}")
-        return int(self._expect_ok())
-
-    # -- multi-partition protocol (round 6) ---------------------------------
     def create_topic(self, topic: str, n_partitions: int) -> int:
         self._send(f"CREATE {topic} {n_partitions}")
         return int(self._expect_ok())
@@ -396,14 +337,20 @@ class WireClient:
         self._send(f"PRODUCEP {topic} {part} {json.dumps(value)}")
         return int(self._expect_ok())
 
-    def end_offset_part(self, topic: str, part: int) -> int:
-        self._send(f"ENDP {topic} {part}")
+    def start_offset(self, topic: str, *, part: int = 0) -> int:
+        """Earliest retained offset (Kafka beginningOffsets); 0 unless
+        RETAIN has deleted a prefix."""
+        self._send(f"START {topic} {part}")
         return int(self._expect_ok())
 
-    def fetch_part(
-        self, topic: str, part: int, start: int, end: int
+    def end_offset(self, topic: str, *, part: int = 0) -> int:
+        self._send(f"END {topic} {part}")
+        return int(self._expect_ok())
+
+    def fetch(
+        self, topic: str, start: int, end: int, *, part: int = 0
     ) -> list[tuple[int, str]]:
-        self._send(f"FETCHP {topic} {part} {start} {end}")
+        self._send(f"FETCH {topic} {part} {start} {end}")
         out: list[tuple[int, str]] = []
         while True:
             reply = self._recv_line()
@@ -415,22 +362,20 @@ class WireClient:
             _, off, payload = reply.split(" ", 2)
             out.append((int(off), json.loads(payload)))
 
-    def start_offset_part(self, topic: str, part: int) -> int:
-        self._send(f"STARTP {topic} {part}")
-        return int(self._expect_ok())
-
     def retain(self, topic: str, part: int, keep_last_n: int) -> int:
         """Prefix retention: keep only the newest ``keep_last_n`` records of
         the partition (offsets unchanged); returns the new start offset."""
         self._send(f"RETAIN {topic} {part} {keep_last_n}")
         return int(self._expect_ok())
 
-    def commit_part(self, group: str, topic: str, part: int, offset: int) -> None:
-        self._send(f"COMMITP {group} {topic} {part} {offset}")
+    def commit(
+        self, group: str, topic: str, offset: int, *, part: int = 0
+    ) -> None:
+        self._send(f"COMMIT {group} {topic} {part} {offset}")
         self._expect_ok()
 
-    def committed_part(self, group: str, topic: str, part: int) -> int:
-        self._send(f"COMMITTEDP {group} {topic} {part}")
+    def committed(self, group: str, topic: str, *, part: int = 0) -> int:
+        self._send(f"COMMITTED {group} {topic} {part}")
         return int(self._expect_ok())
 
     def close(self) -> None:

@@ -996,4 +996,4 @@ def test_package_environment_options_are_allowlisted():
                 unnamed.append(os.path.relpath(path, REPO_ROOT))
     assert not unnamed, f"environment read without a literal name in {unnamed}"
     assert read == allowed
-    assert conf_keys == {"spark.hybridnutrition.streamShufflePartitions"}
+    assert conf_keys == set()

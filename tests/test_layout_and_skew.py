@@ -315,46 +315,6 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.set(k, v)
 
 
-def test_lsh_index_probe_matches_query_time_ann(spark, tmp_path):
-    """Persisted-index probes return EXACTLY the query-time ANN results, and
-    the probe plan prunes postings to the probed band partition instead of
-    rescanning/re-hashing the corpus."""
-    from pyspark.sql import functions as F
-
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.operators.ann_index import (
-        build_lsh_index,
-        query_lsh_index,
-    )
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark import plans
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans.similarity import (
-        N_QUERIES,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    idx = str(tmp_path / "lsh_index")
-    build_lsh_index(emb.select("vec_id", "embedding"), idx)
-
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = query_lsh_index(spark, idx, queries)
-    want = plans.QUERIES["similarity_ann_lsh"](spark, sf)
-    g = {(r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 12)) for r in got.collect()}
-    w = {(r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 12)) for r in want.collect()}
-    assert g == w and g
-
-    # partition pruning: a single-band probe plans one band partition, and
-    # the bucket predicate reaches the parquet scan
-    postings = spark.read.parquet(f"{idx}/postings")
-    single = postings.where((F.col("band") == 2) & (F.col("bucket") == 3))
-    plan = single._sc._jvm.PythonSQLUtils.explainString(
-        single._jdf.queryExecution(), "formatted"
-    )
-    assert "band" in plan.split("PartitionFilters")[1].split("]")[0]
-    assert "bucket" in plan.split("PushedFilters")[1].split("]")[0]
-
-
 def test_compaction_bin_packs_small_files(spark, tmp_path):
     """compact_files rewrites a fragmented directory into the computed
     target count without changing the data, skips already-compact dirs,
@@ -634,58 +594,6 @@ def test_dynamic_partition_pruning_prunes_fact_scan(spark, tmp_path):
     )
     pf = fact_scan.split("PartitionFilters: [")[1].split("]")[0]
     assert "dynamicpruning" in pf.lower(), f"DPP not in PartitionFilters: {pf}"
-
-
-def test_text_index_probe_matches_query_time_bm25(spark, tmp_path):
-    """The persisted inverted index must serve EXACTLY the query-time BM25
-    ranking (same integer scoring), and the probe's posting scan must be
-    statically pruned to the probed terms' prefix partitions."""
-    from pyspark.sql import functions as F
-
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.catalog import Catalog
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.operators.text_index import (
-        build_text_index,
-        query_text_index,
-    )
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark import plans
-
-    sf = "/root/testdata/sf0.001"
-    cat = Catalog(spark, sf)
-    idx = str(tmp_path / "textidx")
-    build_text_index(cat.documents, idx)
-
-    # The same self-derived term set bm25_search uses: top tokens by freq.
-    tok = cat.documents.where(F.col("text") != "").select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    )
-    terms = [
-        r.tok
-        for r in tok.groupBy("tok")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), F.asc("tok"))
-        .limit(3)
-        .collect()
-    ]
-
-    probe = query_text_index(spark, idx, terms, top=20)
-    expect = plans.QUERIES["bm25_search"](spark, sf)
-    assert [tuple(r) for r in probe.collect()] == [
-        tuple(r) for r in expect.collect()
-    ]
-
-    # Static partition pruning: the prefix isin-list must land in the
-    # posting/lexicon scans' PartitionFilters (directory pruning at plan
-    # time; inputFiles() reports the unpruned listing, so the plan text is
-    # the contract — same caveat as the DPP test).
-    spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    pf_clauses = [
-        seg.split("]")[0]
-        for seg in plan.split("PartitionFilters: [")[1:]
-    ]
-    pruned = [c for c in pf_clauses if "tok_pfx" in c and "IN" in c]
-    assert len(pruned) >= 2, f"prefix pruning missing: {pf_clauses}"
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):

@@ -397,7 +397,7 @@ def test_producer_crash_mid_batch_never_tears_a_record(broker):
     crash_after(b'PRODUCEK tear k2 "complete-line"\n')  # newline made it out
 
     with WireClient(host, port) as c:
-        rows = [v for p in range(2) for _, v in c.fetch_part("tear", p, 0, 100)]
+        rows = [v for p in range(2) for _, v in c.fetch("tear", 0, 100, part=p)]
         # 3 complete records (the per-connection "before-crash" ones) plus
         # the one whose newline flushed before the crash — and NOTHING
         # containing a torn prefix.

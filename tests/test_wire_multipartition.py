@@ -9,6 +9,7 @@ exactly-once per group across a restart.
 
 from __future__ import annotations
 
+import json
 import zlib
 
 import pytest
@@ -49,15 +50,15 @@ def test_protocol_multipartition(broker):
         assert part_b != part_a and off_b0 == 0
         # explicit-partition produce + per-partition end offsets
         assert c.produce_part("t2", part_b, "w1") == 1
-        assert c.end_offset_part("t2", part_a) == 2
-        assert c.end_offset_part("t2", part_b) == 2
-        assert c.fetch_part("t2", part_a, 0, 2) == [(0, "v0"), (1, "v1")]
-        assert c.fetch_part("t2", part_b, 0, 2) == [(0, "w0"), (1, "w1")]
+        assert c.end_offset("t2", part=part_a) == 2
+        assert c.end_offset("t2", part=part_b) == 2
+        assert c.fetch("t2", 0, 2, part=part_a) == [(0, "v0"), (1, "v1")]
+        assert c.fetch("t2", 0, 2, part=part_b) == [(0, "w0"), (1, "w1")]
         # per-(group, partition) commit bookkeeping is independent
-        c.commit_part("g1", "t2", part_a, 2)
-        assert c.committed_part("g1", "t2", part_a) == 2
-        assert c.committed_part("g1", "t2", part_b) == -1
-        assert c.committed_part("g2", "t2", part_a) == -1
+        c.commit("g1", "t2", 2, part=part_a)
+        assert c.committed("g1", "t2", part=part_a) == 2
+        assert c.committed("g1", "t2", part=part_b) == -1
+        assert c.committed("g2", "t2", part=part_a) == -1
         # unkeyed produce on a multi-partition topic is an explicit error
         with pytest.raises(RuntimeError, match="2 partitions"):
             c.produce("t2", "ambiguous")
@@ -87,7 +88,7 @@ def _drain(spark, host, port, topic, group, ckpt):
                 for p in range(n):
                     offs = [r.offset for r in rows if r.partition == p]
                     if offs:
-                        c.commit_part(group, topic, p, max(offs) + 1)
+                        c.commit(group, topic, max(offs) + 1, part=p)
 
     q = (
         spark.readStream.format("wire_topic")
@@ -122,10 +123,10 @@ def test_mp_two_groups_exactly_once_across_restart(spark, tmp_path, broker):
     produce_dataframe(first, host, port, "orders",
                       value_col="payload", key_col="k")
     with WireClient(host, port) as c:
-        assert c.end_offset_part("orders", 0) + c.end_offset_part("orders", 1) == 12
+        assert c.end_offset("orders", part=0) + c.end_offset("orders", part=1) == 12
         # keys actually spread over both partitions
-        assert c.end_offset_part("orders", 0) > 0
-        assert c.end_offset_part("orders", 1) > 0
+        assert c.end_offset("orders", part=0) > 0
+        assert c.end_offset("orders", part=1) > 0
 
     # both groups drain CONCURRENTLY (started before either awaits)
     qa, seen_a = _drain(spark, host, port, "orders", "gA",
@@ -149,9 +150,9 @@ def test_mp_two_groups_exactly_once_across_restart(spark, tmp_path, broker):
     as_expected(seen_b)
     with WireClient(host, port) as c:
         for p in range(2):
-            end = c.end_offset_part("orders", p)
-            assert c.committed_part("gA", "orders", p) == end
-            assert c.committed_part("gB", "orders", p) == end
+            end = c.end_offset("orders", part=p)
+            assert c.committed("gA", "orders", part=p) == end
+            assert c.committed("gB", "orders", part=p) == end
 
     # produce a tail; restart ONLY group A from its checkpoint
     second = spark.createDataFrame(
@@ -167,8 +168,8 @@ def test_mp_two_groups_exactly_once_across_restart(spark, tmp_path, broker):
 
     # group B made NO progress from group A's drain...
     with WireClient(host, port) as c:
-        ends = [c.end_offset_part("orders", p) for p in range(2)]
-        committed_b = [c.committed_part("gB", "orders", p) for p in range(2)]
+        ends = [c.end_offset("orders", part=p) for p in range(2)]
+        committed_b = [c.committed("gB", "orders", part=p) for p in range(2)]
         assert sum(ends) == 15
         assert sum(ends) - sum(committed_b) == 3  # B's backlog is the tail
     # ...and a FRESH-checkpoint drain for group B resumes from ITS commits
@@ -200,3 +201,115 @@ def test_mp_batch_read(spark, broker):
     rows = {(r.partition, r.offset, r.value) for r in df.collect()}
     assert rows == {(0, 0, "m0"), (0, 1, "m2"), (0, 2, "m4"),
                     (1, 0, "m1"), (1, 1, "m3")}
+
+
+@pytest.mark.parametrize("option", ["startOffset", "endOffset"])
+def test_mp_batch_read_rejects_offset_range(spark, broker, option):
+    """One offset cannot bound several partitions' logs: an explicit
+    ``startOffset``/``endOffset`` on a multi-partition topic is an error
+    naming the option, never a silent whole-topic read."""
+    host, port = broker.address
+    register(spark)
+    with WireClient(host, port) as c:
+        c.create_topic("ranged", 2)
+        for i in range(4):
+            c.produce_part("ranged", i % 2, f"m{i}")
+    df = (
+        spark.read.format("wire_topic")
+        .option("host", host)
+        .option("port", port)
+        .option("topic", "ranged")
+        .option(option, 1)
+        .load()
+    )
+    with pytest.raises(Exception, match=option):
+        df.collect()
+
+
+def test_progress_offsets_and_columns_per_partition_count(spark, broker):
+    """The wire contract progress readers and existing checkpoints depend
+    on: a 1-partition topic streams ``offset, value`` with ``{"offset": n}``
+    source offsets; a 2-partition topic streams ``partition, offset,
+    value`` with ``{"0": n0, "1": n1}``. Offsets are read the way a
+    ``StreamingQueryListener`` sees them (JSON strings)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Offsets(StreamingQueryListener):
+        def __init__(self):
+            self.seen = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.numInputRows > 0:
+                src = p.sources[0]
+                self.seen.setdefault(str(p.id), []).append(
+                    (src.startOffset, src.endOffset)
+                )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    host, port = broker.address
+    register(spark)
+    with WireClient(host, port) as c:
+        c.create_topic("two", 2)
+
+    def produce(lo, hi):
+        with WireClient(host, port) as c:
+            for i in range(lo, hi):
+                c.produce("one", f"v{i}")
+                c.produce_part("two", i % 2, f"v{i}")
+
+    cases = [
+        ("one", ["offset", "value"], lambda ends: {"offset": ends[0]}),
+        ("two", ["partition", "offset", "value"],
+         lambda ends: {"0": ends[0], "1": ends[1]}),
+    ]
+    listener = Offsets()
+    spark.streams.addListener(listener)
+    try:
+        for topic, columns, expected in cases:
+            produce(0, 3)
+            df = (
+                spark.readStream.format("wire_topic")
+                .option("host", host)
+                .option("port", port)
+                .option("topic", topic)
+                .option("group", f"g-{topic}")
+                .load()
+            )
+            assert df.columns == columns
+            q = df.writeStream.format("noop").start()
+            try:
+                q.processAllAvailable()
+                produce(3, 8)
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            with WireClient(host, port) as c:
+                ends = [c.end_offset(topic, part=p) for p in range(len(columns) - 1)]
+            want = expected(ends)
+            deadline = time.time() + 30  # listener events arrive async
+            while time.time() < deadline:
+                seen = listener.seen.get(str(q.id), [])
+                if seen and json.loads(seen[-1][1]) == want:
+                    break
+                time.sleep(0.2)
+            assert len(seen) >= 2  # the live tail ran as a later batch
+            prev_end = None
+            for start, end in seen:
+                if prev_end is not None:
+                    assert json.loads(start) == prev_end
+                prev_end = json.loads(end)
+                assert prev_end.keys() == want.keys()
+            assert prev_end == want
+    finally:
+        spark.streams.removeListener(listener)
