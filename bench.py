@@ -150,7 +150,7 @@ HEADLINE = [
     # round-12 additions: the seeded-hyperplane production ANN tier
     # (VERDICT r11 item 7) and the corpus provenance audit — timed next to
     # pipeline_corpus_build (both build the gated near-dup pair table
-    # inside their own plan; see plans/corpus.py::_corpus_pair_edges)
+    # inside their own plan; see plans/graph.py::doc_pair_edges)
     "similarity_ann_hyperplane",
     "pipeline_drop_reasons",
 ]

@@ -30,32 +30,6 @@ def _fmt_cal(cal: pd.Series) -> pd.Series:
 
 # --- U1: the four LLM text columns (`pipeline.py:59-74`), deterministic ----
 
-
-@pandas_udf(StringType())
-def gen_description(item_name: pd.Series, calories: pd.Series) -> pd.Series:
-    return (
-        "Description: " + item_name + " has " + _fmt_cal(calories) + " kcal per serving."
-    )
-
-
-@pandas_udf(StringType())
-def gen_best_pairings(item_name: pd.Series) -> pd.Series:
-    return "Best pairings for " + item_name + ": water."
-
-
-@pandas_udf(StringType())
-def gen_health_impact(item_name: pd.Series, calories: pd.Series) -> pd.Series:
-    density = pd.Series(
-        ["dense" if c > 300 else "light" for c in calories], index=calories.index
-    )
-    return "Health impact of " + item_name + ": " + density + "."
-
-
-@pandas_udf(StringType())
-def gen_preparation_tips(item_name: pd.Series) -> pd.Series:
-    return "Preparation tips for " + item_name + ": serve fresh."
-
-
 _LLM_STRUCT = (
     "openai_description string, openai_best_pairings string, "
     "openai_health_impact string, openai_preparation_tips string"

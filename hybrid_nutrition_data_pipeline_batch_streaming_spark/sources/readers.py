@@ -34,18 +34,6 @@ def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def read_cassandra(spark: SparkSession, keyspace: str, table: str) -> DataFrame:
-    """Production raw-layer scan (S3): the Cassandra connector replaces the
-    reference's ALLOW FILTERING full scan; Catalyst pushes projection and
-    predicates into the connector. Requires the spark-cassandra-connector
-    package at runtime."""
-    return (
-        spark.read.format("org.apache.spark.sql.cassandra")
-        .options(keyspace=keyspace, table=table)
-        .load()
-    )
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -22,9 +22,13 @@ n_buckets)), so a merge
 - COMMITS by renaming one complete manifest file into place — the single
   atomic visibility point. A crash anywhere before the rename leaves the
   previous manifest (and therefore a fully consistent store) in effect;
-  orphaned data dirs are garbage-collected by later merges. This is
-  transactional ACROSS buckets, which round 1's per-bucket dir promotion
-  was not.
+  orphaned data dirs are garbage-collected by later merges. The commit is
+  transactional across buckets.
+
+One schema rule: the first commit fixes the store's schema, and a merge
+whose batch would add, drop, rename or retype a stored column raises before
+writing anything — so every bucket shares one schema and reads never merge
+footers.
 
 Because every manifest is a COMPLETE bucket map, any retained version is
 directly readable — ``read(version=N)`` is snapshot time travel with no log
@@ -49,6 +53,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..pipeline import dedup_last_write_wins
 
@@ -78,16 +83,12 @@ class ParquetUpsertStore:
         key: str,
         ts_col: str,
         n_buckets: int = 16,
-        merge_schema: bool = False,
     ):
         self.spark = spark
         self.path = path
         self.key = key
         self.ts_col = ts_col
         self.n_buckets = n_buckets
-        #: Delta-style mergeSchema: opt-in column evolution on merge();
-        #: reads always footer-merge so mixed-schema buckets stay readable.
-        self.merge_schema = merge_schema
 
     # -- layout helpers -----------------------------------------------------
 
@@ -206,9 +207,6 @@ class ParquetUpsertStore:
 
     # -- public API ---------------------------------------------------------
 
-    def exists(self) -> bool:
-        return bool(self._current_manifest()[1])
-
     def _bucket_paths(self, buckets: dict[int, str], ids: list[int] | None = None) -> list[str]:
         wanted = buckets if ids is None else {b: buckets[b] for b in ids if b in buckets}
         return [os.path.join(self._data_dir, d) for d in wanted.values()]
@@ -228,9 +226,7 @@ class ParquetUpsertStore:
             buckets = self._load_manifest(version)
         if not buckets:
             return None
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *self._bucket_paths(buckets)
-        )
+        return self.spark.read.parquet(*self._bucket_paths(buckets))
 
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame | None:
         """Point lookups by primary key — the reference's Cassandra PK read
@@ -260,11 +256,7 @@ class ParquetUpsertStore:
         if not paths:
             # None of the requested keys' buckets exist in this snapshot.
             return self.read(version=version).where(F.lit(False))
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*paths)
-            .where(F.col(self.key).isin(keys))
-        )
+        return self.spark.read.parquet(*paths).where(F.col(self.key).isin(keys))
 
     def _changed_buckets(self, v_from: int, v_to: int) -> list[int]:
         """Bucket ids whose snapshot dir differs between two versions — the
@@ -374,8 +366,7 @@ class ParquetUpsertStore:
         self._gc_unreferenced(include_stages=True)
         return dropped
 
-    def _read_buckets(self, ids: list[int]) -> DataFrame | None:
-        _, buckets = self._current_manifest()
+    def _read_buckets(self, buckets: dict[int, str], ids: list[int]) -> DataFrame | None:
         paths = self._bucket_paths(buckets, ids)
         if not paths:
             return None
@@ -435,36 +426,57 @@ class ParquetUpsertStore:
             shutil.rmtree(stage, ignore_errors=True)
         self._gc_unreferenced()
 
+    def _touched(self, df: DataFrame) -> list[int]:
+        """Sorted ids of the buckets ``df``'s keys hash into — one small
+        driver-side collect, bounded by n_buckets, never by data volume."""
+        return sorted(
+            r[0]
+            for r in df.select(self._bucket()).distinct().collect()
+            if r[0] is not None
+        )
+
+    def _check_schema(self, stored: StructType, batch: StructType) -> None:
+        """The store's one schema rule: the first commit fixes the columns
+        and their types (nullability aside), and a batch that would add,
+        drop, rename or retype one raises before anything is written."""
+
+        def shape(schema: StructType) -> dict[str, str]:
+            return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+        if shape(batch) != shape(stored):
+            raise ValueError(
+                f"batch schema {batch.simpleString()} does not match the schema "
+                f"of the store at {self.path!r}, {stored.simpleString()}: the "
+                "first commit fixes the store's columns and types"
+            )
+
     def merge(self, batch: DataFrame) -> None:
         """LWW-merge one micro-batch: read touched buckets, union, dedup,
         write new snapshot dirs, commit one manifest (``_commit_buckets``:
-        attempt-unique names, put-if-absent manifest link)."""
-        with_bucket = batch.withColumn(BUCKET_COL, self._bucket())
-        # Driver-side list of touched bucket ids — bounded by n_buckets,
-        # never by data volume.
-        touched = sorted(
-            r[0]
-            for r in with_bucket.select(BUCKET_COL).distinct().collect()
-            if r[0] is not None
-        )
-        if not touched:
-            return
-        version, buckets = self._current_manifest()
-        current = self._read_buckets(touched)
-        if current is None:
-            merged = batch
-        elif self.merge_schema:
-            # Delta-style mergeSchema: a producer upgrade adds columns; old
-            # rows surface NULL for them. TOUCHED buckets rewrite with the
-            # union schema immediately; untouched buckets keep their old
-            # files, and read() merges footers (mergeSchema=true) so the
-            # store-wide view is consistent without a full rewrite.
-            merged = current.unionByName(batch, allowMissingColumns=True)
-        else:
-            # strict default: a schema drift is an error, never silent
-            merged = current.unionByName(batch)
-        deduped = dedup_last_write_wins(merged, key=self.key, ts=self.ts_col)
-        self._commit_buckets(deduped, touched, version, buckets)
+        attempt-unique names, put-if-absent manifest link).
+
+        The batch is persisted for the call and released on return, so its
+        source and any enrichment upstream run once, not once per action
+        (the touched-bucket collect and the write)."""
+        batch.persist()
+        try:
+            touched = self._touched(batch)
+            if not touched:
+                return
+            version, buckets = self._current_manifest()
+            current = self._read_buckets(buckets, touched)
+            if buckets:
+                # every stored bucket carries the one schema; read another
+                # bucket's only when the batch touches no stored one
+                stored = current if current is not None else self._read_buckets(
+                    buckets, [min(buckets)]
+                )
+                self._check_schema(stored.schema, batch.schema)
+            merged = batch if current is None else current.unionByName(batch)
+            deduped = dedup_last_write_wins(merged, key=self.key, ts=self.ts_col)
+            self._commit_buckets(deduped, touched, version, buckets)
+        finally:
+            batch.unpersist()
 
     def delete(self, keys: DataFrame) -> int:
         """Key-targeted delete (GDPR / right-to-be-forgotten): rewrite ONLY
@@ -480,18 +492,11 @@ class ParquetUpsertStore:
         commit as ``merge()`` — a racing writer loses loudly with
         ConcurrentWriteError and the store stays consistent."""
         key_df = keys.select(F.col(self.key)).distinct()
-        touched = sorted(
-            r[0]
-            for r in key_df.withColumn(BUCKET_COL, self._bucket())
-            .select(BUCKET_COL)
-            .distinct()
-            .collect()
-            if r[0] is not None
-        )
+        touched = self._touched(key_df)
         if not touched:
             return 0
         version, buckets = self._current_manifest()
-        current = self._read_buckets(touched)
+        current = self._read_buckets(buckets, touched)
         if current is None:
             return 0
         survivors = current.join(key_df, on=self.key, how="left_anti")
@@ -502,23 +507,3 @@ class ParquetUpsertStore:
         self._commit_buckets(survivors, touched, version, buckets)
         return n_before - n_after
 
-
-def upsert_stream(
-    stream: DataFrame,
-    store: ParquetUpsertStore,
-    checkpoint: str,
-):
-    """Run a stream into the keyed store with exactly-once micro-batches:
-    checkpoint tracks which batches merged, foreachBatch applies the LWW
-    merge — together they re-create the reference's Cassandra upsert
-    without its racy read-modify-write (`pipeline.py:144-150`)."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        store.merge(batch)
-
-    return (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -664,81 +664,6 @@ def test_python_stream_source_restart_resumes_from_checkpoint(spark, tmp_path):
     assert got_second == list(range(len(got_second)))  # no gap, no dup
 
 
-def test_python_datasource_sink_batch_and_stream_exactly_once(spark, tmp_path):
-    """Writer side of the Spark 4 Python DataSource API (the reference's
-    consumer→Cassandra hop): staged files are invisible until the driver
-    commit, streaming commits are idempotent per batch id (a replayed
-    micro-batch discards its second attempt), and the committed store equals
-    the source exactly."""
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.sources.store_sink import (
-        JsonStoreDataSource,
-        _StoreStreamWriter,
-        read_store,
-    )
-
-    spark.dataSource.register(JsonStoreDataSource)
-    sf = "/root/testdata/sf0.001"
-
-    # --- batch writer: two-phase visibility ---
-    batch_store = str(tmp_path / "batch_store")
-    src = spark.read.parquet(f"{sf}/nation.parquet").select("n_nationkey", "n_name")
-    src.write.format("json_store").option("path", batch_store).mode(
-        "append"
-    ).save()
-    import os
-
-    assert len(os.listdir(os.path.join(batch_store, "_commits"))) == 1
-    assert not os.listdir(os.path.join(batch_store, ".staging"))
-    got = read_store(spark, batch_store)
-    assert got.count() == src.count()
-    assert {r.n_name for r in got.collect()} == {r.n_name for r in src.collect()}
-
-    # a SECOND independent batch save must append (per-write commit ids) —
-    # a fixed marker would silently discard it
-    src.limit(3).write.format("json_store").option("path", batch_store).mode(
-        "append"
-    ).save()
-    assert read_store(spark, batch_store).count() == src.count() + 3
-    assert len(os.listdir(os.path.join(batch_store, "_commits"))) == 2
-
-    # --- streaming writer: exactly-once drain + idempotent commit ---
-    stream_store = str(tmp_path / "stream_store")
-    import shutil
-
-    src_dir = str(tmp_path / "stream_src")
-    os.makedirs(src_dir)
-    shutil.copy(f"{sf}/nation.parquet", os.path.join(src_dir, "nation.parquet"))
-    stream = (
-        spark.readStream.schema(
-            "n_nationkey bigint, n_name string, n_regionkey bigint, n_comment string"
-        )
-        .parquet(src_dir)
-        .select("n_nationkey", "n_name")
-    )
-    q = (
-        stream.writeStream.format("json_store")
-        .option("path", stream_store)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert read_store(spark, stream_store).count() == src.count()
-
-    # replay batch 0: the marker makes the second commit a no-op and the
-    # retry's staged files are discarded
-    w = _StoreStreamWriter(stream_store)
-    staged = w.write(iter(src.limit(3).collect()))
-    w.commit([staged], 0)
-    assert read_store(spark, stream_store).count() == src.count()
-    assert not os.listdir(os.path.join(stream_store, ".staging"))
-
-    # abort leaves the store untouched
-    staged2 = w.write(iter(src.limit(2).collect()))
-    w.abort([staged2], 99)
-    assert read_store(spark, stream_store).count() == src.count()
-
-
 def test_oracle_queries_return_driver_hashable_schemas(spark):
     """Meta-guard for the whole registry: the driver's canonicalizer
     factorizes column values with pandas, which dies on array/map/struct

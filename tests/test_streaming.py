@@ -125,37 +125,48 @@ def test_rate_limited_ingestion(spark):
     assert out.collect()[0]["count"] == total
 
 
-def test_foreachbatch_upsert_lww(spark, tmp_path):
-    """foreachBatch keyed upsert (S4): streaming merge equals the batch
-    last-write-wins dedup of all input."""
+def test_upsert_merge_scans_each_micro_batch_once(spark, tmp_path):
+    """``merge`` persists its micro-batch, so the source and the enrichment
+    upstream run once per batch, not once per action: a lookup that logs
+    every call sees exactly one call per streamed item."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.functions.enrichment import (
+        enrich_from_api,
+        nutrition_lookup_stub,
+    )
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.streaming.upsert_sink import (
         ParquetUpsertStore,
-        upsert_stream,
     )
 
-    src = str(tmp_path / "src")
+    calls = str(tmp_path / "calls.log")
+
+    def counting_lookup(names):
+        with open(calls, "a") as fh:
+            fh.write("".join(f"{n}\n" for n in names))
+        return nutrition_lookup_stub(names)
+
     ts0 = datetime.datetime(2024, 1, 1)
-    rows1 = [("a", ts0, "v1"), ("b", ts0, "v1")]
-    _write_batch(spark, tmp_path, rows1, "src")
+    names = [f"item{i}" for i in range(100)]
+    src = _write_batch(spark, tmp_path, [(n, ts0, "") for n in names], "src")
     store = ParquetUpsertStore(
         spark, str(tmp_path / "store"), key="item_name", ts_col="ingestion_ts"
     )
-    schema = "item_name string, ingestion_ts timestamp, data string"
-
-    q = upsert_stream(
-        spark.readStream.schema(schema).parquet(src), store, str(tmp_path / "ck")
+    items = (
+        spark.readStream.schema("item_name string, ingestion_ts timestamp, data string")
+        .parquet(src)
+        .select("item_name", "ingestion_ts")
+    )
+    q = (
+        enrich_from_api(items, lookup=counting_lookup)
+        .writeStream.foreachBatch(lambda batch, _id: store.merge(batch))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination()
-    # Later write for 'a', new key 'c'.
-    rows2 = [("a", ts0 + datetime.timedelta(hours=1), "v2"), ("c", ts0, "v1")]
-    _write_batch(spark, tmp_path, rows2, "src")
-    q = upsert_stream(
-        spark.readStream.schema(schema).parquet(src), store, str(tmp_path / "ck")
-    )
-    q.awaitTermination()
 
-    final = {r.item_name: r.data for r in store.read().collect()}
-    assert final == {"a": "v2", "b": "v1", "c": "v1"}
+    with open(calls) as fh:
+        assert sorted(fh.read().split()) == sorted(names)
+    assert store.read().count() == len(names)
 
 
 def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
@@ -889,10 +900,11 @@ def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):
         q.stop()
 
 
-def test_upsert_store_schema_evolution_opt_in(spark, tmp_path):
-    """A producer upgrade adds a column: with merge_schema=True the merge
-    evolves the store (old rows read NULL for the new column, untouched
-    buckets unrewritten); the strict default refuses the drift loudly."""
+def test_upsert_store_rejects_schema_drift(spark, tmp_path):
+    """The first commit fixes the store's schema: a batch that adds a column
+    or changes a stored column's type raises before anything is written,
+    whether it touches stored buckets or only new ones, and the store keeps
+    its history and its rows."""
     import datetime as dt
 
     import pytest as _pytest
@@ -902,30 +914,35 @@ def test_upsert_store_schema_evolution_opt_in(spark, tmp_path):
     )
 
     t0 = dt.datetime(2024, 1, 1)
-    v1_rows = [(f"item{i}", t0, "v1") for i in range(10)]
-    v2_rows = [("item0", t0 + dt.timedelta(hours=1), "v2", "organic")]
-    old_schema = "item_name string, ingestion_ts timestamp, data string"
-    new_schema = old_schema + ", label string"
-
-    # strict default: drift is an error
-    strict = ParquetUpsertStore(
-        spark, str(tmp_path / "strict"), key="item_name", ts_col="ingestion_ts"
-    )
-    strict.merge(spark.createDataFrame(v1_rows, old_schema))
-    with _pytest.raises(Exception):
-        strict.merge(spark.createDataFrame(v2_rows, new_schema))
-
-    # opt-in evolution
+    t1 = t0 + dt.timedelta(hours=1)
+    old_schema = "item_name string, ingestion_ts timestamp, data string, calories double"
     store = ParquetUpsertStore(
-        spark, str(tmp_path / "evolving"), key="item_name",
-        ts_col="ingestion_ts", n_buckets=4, merge_schema=True,
+        spark, str(tmp_path / "strict"), key="item_name", ts_col="ingestion_ts",
+        n_buckets=16,
     )
-    store.merge(spark.createDataFrame(v1_rows, old_schema))
-    store.merge(spark.createDataFrame(v2_rows, new_schema))
-    out = {r.item_name: (r.data, r.label) for r in store.read().collect()}
-    assert out["item0"] == ("v2", "organic")   # upgraded row carries the column
-    assert out["item1"] == ("v1", None)        # old rows read NULL
-    assert len(out) == 10
+    store.merge(spark.createDataFrame([("item0", t0, "v1", 50.0)], old_schema))
+    before = sorted(store.read().collect())
+
+    def bucket(key):
+        df = spark.createDataFrame([(key,)], "item_name string")
+        return df.select(store._bucket()).first()[0]
+
+    # a key whose bucket the store does not hold yet
+    fresh = next(f"item{i}" for i in range(1, 100) if bucket(f"item{i}") != bucket("item0"))
+
+    drifted = [
+        # a stored double column arriving as string
+        ("item_name string, ingestion_ts timestamp, data string, calories string",
+         ("v2", "60.0")),
+        # an added column
+        (old_schema + ", label string", ("v2", 60.0, "organic")),
+    ]
+    for schema, values in drifted:
+        for key in ("item0", fresh):
+            with _pytest.raises(ValueError, match="schema"):
+                store.merge(spark.createDataFrame([(key, t1, *values)], schema))
+            assert store.history() == [1]
+            assert sorted(store.read().collect()) == before
 
 
 def test_stream_stream_left_outer_emits_nulls_after_watermark(spark, tmp_path):
