@@ -1,6 +1,6 @@
-"""Iterative spherical k-means over an embedding column (the trainer behind
-the coarse quantizers that ``similarity_ann_ivf`` / ``dedup_semantic`` /
-``kmeans_refine`` consume as deterministic seeds).
+"""Iterative spherical k-means over an embedding column: a standalone
+trainer, not imported by any registered plan, checked by
+``test_kmeans_train_objective_monotone_and_reproducible``.
 
 Cosine scoring is scale-invariant in the centroid (cos(e, m) = cos(e, m/|m|)),
 so assigning by max cosine and updating with the plain per-cell mean IS

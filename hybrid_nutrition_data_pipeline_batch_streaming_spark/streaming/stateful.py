@@ -69,72 +69,3 @@ def stateful_user_totals(events_stream: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 state API v2)
-# ---------------------------------------------------------------------------
-
-try:  # Spark 4+ only; guarded so older runtimes degrade to the v1 operator
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        """Per-user running totals on the v2 state API: a typed ValueState
-        variable instead of the v1 single-tuple GroupState. Same integer-
-        cents exactness discipline as ``_accumulate``; the v2 API adds named
-        state variables (Value/List/Map), per-state TTL and timers — the
-        forward-looking surface for custom stateful operators on RocksDB
-        state stores."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "cnt BIGINT, cents BIGINT")
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            prior = self._totals.get()
-            cnt, cents = prior if prior is not None else (0, 0)
-            for pdf in rows:
-                cnt += len(pdf)
-                cents += int((pdf["value"] * 100).round().astype("int64").sum())
-            self._totals.update((cnt, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "event_cnt": [cnt],
-                    "total_value": [cents / 100.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - pre-Spark-4 runtime
-    TotalsProcessor = None  # type: ignore[assignment,misc]
-
-
-def stateful_user_totals_v2(stream: DataFrame) -> DataFrame:
-    """``stateful_user_totals`` on transformWithStateInPandas. Requires the
-    RocksDB state store provider (the v2 API refuses the default HDFS-backed
-    store); callers set ``spark.sql.streaming.stateStore.providerClass``
-    before starting the stream.
-
-    ENVIRONMENT NOTE: the v2 state-server protocol speaks protobuf between
-    the JVM and the Python driver worker; this container ships no
-    ``google.protobuf``, so starting the stream here fails at runner init
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — pinned in
-    tests/test_streaming.py). The operator is wired and correct by
-    construction against the same oracle as ``stateful_user_totals``; on a
-    protobuf-equipped cluster it drains identically."""
-    if TotalsProcessor is None:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas needs Spark 4+")
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        TotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -30,6 +30,11 @@ whose batch would add, drop, rename or retype a stored column raises before
 writing anything — so every bucket shares one schema and reads never merge
 footers.
 
+One NULL-key rule: ``merge``'s LWW dedup groups NULL keys as one key, and
+``changes`` matches keys null-safely (``<=>``), so a stored NULL key is
+updated and diffed like any other. ``read_keys`` and ``delete`` match with
+``=`` and never select a NULL key.
+
 Because every manifest is a COMPLETE bucket map, any retained version is
 directly readable — ``read(version=N)`` is snapshot time travel with no log
 replay, ``history()`` lists versions, and ``vacuum(keep_last=K)`` bounds
@@ -205,11 +210,28 @@ class ParquetUpsertStore:
                 continue  # possibly an in-flight attempt at the next version
             shutil.rmtree(os.path.join(self._data_dir, name), ignore_errors=True)
 
-    # -- public API ---------------------------------------------------------
+    def _manifest(self, version: int | None) -> dict[int, str]:
+        """The bucket map of ``version``, or of the current version when
+        None."""
+        if version is None:
+            return self._current_manifest()[1]
+        return self._load_manifest(version)
 
-    def _bucket_paths(self, buckets: dict[int, str], ids: list[int] | None = None) -> list[str]:
-        wanted = buckets if ids is None else {b: buckets[b] for b in ids if b in buckets}
-        return [os.path.join(self._data_dir, d) for d in wanted.values()]
+    def _read_buckets(
+        self, buckets: dict[int, str], ids: list[int] | None = None
+    ) -> DataFrame | None:
+        """The one reader from a bucket map to rows: the snapshot dirs of
+        ``ids`` (every bucket when None) that ``buckets`` holds, or None
+        when it holds none of them."""
+        if ids is not None:
+            buckets = {b: buckets[b] for b in ids if b in buckets}
+        if not buckets:
+            return None
+        return self.spark.read.parquet(
+            *[os.path.join(self._data_dir, d) for d in buckets.values()]
+        )
+
+    # -- public API ---------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """The committed snapshot, or None if no merge has committed yet.
@@ -220,13 +242,7 @@ class ParquetUpsertStore:
         from the manifest (never inferred from a swallowed read error — a
         transient/corruption failure must surface, not silently reset the
         store to empty)."""
-        if version is None:
-            _, buckets = self._current_manifest()
-        else:
-            buckets = self._load_manifest(version)
-        if not buckets:
-            return None
-        return self.spark.read.parquet(*self._bucket_paths(buckets))
+        return self._read_buckets(self._manifest(version))
 
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame | None:
         """Point lookups by primary key — the reference's Cassandra PK read
@@ -242,21 +258,15 @@ class ParquetUpsertStore:
         job over the key list (no store data touched). For an unbounded
         key set, join ``read()`` instead. Returns None when the store has
         never committed."""
-        if version is None:
-            _, buckets = self._current_manifest()
-        else:
-            buckets = self._load_manifest(version)
+        buckets = self._manifest(version)
         if not buckets:
             return None
         kdf = self.spark.createDataFrame([(k,) for k in keys], [self.key])
-        wanted = sorted(
-            {r[0] for r in kdf.select(self._bucket()).distinct().collect()}
-        )
-        paths = self._bucket_paths(buckets, wanted)
-        if not paths:
+        hits = self._read_buckets(buckets, self._touched(kdf))
+        if hits is None:
             # None of the requested keys' buckets exist in this snapshot.
-            return self.read(version=version).where(F.lit(False))
-        return self.spark.read.parquet(*paths).where(F.col(self.key).isin(keys))
+            return self._read_buckets(buckets).where(F.lit(False))
+        return hits.where(F.col(self.key).isin(keys))
 
     def _changed_buckets(self, v_from: int, v_to: int) -> list[int]:
         """Bucket ids whose snapshot dir differs between two versions — the
@@ -275,15 +285,18 @@ class ParquetUpsertStore:
         changed, the manifest diff bounds the read to TOUCHED buckets —
         O(changed data), never O(store), no matter how far apart the
         versions are. Within those buckets, a left join of the new snapshot
-        against the old on the key classifies each row: ``insert`` (key
-        absent before) or ``update`` (the stored row changed — a NULL-SAFE
+        against the old on the key classifies each row: ``insert`` (no old
+        row) or ``update`` (the stored row changed — a NULL-SAFE
         comparison of the full pre/post structs, so value changes that
-        carry an equal or NULL timestamp still surface); a third anti-join
-        leg surfaces ``delete`` rows (key present before, gone after — the
+        carry an equal or NULL timestamp still surface); an anti-join leg
+        surfaces ``delete`` rows (key present before, gone after — the
         ``delete()`` path), carrying the pre-image values in the data
-        columns the way Delta's CDF does. ``changes(0,
-        N)`` diffs against the empty pre-commit store — the first commit
-        reads as pure inserts. Returns the
+        columns the way Delta's CDF does. Both legs match keys NULL-safely
+        (``<=>``), so a stored NULL key is one key like any other, as in
+        the LWW dedup. A side with no stored bucket reads as the other
+        side with no rows, and the optimizer folds both joins away —
+        ``changes(0, N)`` diffs against the empty pre-commit store and
+        plans as the first commit's rows marked as inserts. Returns the
         post-image plus ``change_type`` and a ``pre_image`` struct (NULL
         for inserts) — pre-images let a downstream incremental view
         RETRACT the replaced contribution and add the new one instead of
@@ -291,59 +304,37 @@ class ParquetUpsertStore:
         changed = self._changed_buckets(v_from, v_to)
         if not changed:
             return None
-        mf = self._load_manifest(v_from)
-        mt = self._load_manifest(v_to)
-        old_paths = [
-            os.path.join(self._data_dir, mf[b]) for b in changed if b in mf
-        ]
-        new_paths = [
-            os.path.join(self._data_dir, mt[b]) for b in changed if b in mt
-        ]
-        if not new_paths:
-            # every changed bucket was emptied — the diff is pure deletes
-            old_full = self.spark.read.parquet(*old_paths)
-            return old_full.select(
-                "*",
-                F.lit("delete").alias("change_type"),
-                F.struct(*[F.col(c) for c in old_full.columns]).alias("pre_image"),
-            )
-        new = self.spark.read.parquet(*new_paths)
-        pre_type = f"struct<{','.join(f'{c}:{t}' for c, t in new.dtypes)}>"
-        if not old_paths:
-            return new.select(
-                "*",
-                F.lit("insert").alias("change_type"),
-                F.lit(None).cast(pre_type).alias("pre_image"),
-            )
-        old_full = self.spark.read.parquet(*old_paths)
-        # Field order matches the post struct — struct comparison is
+        old = self._read_buckets(self._load_manifest(v_from), changed)
+        new = self._read_buckets(self._load_manifest(v_to), changed)
+        if old is None:
+            old = new.where(F.lit(False))
+        if new is None:
+            new = old.where(F.lit(False))
+        cols = new.columns
+        # Both structs list the columns in one order — struct comparison is
         # positional.
-        old = old_full.select(
-            F.col(self.key).alias("__old_key"),
-            F.struct(*[F.col(c) for c in new.columns]).alias("__pre"),
-        )
-        joined = new.join(
-            old, new[self.key] == old["__old_key"], "left"
-        )
-        post = F.struct(*[new[c] for c in new.columns])
-        upserts = joined.select(
-            *[new[c] for c in new.columns],
-            F.when(F.col("__old_key").isNull(), F.lit("insert"))
-            .when(~post.eqNullSafe(F.col("__pre")), F.lit("update"))
-            .otherwise(F.lit("unchanged"))
+        pre = F.col("__pre")
+        upserts = new.join(
+            old.select(
+                F.col(self.key).alias("__old_key"), F.struct(*cols).alias("__pre")
+            ),
+            F.col(self.key).eqNullSafe(F.col("__old_key")),
+            "left",
+        ).select(
+            *cols,
+            F.when(pre.isNull(), F.lit("insert"))
+            .when(~F.struct(*cols).eqNullSafe(pre), F.lit("update"))
             .alias("change_type"),
-            F.when(F.col("__old_key").isNull(), F.lit(None).cast(pre_type))
-            .otherwise(F.col("__pre"))
-            .alias("pre_image"),
-        ).where(F.col("change_type") != "unchanged")
-        deletes = old_full.join(
+            pre.alias("pre_image"),
+        ).where(F.col("change_type").isNotNull())
+        deletes = old.join(
             new.select(F.col(self.key).alias("__new_key")),
-            old_full[self.key] == F.col("__new_key"),
+            F.col(self.key).eqNullSafe(F.col("__new_key")),
             "left_anti",
         ).select(
-            *[old_full[c] for c in new.columns],
+            *cols,
             F.lit("delete").alias("change_type"),
-            F.struct(*[old_full[c] for c in new.columns]).alias("pre_image"),
+            F.struct(*cols).alias("pre_image"),
         )
         return upserts.unionByName(deletes)
 
@@ -365,12 +356,6 @@ class ParquetUpsertStore:
             os.remove(os.path.join(self._manifest_dir, f"v{v:06d}.json"))
         self._gc_unreferenced(include_stages=True)
         return dropped
-
-    def _read_buckets(self, buckets: dict[int, str], ids: list[int]) -> DataFrame | None:
-        paths = self._bucket_paths(buckets, ids)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
 
     def _commit_buckets(
         self,
@@ -499,11 +484,10 @@ class ParquetUpsertStore:
         current = self._read_buckets(buckets, touched)
         if current is None:
             return 0
-        survivors = current.join(key_df, on=self.key, how="left_anti")
-        n_before = current.count()
-        n_after = survivors.count()
-        if n_after == n_before:
+        n = current.join(key_df, on=self.key, how="left_semi").count()
+        if n == 0:
             return 0  # nothing matched: don't burn a version
+        survivors = current.join(key_df, on=self.key, how="left_anti")
         self._commit_buckets(survivors, touched, version, buckets)
-        return n_before - n_after
+        return n
 

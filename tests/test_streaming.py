@@ -698,92 +698,6 @@ def test_events_schema_probe_raises_descriptive_error(tmp_path):
         _events_file_schema(str(tmp_path / "missing_dir"))
 
 
-def test_transform_with_state_v2_wiring(spark, tmp_path):
-    """State API v2 (transformWithStateInPandas): when the runtime has
-    google.protobuf the drained totals must equal the exact batch aggregate
-    (same contract as the v1 operator); in this container protobuf is absent
-    and the stream must fail at Python-runner init with the pinned
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — the documented
-    environment boundary, like the Kafka jar."""
-    import pyspark.errors
-
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.streaming.ingest import (
-        read_events_stream,
-    )
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.streaming.stateful import (
-        stateful_user_totals_v2,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = stateful_user_totals_v2(read_events_stream(spark, sf))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_totals")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            import google.protobuf  # noqa: F401
-
-            has_protobuf = True
-        except ImportError:
-            has_protobuf = False
-        if has_protobuf:
-            q.awaitTermination()
-            got = {
-                r.user_id: (r.event_cnt, round(r.total_value, 2))
-                for r in spark.sql(
-                    "SELECT user_id, max(event_cnt) AS event_cnt,"
-                    " max_by(total_value, event_cnt) AS total_value"
-                    " FROM tws_totals GROUP BY user_id"
-                ).collect()
-            }
-            exp = {
-                r.user_id: (r.cnt, round(r.total, 2))
-                for r in spark.read.parquet(f"{sf}/events.parquet")
-                .groupBy("user_id")
-                .agg(
-                    F.count("*").alias("cnt"),
-                    F.sum(F.col("value").cast("decimal(12,2)"))
-                    .cast("double")
-                    .alias("total"),
-                )
-                .collect()
-            }
-            assert got == exp
-        else:
-            try:
-                q.awaitTermination()
-                raise AssertionError(
-                    "TWS drained without protobuf — env gap closed; "
-                    "promote stateful_user_totals_v2 to a registered query"
-                )
-            except pyspark.errors.exceptions.captured.StreamingQueryException as e:
-                # the captured message carries the runner crash; the
-                # protobuf ImportError root cause lives in the JVM-side
-                # cause chain (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE)
-                msg = str(e)
-                assert (
-                    "TransformWithStateInPySpark driver worker exited" in msg
-                    or "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in msg
-                    or "google.protobuf" in msg
-                )
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-
-
 def test_upsert_store_delete_and_cdf(spark, tmp_path):
     """Right-to-be-forgotten on the keyed store: delete() rewrites only the
     touched buckets, the CDF reports the removed rows as deletes with
@@ -834,6 +748,48 @@ def test_upsert_store_delete_and_cdf(spark, tmp_path):
 
     data = os.listdir(str(tmp_path / "store" / "data"))
     assert all("v000001" not in d for d in data)
+
+
+def test_upsert_store_change_feed_matches_null_keys(spark, tmp_path):
+    """A stored NULL key is one key to the change feed, as it is to the LWW
+    dedup: an unchanged NULL-key row stays out of the feed, and a newer
+    NULL-key row is one update carrying the old row as its pre-image."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.operators import ivm
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.streaming.upsert_sink import (
+        ParquetUpsertStore,
+    )
+
+    store = ParquetUpsertStore(
+        spark, str(tmp_path / "store"), key="k", ts_col="ts", n_buckets=1
+    )
+    schema = "k string, ts bigint, v bigint"
+    store.merge(spark.createDataFrame([(None, 1, 10), ("x", 1, 20)], schema))
+    store.merge(spark.createDataFrame([("y", 1, 31)], schema))
+    assert [(r.k, r.change_type) for r in store.changes(1, 2).collect()] == [
+        ("y", "insert")
+    ]
+
+    store.merge(spark.createDataFrame([(None, 2, 41)], schema))
+    rows = store.changes(2, 3).collect()
+    assert [(r.k, r.v, r.change_type) for r in rows] == [(None, 41, "update")]
+    assert rows[0].pre_image.asDict() == {"k": None, "ts": 1, "v": 10}
+
+    def group_fn(c):
+        return c("v") % 2
+
+    view = ivm.grouped_view(store.read(version=1), group_fn, value_col="v")
+    for v_from in (1, 2):
+        view = ivm.maintain(view, store.changes(v_from, v_from + 1), group_fn, "v")
+    recomputed = ivm.grouped_view(store.read(), group_fn, value_col="v")
+    assert sorted(view.collect()) == sorted(recomputed.collect())
+
+    # The pre-commit side is empty, so the optimizer folds both joins away.
+    first = store.changes(0, 1)
+    assert "Join" not in first._jdf.queryExecution().optimizedPlan().toString()
+    assert {(r.k, r.change_type) for r in first.collect()} == {
+        (None, "insert"),
+        ("x", "insert"),
+    }
 
 
 def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):

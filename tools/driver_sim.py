@@ -9,12 +9,18 @@ Replicates the driver's t2 gate as closely as its round-1 error traces show:
   over all columns (this is what crashes on array-typed columns), then an
   order-insensitive exact value comparison.
 
-Run:  python tools/driver_sim.py [sf_dir] [n_queries]
-Exit code 0 iff every checked query matches.
+Run:  python tools/driver_sim.py [query ...] [--sf sf0.001,sf0.01]
+
+With no query names it checks the first 50 registered queries (the
+driver's window); named queries are checked instead — the fast inner loop
+when developing an operator. ``--sf`` lists fixture dirs under
+/root/testdata (default sf0.01). Exit code 0 iff every checked query
+matches.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -23,8 +29,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-N_CHECK = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+N_CHECK = 50
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -65,6 +70,11 @@ def _values(df: pd.DataFrame) -> list[tuple]:
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("names", nargs="*", help=f"queries to check (default: first {N_CHECK})")
+    ap.add_argument("--sf", default="sf0.01", help="comma-separated fixture dirs")
+    args = ap.parse_args()
+
     from pyspark.sql import SparkSession
 
     spark = (
@@ -75,48 +85,55 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    # file_provenance's oracle embeds a literal fixture path; re-derive it
-    # for this run's SF and re-point the query-side guard to match.
+    unknown = [n for n in args.names if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+    checked = args.names or list(qs)[:N_CHECK]
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (
         profiling,
     )
 
-    osql["file_provenance"] = profiling.provenance_oracle(SF_DIR)
-    profiling.PROV_ORACLE_SF = SF_DIR
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-
-    checked = list(qs)[:N_CHECK]
     failures = []
-    for name in checked:
-        try:
-            sdf = qs[name](spark, SF_DIR)
-            spark_pd = sdf.toPandas()
-            if name not in osql:
-                print(f"{name}: rows-only ({len(spark_pd)} rows)")
-                continue
-            duck_pd = con.sql(osql[name]).df()
-            a, b = _canon(spark_pd), _canon(duck_pd)
-            if len(a) != len(b):
-                failures.append((name, f"row count {len(a)} vs {len(b)}"))
-                continue
-            if list(a.columns) != list(b.columns):
-                failures.append((name, f"columns {list(a.columns)} vs {list(b.columns)}"))
-                continue
-            va, vb = _values(a), _values(b)
-            n_bad = sum(1 for x, y in zip(va, vb) if x != y)
-            if n_bad:
-                first = next((x, y) for x, y in zip(va, vb) if x != y)
-                failures.append((name, f"{n_bad} value mismatches; first {first}"))
-            else:
-                print(f"{name}: OK ({len(a)} rows)")
-        except Exception as ex:
-            failures.append((name, f"ERR {type(ex).__name__}: {str(ex)[:160]}"))
+    for sf in args.sf.split(","):
+        sf_dir = f"/root/testdata/{sf}"
+        # file_provenance's oracle embeds a literal fixture path; re-derive
+        # it for this SF and re-point the query-side guard to match.
+        osql["file_provenance"] = profiling.provenance_oracle(sf_dir)
+        profiling.PROV_ORACLE_SF = sf_dir
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        for name in checked:
+            try:
+                spark_pd = qs[name](spark, sf_dir).toPandas()
+                if name not in osql:
+                    print(f"{sf} {name}: rows-only ({len(spark_pd)} rows)")
+                    continue
+                duck_pd = con.sql(osql[name]).df()
+                a, b = _canon(spark_pd), _canon(duck_pd)
+                if len(a) != len(b):
+                    failures.append((sf, name, f"row count {len(a)} vs {len(b)}"))
+                    continue
+                if list(a.columns) != list(b.columns):
+                    failures.append(
+                        (sf, name, f"columns {list(a.columns)} vs {list(b.columns)}")
+                    )
+                    continue
+                bad = [(x, y) for x, y in zip(_values(a), _values(b)) if x != y]
+                if bad:
+                    failures.append(
+                        (sf, name, f"{len(bad)} value mismatches; first {bad[0]}")
+                    )
+                else:
+                    print(f"{sf} {name}: OK ({len(a)} rows)")
+            except Exception as ex:
+                failures.append((sf, name, f"ERR {type(ex).__name__}: {str(ex)[:160]}"))
+        con.close()
 
     print(f"\nchecked {len(checked)} queries, {len(failures)} failures")
-    for name, why in failures:
-        print(f"  FAIL {name}: {why}")
+    for sf, name, why in failures:
+        print(f"  FAIL {sf} {name}: {why}")
     return 1 if failures else 0
 
 

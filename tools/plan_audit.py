@@ -34,7 +34,7 @@ SF = "/root/testdata/sf0.001"
 
 # file_provenance refuses any sf_dir other than its oracle's pinned fixture
 # dir (loud-skip guard); re-point the guard to the audit SF like
-# check_queries/driver_sim do.
+# tools/driver_sim.py does.
 from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (  # noqa: E402
     profiling as _profiling,
 )
