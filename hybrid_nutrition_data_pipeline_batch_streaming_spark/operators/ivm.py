@@ -30,9 +30,10 @@ changes(1,2) then changes(2,3) equals maintaining once with changes(1,3),
 and both equal the full recompute — contract-tested.
 
 Scale shape: the delta frame is one groupBy over the CDF batch (O(changed
-rows)); the merge into the old view is a single full-outer equi-join on the
-group key — broadcast-able whenever the delta's group set is small, which
-is the common case for incremental batches.
+rows)); the merge into the old view is a single full-outer join on the
+group key, matched null-safely so that a NULL group stays one group —
+broadcast-able whenever the delta's group set is small, which is the
+common case for incremental batches.
 """
 
 from __future__ import annotations
@@ -110,12 +111,13 @@ def maintain(
     drop out, so the maintained view never accretes dead groups."""
     if changes is None:
         return old_view
-    deltas = change_deltas(changes, group_fn, value_col)
-    merged = old_view.join(deltas, "g", "full")
+    deltas = change_deltas(changes, group_fn, value_col).withColumnRenamed("g", "__dg")
+    # NULL is a group like any other: match it null-safely.
+    merged = old_view.join(deltas, old_view["g"].eqNullSafe(F.col("__dg")), "full")
     cnt = (
         F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("dc"), F.lit(0))
     ).alias("cnt")
-    cols = [F.col("g"), cnt]
+    cols = [F.coalesce(old_view["g"], F.col("__dg")).alias("g"), cnt]
     if value_col is not None:
         zero = F.lit(0).cast(MONEY)
         cols.append(

@@ -226,10 +226,7 @@ class QueryScope:
     def release(self) -> None:
         for df in self.frames:
             try:
-                if df.is_cached:
-                    df.unpersist(blocking=False)
-                else:  # a cut: its analyzed plan is a LogicalRDD over the blocks
-                    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+                release(df)
             except Exception:
                 pass  # foreign plan shape / already-stopped context: best effort
         for spark, name in self.views:
@@ -271,6 +268,15 @@ def _own(df: DataFrame) -> DataFrame:
     if scope is not None:
         scope.frames.append(df)
     return df
+
+
+def release(df: DataFrame) -> None:
+    """Free what ``df`` holds: a persisted frame's cache, or a lineage
+    cut's blocks."""
+    if df.is_cached:
+        df.unpersist(blocking=False)
+    else:  # a cut: its analyzed plan is a LogicalRDD over the blocks
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def own_view(spark: SparkSession, name: str) -> None:

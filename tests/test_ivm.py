@@ -80,6 +80,26 @@ def test_ivm_lands_on_full_recompute_per_batch(spark, tmp_path):
     assert 4 not in gs and 3 in gs  # emptied group gone, survivor intact
 
 
+def test_ivm_matches_the_null_group_null_safely(spark, tmp_path):
+    """A NULL group is one group: a view {NULL: 1, 'a': 1} plus one insert
+    into the NULL group is the recompute, with one NULL row of count 2."""
+    store = ParquetUpsertStore(
+        spark, str(tmp_path / "store"), key="item_name", ts_col="ingestion_ts", n_buckets=2
+    )
+
+    def group_fn(c):
+        return c("data")
+
+    store.merge(spark.createDataFrame([("x", TS0, None, 1.0), ("y", TS0, "a", 2.0)], SCHEMA))
+    view = grouped_view(store.read(), group_fn, "amount")
+    assert _rows(view) == {(None, 1, 1), ("a", 1, 2)}
+    store.merge(spark.createDataFrame([("z", TS0, None, 4.0)], SCHEMA))
+
+    view = maintain(view, store.changes(1, 2), group_fn, "amount")
+    assert _rows(view) == _rows(grouped_view(store.read(), group_fn, "amount"))
+    assert [r.cnt for r in view.collect() if r.g is None] == [2]
+
+
 def test_ivm_is_associative_across_version_ranges(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     v1_view = grouped_view(store.read(version=1), _group_fn, "amount")

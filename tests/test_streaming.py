@@ -273,6 +273,62 @@ def test_upsert_store_commit_is_atomic_across_buckets(spark, tmp_path):
     assert on_disk == set(buckets.values())
 
 
+def test_upsert_store_gc_and_vacuum_cover_change_feeds(spark, tmp_path):
+    """Feed dirs live and die with the manifests that name them: a crashed
+    attempt's feed is collected once its version is decided, a feed dir
+    ahead of the committed version (another writer in flight) is spared, a
+    losing racer removes its own feed, and vacuum(keep_last=1) leaves only
+    the live manifest's feed."""
+    import os
+
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.streaming.upsert_sink import (
+        ConcurrentWriteError,
+        ParquetUpsertStore,
+    )
+
+    path = str(tmp_path / "store")
+    feeds_dir = os.path.join(path, "_changes")
+    store = ParquetUpsertStore(spark, path, key="item_name", ts_col="ingestion_ts", n_buckets=4)
+    schema = "item_name string, ingestion_ts timestamp, data string"
+    ts0 = datetime.datetime(2024, 1, 1)
+
+    def batch(hours, data):
+        return spark.createDataFrame(
+            [(f"item{i}", ts0 + datetime.timedelta(hours=hours), data) for i in range(12)],
+            schema,
+        )
+
+    def named():
+        return {store._doc(v)["changes"] for v in store.history()}
+
+    store.merge(batch(0, "v1"))
+    real_commit = store._commit_manifest
+    store._commit_manifest = lambda *a, **k: (_ for _ in ()).throw(OSError("crash"))
+    with pytest.raises(OSError):
+        store.merge(batch(1, "v2"))
+    store._commit_manifest = real_commit
+    assert len(os.listdir(feeds_dir)) == 2  # the crashed attempt's feed is left behind
+
+    in_flight = os.path.join(feeds_dir, "v000099-inflight")
+    os.makedirs(in_flight)
+    store.merge(batch(1, "v2"))  # commits version 2; its GC runs
+    assert set(os.listdir(feeds_dir)) == named() | {"v000099-inflight"}
+
+    loser = ParquetUpsertStore(spark, path, key="item_name", ts_col="ingestion_ts", n_buckets=4)
+    stale = store._current_manifest()
+    store.merge(batch(2, "v3"))
+    loser._current_manifest = lambda: stale
+    with pytest.raises(ConcurrentWriteError):
+        loser.merge(batch(3, "lost"))
+    assert set(os.listdir(feeds_dir)) == named() | {"v000099-inflight"}
+
+    os.rmdir(in_flight)
+    store.vacuum(keep_last=1)
+    assert store.history() == [3]
+    assert set(os.listdir(feeds_dir)) == named()
+    assert len(named()) == 1
+
+
 def test_upsert_store_time_travel_and_vacuum(spark, tmp_path):
     """Every committed manifest is a complete, directly-readable snapshot:
     read(version=N) reproduces the store as of merge N with no log replay,
