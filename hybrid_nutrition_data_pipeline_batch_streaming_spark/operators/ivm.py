@@ -25,6 +25,11 @@ same expression evaluates over post-image columns and over the
     view     = grouped_view(store.read(), group_fn, value_col="amount")
     view2    = maintain(view, store.changes(1, 2), group_fn, "amount")
 
+A group's ``total`` is ``COALESCE(SUM(value), 0)``: a group whose values
+are all NULL totals 0, not NULL. Retract-and-add maintains exactly that
+definition (a NULL contribution adds 0), with no per-group count of
+non-NULL values.
+
 ``maintain`` is associative across version ranges: maintaining with
 changes(1,2) then changes(2,3) equals maintaining once with changes(1,3),
 and both equal the full recompute — contract-tested.
@@ -64,11 +69,13 @@ def grouped_view(
 ) -> DataFrame:
     """Full recompute of the maintained aggregate: (g, cnt[, total]).
 
-    ``total`` accumulates in exact DECIMAL so maintained and recomputed
-    views are bit-identical regardless of partitioning or delta order."""
+    ``total`` is ``COALESCE(SUM(value), 0)`` and accumulates in exact
+    DECIMAL, so maintained and recomputed views are bit-identical
+    regardless of partitioning or delta order."""
     aggs = [F.count(F.lit(1)).alias("cnt")]
     if value_col is not None:
-        aggs.append(F.sum(F.col(value_col).cast(MONEY)).alias("total"))
+        total = F.sum(F.col(value_col).cast(MONEY))
+        aggs.append(F.coalesce(total, F.lit(0).cast(MONEY)).alias("total"))
     return df.groupBy(group_fn(_post).alias("g")).agg(*aggs)
 
 

@@ -272,11 +272,13 @@ def _own(df: DataFrame) -> DataFrame:
 
 def release(df: DataFrame) -> None:
     """Free what ``df`` holds: a persisted frame's cache, or a lineage
-    cut's blocks."""
+    cut's blocks. A cut is freed through its context, not ``RDD.unpersist``,
+    which warns on every locally checkpointed RDD that its lineage is gone."""
     if df.is_cached:
         df.unpersist(blocking=False)
     else:  # a cut: its analyzed plan is a LogicalRDD over the blocks
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def own_view(spark: SparkSession, name: str) -> None:

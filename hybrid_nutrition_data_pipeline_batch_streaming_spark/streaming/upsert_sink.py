@@ -31,10 +31,19 @@ n_buckets)), so a merge
   dirs are garbage-collected by later merges. The commit is transactional
   across buckets.
 
+Every manifest names both ``schema`` and ``changes``: a commit without
+either cannot be made, and a read never infers one.
+
 One schema rule: the first commit fixes the store's schema and records it
 in every manifest. A merge whose batch would add, drop, rename or retype a
 stored column raises before writing anything, and every read passes the
 recorded schema to the parquet reader — no footer merge, no inference job.
+
+One write path: ``delete(keys)`` is a merge of tombstones, the way a
+Cassandra DELETE writes a tombstone through its normal write path. A
+tombstone outranks any row of its key in the one last-write-wins window
+pass; the key leaves the snapshot, and its stored row becomes the feed's
+``delete`` row.
 
 One NULL-key rule: ``merge``'s LWW dedup groups NULL keys as one key, so a
 stored NULL key is updated, and shows in the change feed, like any other.
@@ -63,6 +72,7 @@ import re
 import shutil
 import uuid
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -82,6 +92,17 @@ VERSION_COL = "_commit_version"
 #: versions from in-flight attempts.
 _SNAP_RE = re.compile(r"^b\d+-v(\d+)")
 _FEED_RE = re.compile(r"^v(\d+)")
+
+
+class Manifest(NamedTuple):
+    """One committed store version: ``buckets`` maps bucket id → snapshot
+    dir, ``feed`` names the commit's change-feed dir. ``schema`` and
+    ``feed`` are None only for version 0, the empty store."""
+
+    version: int
+    buckets: dict[int, str]
+    schema: StructType | None
+    feed: str | None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -138,13 +159,17 @@ class ParquetUpsertStore:
             if name.startswith("v") and name.endswith(".json")
         )
 
-    def _doc(self, version: int) -> dict:
-        """Manifest ``version`` as committed. Version 0 is the pre-commit
-        store: a valid, empty snapshot (read() treats it the same way), so
-        changes(0, N) covers the first commit instead of raising
-        FileNotFoundError."""
+    def _manifest(self, version: int | None = None) -> Manifest:
+        """Manifest ``version`` as committed (the latest when None), read
+        once. Version 0 is the pre-commit store: a valid, empty snapshot,
+        so read() and changes(0, N) treat it like any other version.
+        Manifests are written whole and linked into place, so any file
+        present is complete."""
+        if version is None:
+            versions = self._versions()
+            version = versions[-1] if versions else 0
         if version == 0:
-            return {"version": 0, "buckets": {}}
+            return Manifest(0, {}, None, None)
         path = os.path.join(self._manifest_dir, f"v{version:06d}.json")
         if not os.path.isfile(path):
             raise FileNotFoundError(
@@ -152,38 +177,25 @@ class ParquetUpsertStore:
                 f"(retained: {self._versions()}) — it may have been vacuumed"
             )
         with open(path) as fh:
-            return json.load(fh)
+            doc = json.load(fh)
+        return Manifest(
+            version,
+            {int(b): d for b, d in doc["buckets"].items()},
+            StructType.fromJson(doc["schema"]),
+            doc["changes"],
+        )
 
     def _load_manifest(self, version: int) -> dict[int, str]:
         """The bucket map of manifest ``version``: bucket id → snapshot dir."""
-        return {int(b): d for b, d in self._doc(version)["buckets"].items()}
+        return self._manifest(version).buckets
 
-    def _current_manifest(self) -> tuple[int, dict[int, str]]:
-        """(version, bucket id → snapshot dir name). (0, {}) before the
-        first commit. Manifests are written whole and renamed into place,
-        so any file present here is complete."""
-        versions = self._versions()
-        if not versions:
-            return 0, {}
-        return versions[-1], self._load_manifest(versions[-1])
-
-    def _schema(self, version: int, buckets: dict[int, str]) -> StructType | None:
-        """The store's schema as manifest ``version`` records it; None
-        before the first commit. A manifest committed without one (by hand)
-        falls back to reading a bucket's footer."""
-        recorded = self._doc(version).get("schema")
-        if recorded is not None:
-            return StructType.fromJson(recorded)
-        if not buckets:
-            return None
-        return self._read_buckets(buckets, [min(buckets)], None).schema
+    def _current_manifest(self) -> Manifest:
+        """The latest manifest: the one read of it that ``merge`` and
+        ``delete`` make."""
+        return self._manifest()
 
     def _commit_manifest(
-        self,
-        version: int,
-        buckets: dict[int, str],
-        schema: StructType | None = None,
-        changes: str | None = None,
+        self, version: int, buckets: dict[int, str], schema: StructType, changes: str
     ) -> None:
         """The atomic commit point: write the complete manifest to a temp
         name, fsync, then ``link`` into place — link (unlike rename) FAILS
@@ -195,11 +207,12 @@ class ParquetUpsertStore:
         os.makedirs(self._manifest_dir, exist_ok=True)
         final = os.path.join(self._manifest_dir, f"v{version:06d}.json")
         tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
-        doc = {"version": version, "buckets": {str(b): d for b, d in buckets.items()}}
-        if schema is not None:
-            doc["schema"] = schema.jsonValue()
-        if changes is not None:
-            doc["changes"] = changes
+        doc = {
+            "version": version,
+            "buckets": {str(b): d for b, d in buckets.items()},
+            "schema": schema.jsonValue(),
+            "changes": changes,
+        }
         with open(tmp, "w") as fh:
             json.dump(doc, fh)
             fh.flush()
@@ -213,15 +226,6 @@ class ParquetUpsertStore:
             ) from exc
         finally:
             os.unlink(tmp)
-
-    def _referenced_dirs(self) -> set[str]:
-        """Every snapshot dir any RETAINED manifest points at — the live set
-        for GC. Older manifests keep their dirs alive (time travel) until
-        ``vacuum`` drops the manifests themselves."""
-        refs: set[str] = set()
-        for v in self._versions():
-            refs.update(self._load_manifest(v).values())
-        return refs
 
     def _gc_unreferenced(self, include_stages: bool = False) -> None:
         """Drop data and feed dirs no retained manifest references (left
@@ -238,11 +242,11 @@ class ParquetUpsertStore:
         are owned (and removed) by their attempt; only ``vacuum`` — an
         administrative call, documented as not concurrent with writers —
         sweeps crashed leftovers of those."""
-        current, _ = self._current_manifest()
-        feeds = {self._doc(v).get("changes") for v in self._versions()}
+        retained = [self._manifest(v) for v in self._versions()]
+        current = retained[-1].version if retained else 0
         for root, live, pattern in (
-            (self._data_dir, self._referenced_dirs(), _SNAP_RE),
-            (self._changes_dir, feeds, _FEED_RE),
+            (self._data_dir, {d for m in retained for d in m.buckets.values()}, _SNAP_RE),
+            (self._changes_dir, {m.feed for m in retained}, _FEED_RE),
         ):
             if not os.path.isdir(root):
                 continue
@@ -258,30 +262,17 @@ class ParquetUpsertStore:
                     continue  # possibly an in-flight attempt at the next version
                 shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
-    def _snapshot(self, version: int | None) -> tuple[dict[int, str], StructType | None]:
-        """The bucket map and schema of ``version``, or of the current
-        version when None."""
-        if version is None:
-            version, buckets = self._current_manifest()
-        else:
-            buckets = self._load_manifest(version)
-        return buckets, self._schema(version, buckets)
-
-    def _read_buckets(
-        self,
-        buckets: dict[int, str],
-        ids: list[int] | None,
-        schema: StructType | None,
-    ) -> DataFrame | None:
-        """The one reader from a bucket map to rows: the snapshot dirs of
-        ``ids`` (every bucket when None) that ``buckets`` holds, read with
-        the store's ``schema``; None when it holds none of them."""
+    def _read_buckets(self, m: Manifest, ids: list[int] | None) -> DataFrame | None:
+        """The one reader from a manifest to rows: the snapshot dirs of
+        ``ids`` (every bucket when None) that ``m`` holds, read with its
+        schema; None when it holds none of them."""
+        buckets = m.buckets
         if ids is not None:
             buckets = {b: buckets[b] for b in ids if b in buckets}
         if not buckets:
             return None
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(*[os.path.join(self._data_dir, d) for d in buckets.values()])
+        dirs = [os.path.join(self._data_dir, d) for d in buckets.values()]
+        return self.spark.read.schema(m.schema).parquet(*dirs)
 
     # -- public API ---------------------------------------------------------
 
@@ -294,8 +285,7 @@ class ParquetUpsertStore:
         from the manifest (never inferred from a swallowed read error — a
         transient/corruption failure must surface, not silently reset the
         store to empty)."""
-        buckets, schema = self._snapshot(version)
-        return self._read_buckets(buckets, None, schema)
+        return self._read_buckets(self._manifest(version), None)
 
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame | None:
         """Point lookups by primary key — the reference's Cassandra PK read
@@ -312,19 +302,19 @@ class ParquetUpsertStore:
         building the frame launches no Spark job. For an unbounded key set,
         join ``read()`` instead. Returns None when the store has never
         committed."""
-        buckets, schema = self._snapshot(version)
-        if not buckets:
+        m = self._manifest(version)
+        if not m.buckets:
             return None
         ids: list[int] = []
         if keys:
             values = ", ".join("(?)" for _ in keys)
             kdf = self.spark.sql(f"SELECT * FROM VALUES {values} AS t(k)", args=list(keys))
-            hashed = kdf.select(self._bucket(F.col("k").cast(schema[self.key].dataType)))
+            hashed = kdf.select(self._bucket(F.col("k").cast(m.schema[self.key].dataType)))
             ids = sorted({r[0] for r in hashed.collect()})
-        hits = self._read_buckets(buckets, ids, schema)
+        hits = self._read_buckets(m, ids)
         if hits is None:
             # None of the requested keys' buckets exist in this snapshot.
-            return self._read_buckets(buckets, None, schema).where(F.lit(False))
+            return self._read_buckets(m, None).where(F.lit(False))
         return hits.where(F.col(self.key).isin(keys))
 
     def _changed_buckets(self, v_from: int, v_to: int) -> list[int]:
@@ -362,23 +352,13 @@ class ParquetUpsertStore:
         None iff the two manifests reference the same snapshot dirs;
         otherwise a DataFrame, empty when the commits rewrote rows without
         changing them (a replayed micro-batch)."""
-        if not self._changed_buckets(v_from, v_to):
+        first = self._manifest(v_from)
+        commits = [self._manifest(v) for v in range(v_from + 1, v_to + 1)]
+        if not commits or commits[-1].buckets == first.buckets:
             return None
-        feeds = []
-        prev = self._load_manifest(v_from)
-        for v in range(v_from + 1, v_to + 1):
-            doc = self._doc(v)
-            buckets = self._load_manifest(v)
-            if "changes" in doc:
-                feeds.append(os.path.join(self._changes_dir, doc["changes"]))
-            elif buckets != prev:
-                raise ValueError(
-                    f"version {v} of the store at {self.path!r} changed its "
-                    "buckets but records no change feed"
-                )
-            prev = buckets
-        schema = self._schema(v_to, prev)
+        schema = commits[-1].schema
         cols = schema.fieldNames()
+        feeds = [os.path.join(self._changes_dir, m.feed) for m in commits]
         feed = self.spark.read.schema(_feed_schema(schema)).parquet(*feeds)
         if len(feeds) == 1:  # one commit: each key changed at most once
             return feed.drop(VERSION_COL)
@@ -418,20 +398,12 @@ class ParquetUpsertStore:
         self._gc_unreferenced(include_stages=True)
         return dropped
 
-    def _commit(
-        self,
-        rows: DataFrame,
-        feed: DataFrame,
-        touched: list[int],
-        version: int,
-        buckets: dict[int, str],
-        schema: StructType,
-    ) -> None:
-        """Rewrite the ``touched`` buckets from ``rows`` (the data columns
-        plus BUCKET_COL, already partitioned by it), write ``feed`` as the
-        commit's change feed, and commit both as manifest ``version + 1``,
-        then GC. A touched bucket with no rows left drops out of the
-        manifest.
+    def _commit(self, cut: DataFrame, touched: list[int], m: Manifest, schema: StructType) -> None:
+        """Commit ``cut``, the ``_winners`` of the ``touched`` buckets, as
+        version ``m.version + 1``, then GC: its live rows (already
+        partitioned by BUCKET_COL) rewrite those buckets, and its rows with
+        a ``change_type`` become the commit's change feed. A touched bucket
+        with no rows left drops out of the manifest.
 
         Both are written into ``.stage-{attempt}`` workspaces, which GC
         leaves alone, and renamed into place once complete. The feed is a
@@ -444,21 +416,28 @@ class ParquetUpsertStore:
         files; the put-if-absent manifest link alone decides the winner, and
         the loser's dirs (removed on the spot, or by later GC) were never
         visible to any reader."""
-        new_version = version + 1
+        cols = schema.fieldNames()
+        new_version = m.version + 1
         attempt = uuid.uuid4().hex[:8]
         stage = os.path.join(self._data_dir, f".stage-{attempt}")
         feed_stage = os.path.join(self._changes_dir, f".stage-{attempt}")
         feed_name = f"v{new_version:06d}-{attempt}"
         written: list[str] = []
-        feed = feed.withColumn(VERSION_COL, F.lit(new_version).cast(LongType())).coalesce(1)
+        rows = cut.where(~F.col("__gone")).select(*cols, BUCKET_COL)
+        feed = cut.where(F.col("change_type").isNotNull()).select(
+            *cols,
+            "change_type",
+            "pre_image",
+            F.lit(new_version).cast(LongType()).alias(VERSION_COL),
+        )
         try:
             _at_once(
                 lambda: rows.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage),
-                lambda: feed.write.parquet(feed_stage),
+                lambda: feed.coalesce(1).write.parquet(feed_stage),
             )
             written.append(os.path.join(self._changes_dir, feed_name))
             os.rename(feed_stage, written[0])
-            new_buckets = dict(buckets)
+            new_buckets = dict(m.buckets)
             for b in touched:
                 stage_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
                 if not os.path.isdir(stage_dir):
@@ -519,17 +498,62 @@ class ParquetUpsertStore:
                 "first commit fixes the store's columns and types"
             )
 
+    def _winners(
+        self, new: DataFrame, touched: list[int], m: Manifest, schema: StructType
+    ) -> DataFrame:
+        """The one last-write-wins pass of ``merge`` and ``delete``: each
+        key's winner over the ``new`` rows (``__gone`` true for a
+        tombstone) and the stored rows of the ``touched`` buckets, with its
+        change against the stored row.
+
+        After a repartition by bucket, one window on (bucket, key) ranks a
+        tombstone first, then the latest ``ts_col``, then a new row over a
+        stored one on a tie, and carries the key's stored row along as its
+        pre-image. A tombstone winner takes its pre-image's values and
+        ``change_type`` ``delete``, or no change when the key was not
+        stored; any other winner is an ``insert`` (no pre-image), an
+        ``update`` (differs null-safely from its pre-image) or unchanged
+        (NULL)."""
+        cols = schema.fieldNames()
+        bucket = self._bucket().alias(BUCKET_COL)
+        rows = new.select(*cols, "__gone", bucket, F.lit(False).alias("__old"))
+        stored = self._read_buckets(m, touched)
+        if stored is not None:
+            kept = F.lit(False).alias("__gone")
+            rows = stored.select(*cols, kept, bucket, F.lit(True).alias("__old")).union(rows)
+        post = F.struct(*cols)
+        key = Window.partitionBy(BUCKET_COL, self.key).orderBy(
+            F.desc("__gone"), F.desc(self.ts_col), "__old"
+        )
+        whole_key = key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ranked = rows.repartition(self._partitions(touched), BUCKET_COL).select(
+            *cols,
+            "__gone",
+            BUCKET_COL,
+            F.row_number().over(key).alias("__rn"),
+            F.first(F.when(F.col("__old"), post), ignorenulls=True).over(whole_key).alias("__pre"),
+        )
+        pre, gone = F.col("__pre"), F.col("__gone")
+        changed = ~post.eqNullSafe(pre)
+        return ranked.where(F.col("__rn") == 1).select(
+            *[F.when(gone, pre[c]).otherwise(F.col(c)).alias(c) for c in cols],
+            gone,
+            BUCKET_COL,
+            F.when(gone, F.when(pre.isNotNull(), F.lit("delete")))
+            .when(pre.isNull(), F.lit("insert"))
+            .when(changed, F.lit("update"))
+            .alias("change_type"),
+            F.when(gone | changed, pre).alias("pre_image"),
+        )
+
     def merge(self, batch: DataFrame) -> None:
-        """LWW-merge one micro-batch: read touched buckets, then one window
-        pass over the stored rows (tagged old) and the batch (tagged new),
-        partitioned by bucket, picks each key's winner — the latest
-        ``ts_col``, a batch row over a stored row on a tie — and carries the
-        key's stored row along as its pre-image. Winners become the new
-        snapshot dirs; winners that differ (null-safely) from their
-        pre-image, or have none, become the commit's change feed. Both
-        commit in one manifest (``_commit``: attempt-unique names,
-        put-if-absent manifest link). A replayed batch rewrites its buckets
-        with an empty feed.
+        """LWW-merge one micro-batch through the one window pass
+        (``_winners``) over the batch and the stored rows of the buckets it
+        touches. Winners become the new snapshot dirs; winners that differ
+        (null-safely) from their pre-image, or have none, become the
+        commit's change feed. Both commit in one manifest (``_commit``:
+        attempt-unique names, put-if-absent manifest link). A replayed
+        batch rewrites its buckets with an empty feed.
 
         The batch is persisted for the call and released on return, so its
         source and any enrichment upstream run once, not once per action
@@ -539,101 +563,58 @@ class ParquetUpsertStore:
             touched = self._touched(batch)
             if not touched:
                 return
-            version, buckets = self._current_manifest()
-            schema = self._schema(version, buckets)
-            if schema is None:
-                schema = batch.schema  # the first commit fixes the schema
+            m = self._current_manifest()
+            # the first commit fixes the schema
+            schema = batch.schema if m.schema is None else m.schema
             self._check_schema(schema, batch.schema)
-            cols = schema.fieldNames()
-            bucket = self._bucket().alias(BUCKET_COL)
-            rows = batch.select(*cols, bucket, F.lit(False).alias("__old"))
-            current = self._read_buckets(buckets, touched, schema)
-            if current is not None:
-                rows = current.select(*cols, bucket, F.lit(True).alias("__old")).union(rows)
-            post = F.struct(*cols)
-            key = Window.partitionBy(BUCKET_COL, self.key).orderBy(F.desc(self.ts_col), "__old")
-            whole_key = key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ranked = (
-                rows.repartition(self._partitions(touched), BUCKET_COL)
-                .select(
-                    *cols,
-                    BUCKET_COL,
-                    F.row_number().over(key).alias("__rn"),
-                    F.first(F.when(F.col("__old"), post), ignorenulls=True)
-                    .over(whole_key)
-                    .alias("__pre"),
-                )
-            )
-            pre = F.col("__pre")
-            changed = ~post.eqNullSafe(pre)
-            winners = ranked.where(F.col("__rn") == 1).select(
-                *cols,
-                BUCKET_COL,
-                F.when(pre.isNull(), F.lit("insert"))
-                .when(changed, F.lit("update"))
-                .alias("change_type"),
-                F.when(changed, pre).alias("pre_image"),
-            )
-            with _cut(winners) as cut:
-                self._commit(
-                    cut.select(*cols, BUCKET_COL),
-                    cut.where(F.col("change_type").isNotNull()).drop(BUCKET_COL),
-                    touched,
-                    version,
-                    buckets,
-                    schema,
-                )
+            new = batch.select(*schema.fieldNames(), F.lit(False).alias("__gone"))
+            with _cut(self._winners(new, touched, m, schema)) as cut:
+                self._commit(cut, touched, m, schema)
         finally:
             batch.unpersist()
 
     def delete(self, keys: DataFrame) -> int:
-        """Key-targeted delete (GDPR / right-to-be-forgotten): rewrite ONLY
-        the buckets the keys hash into, without the matched rows, and
-        commit a new manifest version whose change feed holds the matched
-        rows as ``delete`` rows with their pre-images — O(touched buckets),
-        never O(store). A bucket left empty drops out of the manifest
-        entirely. Time travel still serves pre-delete versions until
-        ``vacuum()`` removes them — the physical-erasure step a real
-        forgetting workflow must run (same two-phase contract as Delta
-        DELETE + VACUUM). Returns the number of rows removed; no-op (no new
-        version) when nothing matched.
+        """Key-targeted delete (GDPR / right-to-be-forgotten): a merge of
+        one tombstone per distinct non-NULL key, cast to the stored key
+        type so it hashes to the bucket its row is in. It rewrites ONLY the
+        buckets the keys hash into, without the matched rows, and commits a
+        new manifest version whose change feed holds the matched rows as
+        ``delete`` rows with their pre-images — O(touched buckets), never
+        O(store). A bucket left empty drops out of the manifest entirely.
+        Time travel still serves pre-delete versions until ``vacuum()``
+        removes them — the physical-erasure step a real forgetting workflow
+        must run (same two-phase contract as Delta DELETE + VACUUM). Returns
+        the number of rows removed; no-op (no new version) when nothing
+        matched.
 
         Concurrency: same attempt-unique staging + put-if-absent manifest
         commit as ``merge()`` — a racing writer loses loudly with
         ConcurrentWriteError and the store stays consistent."""
-        key_df = keys.select(F.col(self.key)).distinct()
-        touched = self._touched(key_df)
-        if not touched:
+        m = self._current_manifest()
+        if not m.buckets:
             return 0
-        version, buckets = self._current_manifest()
-        schema = self._schema(version, buckets)
-        current = self._read_buckets(buckets, touched, schema)
-        if current is None:
-            return 0
-        cols = schema.fieldNames()
-        hit = F.col("__hit").isNotNull()
-        rows = (
-            current.join(
-                key_df.select(F.col(self.key).alias("__hit")),
-                F.col(self.key) == F.col("__hit"),
-                "left",
-            )
-            .withColumn(BUCKET_COL, self._bucket())
-            .repartition(self._partitions(touched), BUCKET_COL)
+        key = F.col(self.key).cast(m.schema[self.key].dataType).alias(self.key)
+        tombstones = (
+            keys.select(key)
+            .where(F.col(self.key).isNotNull())
+            .distinct()
             .select(
-                *cols,
-                BUCKET_COL,
-                F.when(hit, F.lit("delete")).alias("change_type"),
-                F.when(hit, F.struct(*cols)).alias("pre_image"),
+                *[
+                    F.col(f.name) if f.name == self.key
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in m.schema.fields
+                ],
+                F.lit(True).alias("__gone"),
             )
         )
-        with _cut(rows) as cut:
-            gone = cut.where(F.col("change_type").isNotNull()).drop(BUCKET_COL)
-            n = gone.count()
+        touched = self._touched(tombstones)
+        if not touched:
+            return 0
+        with _cut(self._winners(tombstones, touched, m, m.schema)) as cut:
+            n = cut.where(F.col("change_type") == "delete").count()
             if n == 0:
                 return 0  # nothing matched: don't burn a version
-            survivors = cut.where(F.col("change_type").isNull()).select(*cols, BUCKET_COL)
-            self._commit(survivors, gone, touched, version, buckets, schema)
+            self._commit(cut, touched, m, m.schema)
             return n
 
 

@@ -31,8 +31,7 @@ def oracle_changes(store, v_from, v_to):
         return None
 
     def side(v):
-        buckets = store._load_manifest(v)
-        return store._read_buckets(buckets, changed, store._schema(v, buckets))
+        return store._read_buckets(store._manifest(v), changed)
 
     old, new = side(v_from), side(v_to)
     if old is None:
@@ -255,8 +254,63 @@ def test_recorded_schema_rejects_drift_before_any_write(spark, tmp_path):
     assert on_disk() == before
 
     store.delete(spark.createDataFrame([("a",), ("b",)], "k string"))
-    assert store._current_manifest()[1] == {}
+    assert store._current_manifest().buckets == {}
     before = on_disk()
     with pytest.raises(ValueError, match="does not match the schema"):
         store.merge(spark.createDataFrame([("c", 1, 1, "x", 0.5)], SCHEMA + ", w double"))
     assert on_disk() == before
+
+
+def test_delete_hashes_keys_in_the_stored_key_type(spark, tmp_path):
+    """Tombstones are cast to the stored key type before they are hashed:
+    an int key frame deletes from a bigint store. (xxhash64 of an int
+    differs from that of a bigint, so an uncast key picks the wrong
+    bucket and its row survives.)"""
+    store = ParquetUpsertStore(spark, str(tmp_path / "store"), key="k", ts_col="ts", n_buckets=16)
+    rows = [(k, 1, str(k)) for k in range(40)]
+    store.merge(spark.createDataFrame(rows, "k bigint, ts bigint, v string"))
+
+    assert store.delete(spark.createDataFrame([(3,), (7,), (11,), (None,)], "k int")) == 3
+    assert {r.k for r in store.read().collect()} == set(range(40)) - {3, 7, 11}
+    feed = store.changes(1, 2).collect()
+    assert sorted((r.k, r.v, r.change_type, r.pre_image.k) for r in feed) == [
+        (3, "3", "delete", 3),
+        (7, "7", "delete", 7),
+        (11, "11", "delete", 11),
+    ]
+
+
+def test_store_frees_every_rdd_it_persists(spark, tmp_path):
+    """merge persists its batch and both merge and delete cut their window
+    pass; on return none of them is left in the context's persistent RDDs."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    store = ParquetUpsertStore(spark, str(tmp_path / "store"), key="k", ts_col="ts", n_buckets=4)
+    store.merge(spark.createDataFrame([(f"k{i}", 1, i, "x") for i in range(20)], SCHEMA))
+    assert store.delete(spark.createDataFrame([("k1",), ("k2",)], "k string")) == 2
+    assert store.history() == [1, 2]
+    assert set(persistent().keys()) <= before
+
+
+def test_benchmark_store_hooks_read_the_store(spark, tmp_path, monkeypatch):
+    """``perfbench/common.py::store_writes`` reads the store through its
+    manifest helpers; a store change that breaks them fails here, not in a
+    traced benchmark run."""
+    import importlib.util
+    import sys
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "common.py")
+    monkeypatch.setattr(sys, "dont_write_bytecode", True)  # leave perfbench/ as it is
+    spec = importlib.util.spec_from_file_location("perfbench_common", path)
+    common = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(common)
+
+    store = ParquetUpsertStore(spark, str(tmp_path / "store"), key="k", ts_col="ts", n_buckets=4)
+    store.merge(spark.createDataFrame([(f"k{i}", 1, i, "x") for i in range(20)], SCHEMA))
+    assert store.delete(spark.createDataFrame([("k1",)], "k string")) == 1
+    written, buckets = common.store_writes(store, 0, store.history()[-1])
+    assert buckets == [4, 1]
+    on_disk = 0
+    for root, _dirs, files in os.walk(os.path.join(store.path, "data")):
+        on_disk += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    assert 0 < written == on_disk

@@ -100,6 +100,25 @@ def test_ivm_matches_the_null_group_null_safely(spark, tmp_path):
     assert [r.cnt for r in view.collect() if r.g is None] == [2]
 
 
+def test_ivm_total_of_an_all_null_group_is_zero(spark, tmp_path):
+    """A group whose values are all NULL totals 0 in the recompute and in
+    the maintained view alike."""
+    store = ParquetUpsertStore(
+        spark, str(tmp_path / "store"), key="item_name", ts_col="ingestion_ts", n_buckets=2
+    )
+
+    def group_fn(c):
+        return c("data")
+
+    store.merge(spark.createDataFrame([("a", TS0, "x", 1.0)], SCHEMA))
+    view = grouped_view(store.read(), group_fn, "amount")
+    store.merge(spark.createDataFrame([("b", TS0, "y", None)], SCHEMA))
+
+    view = maintain(view, store.changes(1, 2), group_fn, "amount")
+    assert _rows(view) == _rows(grouped_view(store.read(), group_fn, "amount"))
+    assert _rows(view) == {("x", 1, 1), ("y", 1, 0)}
+
+
 def test_ivm_is_associative_across_version_ranges(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     v1_view = grouped_view(store.read(version=1), _group_fn, "amount")

@@ -199,7 +199,7 @@ def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
     )
     store.merge(seed)
     before = snapshot(os.path.join(store.path, "data"))
-    _, buckets_before = store._current_manifest()
+    buckets_before = store._current_manifest().buckets
     assert len(buckets_before) > 1  # the point of the test needs >1 bucket
 
     update = spark.createDataFrame(
@@ -208,7 +208,7 @@ def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
     )
     store.merge(update)
     after = snapshot(os.path.join(store.path, "data"))
-    _, buckets_after = store._current_manifest()
+    buckets_after = store._current_manifest().buckets
 
     # Exactly one bucket got a new snapshot dir; every other bucket's
     # manifest entry AND on-disk files are unchanged byte-for-byte.
@@ -266,9 +266,9 @@ def test_upsert_store_commit_is_atomic_across_buckets(spark, tmp_path):
     import os as _os
 
     on_disk = set(_os.listdir(_os.path.join(store.path, "data")))
-    assert on_disk == store._referenced_dirs()
+    assert on_disk == {d for v in store.history() for d in store._load_manifest(v).values()}
     store.vacuum(keep_last=1)
-    _, buckets = store._current_manifest()
+    buckets = store._current_manifest().buckets
     on_disk = set(_os.listdir(_os.path.join(store.path, "data")))
     assert on_disk == set(buckets.values())
 
@@ -299,7 +299,7 @@ def test_upsert_store_gc_and_vacuum_cover_change_feeds(spark, tmp_path):
         )
 
     def named():
-        return {store._doc(v)["changes"] for v in store.history()}
+        return {store._manifest(v).feed for v in store.history()}
 
     store.merge(batch(0, "v1"))
     real_commit = store._commit_manifest
@@ -430,11 +430,11 @@ def test_upsert_store_concurrent_commit_loses_loudly(spark, tmp_path):
         )
     )
     # Writer A wins version 2.
-    _, buckets = store._current_manifest()
-    store._commit_manifest(2, buckets)
+    _, buckets, schema, feed = store._current_manifest()
+    store._commit_manifest(2, buckets, schema, feed)
     # Writer B raced to the same version and must lose LOUDLY.
     with pytest.raises(ConcurrentWriteError, match="another writer"):
-        store._commit_manifest(2, buckets)
+        store._commit_manifest(2, buckets, schema, feed)
     # A retried merge sees the winner's manifest and commits the next
     # version on top of it.
     store.merge(
@@ -533,7 +533,7 @@ def test_upsert_store_read_raises_on_corrupt_store(spark, tmp_path):
         )
     )
     # Corrupt a manifest-referenced data file in place.
-    _, buckets = store._current_manifest()
+    buckets = store._current_manifest().buckets
     snap_dir = tmp_path / "store" / "data" / next(iter(buckets.values()))
     part = next(p for p in os.listdir(snap_dir) if p.endswith(".parquet"))
     (snap_dir / part).write_bytes(b"not a parquet file")
@@ -659,14 +659,14 @@ def test_upsert_store_racing_full_merges_never_clobber(spark, tmp_path):
     # every manifest-referenced dir still exists and every row reads "winner".
     import os
 
-    _, buckets = writer_a._current_manifest()
+    buckets = writer_a._current_manifest().buckets
     for d in buckets.values():
         assert os.path.isdir(os.path.join(path, "data", d)), f"committed dir {d} was clobbered"
     rows = writer_a.read().collect()
     assert {r.data for r in rows} == {"winner"}
     assert len(rows) == 8
     # The loser's attempt-unique dirs are gone (cleaned on the spot or by GC).
-    _, live = writer_a._current_manifest()
+    live = writer_a._current_manifest().buckets
     on_disk = set(os.listdir(os.path.join(path, "data")))
     assert set(live.values()) <= on_disk
     assert not any(d.startswith(".stage-") for d in on_disk)
