@@ -94,6 +94,13 @@ from . import geo  # noqa: F401,E402
 # doc_tf rule-2 seats, then mm_audio_energy, mm_caption_align,
 # mm_decode_bmp, mm_decode_wav, corpus_quota_split, dsir_resample
 # onward — head the r13 rule-3 backlog).
+#
+# Since r13, two more rule-2 seats: cluster_centroids and
+# lang_confusion_matrix, whose plans changed expression form when the
+# k-means primitives and the language-ID rule each moved into one shared
+# function (rows unchanged; see tools/plan_manifest.py). They take the last
+# two rule-3 seats, so stream_topk_live and stream_cusum_live join the
+# rule-3 backlog until the full r12+r13 rotation lands.
 PRIORITY: tuple[str, ...] = (
     # -- 5 core regressions (driver-green r1-r11) --
     "flagship_revenue",
@@ -111,6 +118,9 @@ PRIORITY: tuple[str, ...] = (
     "search_prf_expand",
     "tfidf_terms",
     "similarity_maxsim",
+    # -- rule 2: plan changed after r13 (shared curation rules) --
+    "cluster_centroids",
+    "lang_confusion_matrix",
     # -- standing rows-only driver rows (no oracle by design) --
     "stream_dedup_state",
     "mm_decode_features",
@@ -135,7 +145,7 @@ PRIORITY: tuple[str, ...] = (
     "eval_gains_lift",
     "geo_hub_assign",
     "geo_grid_hotspots",
-    # -- rule 3 cont.: first 19 of the r5-age cohort (registry order) --
+    # -- rule 3 cont.: first 12 of the r5-age cohort (registry order) --
     "join_asof_nearest",
     "pareto_frontier",
     "top_supplier_revenue",
@@ -148,8 +158,6 @@ PRIORITY: tuple[str, ...] = (
     "dedup_incremental",
     "dedup_lines",
     "stream_sliding_live",
-    "stream_topk_live",
-    "stream_cusum_live",
 )
 
 #: Window seats that intentionally carry NO oracle (genuinely

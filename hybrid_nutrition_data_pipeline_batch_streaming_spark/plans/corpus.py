@@ -35,13 +35,11 @@ from .dedup import (
 )
 from .graph import connected_components, doc_pair_edges
 from .text import (
-    _EN_MARKERS,
-    _ES_MARKERS,
     _EN_SCORE_SQL,
     _ES_SCORE_SQL,
     _STOP_LIST_SQL,
-    _STOPWORDS,
-    _occurrences,
+    _lang_scores,
+    _quality_scores,
 )
 from .curation import _PACK_CTE_SQL, _PACK_SHARD_SQL, pack_next_fit
 
@@ -50,34 +48,16 @@ def corpus_gate_survivors(cat: Catalog) -> DataFrame:
     """Stages 1-3 of the corpus build — quality gate, language gate, exact
     dedup — as one deterministic map + one window shuffle over ``documents``:
     the canonical survivor set ``(doc_id, source, text, n_tok)``.
-    ``pipeline_drop_reasons`` replays the same gates inline, because it
-    also reports each dropped document's reason."""
+    ``pipeline_drop_reasons`` applies the same gate functions to every
+    document, because it also reports each dropped document's reason."""
     toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
-    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
-    pred_lang = (
-        F.when((en >= es) & (en > 0), F.lit("en"))
-        .when(es > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-    )
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_ratio = (
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).cast("double")
-        / n
-    )
-    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    quality = (
-        F.when(n.between(20, 400), 1).otherwise(0)
-        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
-        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
-    )
+    _, _, pred_lang = _lang_scores()
+    _, _, quality = _quality_scores(toks)
     gated = cat.documents.select(
         "doc_id",
         "source",
         "text",
-        n.alias("n_tok"),
+        F.size(toks).alias("n_tok"),
         F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"),
     ).where((quality >= 2) & (pred_lang == "en"))
     w = Window.partitionBy("text_hash").orderBy("doc_id")
@@ -392,26 +372,8 @@ def pipeline_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic in both engines."""
     cat = Catalog(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
-    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
-    pred_lang = (
-        F.when((en >= es) & (en > 0), F.lit("en"))
-        .when(es > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-    )
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_ratio = (
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).cast("double")
-        / n
-    )
-    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    quality = (
-        F.when(n.between(20, 400), 1).otherwise(0)
-        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
-        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
-    )
+    _, _, pred_lang = _lang_scores()
+    _, _, quality = _quality_scores(toks)
     base = cat.documents.select(
         "doc_id",
         "text",

@@ -45,6 +45,17 @@ from pyspark.sql.window import Window
 
 from ..catalog import Catalog
 from ..operators.blocking import capped_blocking_join, capped_pair_sql
+from ..operators.clustering import (
+    _dot,
+    _dot_s,
+    _norm,
+    _norm_s,
+    cell_means,
+    cell_scores,
+    nearest_cell,
+    seed_centroids,
+    update_centroids,
+)
 from ..session import checkpoint_truncate, persist
 from .registry import ORACLE, query
 
@@ -59,61 +70,24 @@ def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left fold of the elementwise product — bit-deterministic."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
 def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-# Static unrolled twins of _dot/_norm for FIXED-width arrays (r12, guide §4.1):
-# Spark's higher-order aggregate/zip_with lambdas are CodegenFallback — every
-# row pays interpreted per-step evaluation (the embedding family's measured
-# exec cost was dominated by these folds on broadcast-join outputs). A static
-# `0.0 + x[0]*y[0] + x[1]*y[1] + ...` chain is the IDENTICAL left-fold IEEE
-# operation sequence — including the leading 0.0 (sign-of-zero) — but
-# whole-stage-codegen compiles it. Built as ONE SQL string (one py4j call,
-# the simhash r12 precedent) instead of ~4·dim Column-method round trips.
-# Callers pass column NAMES or a per-element template containing ``{i}``
-# (e.g. the raw-scan form below); dims are structural constants of each
-# plan, so out-of-range subscripts cannot occur.
-#
-# PLACEMENT RULE (measured, r12): never point a chain at an array alias
-# computed in the ADJACENT projection — CollapseProject merges the two
-# Projects and inlines one full copy of the array-building expression per
-# subscript (64× for a transform()). Chains are safe when their input is a
-# leaf scan column, sits behind a join/exchange/persist barrier, or uses
-# the per-element raw template so each term touches only the scan column.
-def _elem(x: str, i: int) -> str:
-    return x.format(i=i) if "{i}" in x else f"{x}[{i}]"
-
-
-def _dot_s(x: str, y: str, dim: int = EMB_DIM) -> Column:
-    return F.expr(
-        "0.0D + " + " + ".join(f"{_elem(x, i)} * {_elem(y, i)}" for i in range(dim))
-    )
-
-
-def _norm_s(x: str, dim: int = EMB_DIM) -> Column:
-    return F.expr(
-        "sqrt(0.0D + "
-        + " + ".join(f"{_elem(x, i)} * {_elem(x, i)}" for i in range(dim))
-        + ")"
-    )
 
 
 #: Per-element template for norms taken straight off the embeddings scan —
 #: identical values to ``_norm(_to_double(embedding))`` (cast each element
 #: to double, multiply, left-fold) without materializing the double array.
 _RAW_E = "CAST(embedding[{i}] AS DOUBLE)"
+
+
+def _vectors(cat: Catalog) -> DataFrame:
+    """The embeddings as the k-means ``base`` frame (vec_id, e, n): the
+    double array and its norm, taken straight off the scan."""
+    return cat.embeddings.select(
+        "vec_id",
+        _to_double(F.col("embedding")).alias("e"),
+        _norm_s(_RAW_E, EMB_DIM).alias("n"),
+    )
 
 
 # DuckDB twins (expressions over DOUBLE[] columns {x}, {y}).
@@ -166,11 +140,11 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (identical fold), ~3× less array work in the pairwise stage.
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E).alias("qn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E).alias("cn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
     )
     scored = (
         F.broadcast(q)
@@ -308,7 +282,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             e.alias("e"),
             *[_band_bucket_raw(b).alias(f"b{b}") for b in range(N_BANDS)],
-            _norm_s(_RAW_E).alias("n"),
+            _norm_s(_RAW_E, EMB_DIM).alias("n"),
         )
     )
     q = base.where(F.col("vec_id") < N_QUERIES).select(
@@ -767,29 +741,11 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     # r12: eager cut (was a lazy persist) — corpus, centroid set and both
     # rescore sides materialize concurrently and raced to fill it.
-    base = checkpoint_truncate(
-        cat.embeddings.select(
-            "vec_id",
-            _to_double(F.col("embedding")).alias("e"),
-            _norm_s(_RAW_E).alias("n"),
-        )
-    )
-    cent = base.where(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n").alias("cn")
-    )
-    # Nearest cell per corpus vector: score against the broadcast centroids,
-    # then argmax via max_by over a (score, -cid) struct — ties resolve to
-    # the smallest cid, matching the oracle's ORDER BY score DESC, cid.
-    scored_cells = base.join(F.broadcast(cent)).select(
-        "vec_id",
-        "cid",
-        (_dot(F.col("e"), F.col("ce")) / (F.col("n") * F.col("cn"))).alias("score"),
-    )
-    assign = scored_cells.groupBy("vec_id").agg(
-        F.max_by(
-            F.col("cid"), F.struct(F.col("score"), (-F.col("cid")).alias("t"))
-        ).alias("cell")
-    )
+    base = checkpoint_truncate(_vectors(cat))
+    # Nearest cell per corpus vector (operators/clustering.py); the probes
+    # rank the same scores.
+    scored_cells = cell_scores(base, seed_centroids(base, N_CENTROIDS))
+    assign = nearest_cell(scored_cells)
     # Top-NPROBE cells per query (bounded probe set — window over ≤K rows).
     qw = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cid"))
     probes = (
@@ -879,7 +835,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             e.alias("e"),
             *[_band_bucket_raw(b).alias(f"b{b}") for b in range(N_BANDS)],
-            _norm_s(_RAW_E).alias("n"),
+            _norm_s(_RAW_E, EMB_DIM).alias("n"),
         )
     )
     pairs = None
@@ -1152,32 +1108,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager 15.2 s vs lazy 10.5 s (two blocking ~100 MB materializations
     # vs persist fills that pipeline into the first consumer pass); the
     # sf0.1 eager win (1.85 → 1.38 s) was the small-input race.
-    base = persist(
-        cat.embeddings.select(
-            "vec_id",
-            _to_double(F.col("embedding")).alias("e"),
-            _norm_s(_RAW_E).alias("n"),
-        )
-    )
-    cent = base.where(F.col("vec_id") < SEM_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n").alias("cn")
-    )
-    # Nearest cell per vector: argmax via max_by over a (score, -cid) struct —
-    # ties resolve to the smallest cid, matching ORDER BY score DESC, cid.
-    assign = (
-        base.join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "cid",
-            (_dot(F.col("e"), F.col("ce")) / (F.col("n") * F.col("cn"))).alias("score"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cid"), F.struct(F.col("score"), (-F.col("cid")).alias("t"))
-            ).alias("cell")
-        )
-    )
+    base = persist(_vectors(cat))
+    assign = nearest_cell(cell_scores(base, seed_centroids(base, SEM_CELLS)))
     enr = persist(assign.join(base, "vec_id"))  # vec_id, cell, e, n
     lhs = enr.select(
         F.col("vec_id").alias("a_id"), "cell", F.col("e").alias("ae"), F.col("n").alias("an")
@@ -1257,45 +1189,12 @@ def cluster_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kmeans A/B (same base shape, one more leg) read eager≈lazy, so the
     # sf0.1 race win stands (unlike dedup_semantic, which adds a second
     # corpus-sized enr frame and reverted).
-    base = checkpoint_truncate(
-        cat.embeddings.select(
-            "vec_id",
-            _to_double(F.col("embedding")).alias("e"),
-            _norm_s(_RAW_E).alias("n"),
-        )
-    )
-    cent = base.where(F.col("vec_id") < SEM_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n").alias("cn")
-    )
-    assign = (
-        base.join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "cid",
-            (_dot(F.col("e"), F.col("ce")) / (F.col("n") * F.col("cn"))).alias("score"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cid"), F.struct(F.col("score"), (-F.col("cid")).alias("t"))
-            ).alias("cell")
-        )
-    )
-    cnt = F.count("*")
+    base = checkpoint_truncate(_vectors(cat))
+    assign = nearest_cell(cell_scores(base, seed_centroids(base, SEM_CELLS)))
     return (
         assign.join(base.select("vec_id", "e"), "vec_id")
         .groupBy("cell")
-        .agg(
-            cnt.alias("n_members"),
-            *[
-                (
-                    F.sum(F.element_at(F.col("e"), d + 1).cast("decimal(25,12)"))
-                    .cast("double")
-                    / cnt
-                ).alias(f"c{d}")
-                for d in range(4)
-            ],
-        )
+        .agg(F.count("*").alias("n_members"), *cell_means(CENTROID_DIMS, "c"))
     )
 
 
@@ -1356,59 +1255,12 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     # r12: eager cut (was a lazy persist) — both assign passes, the update
     # join and the centroid seed raced to fill it.
-    base = checkpoint_truncate(
-        cat.embeddings.select(
-            "vec_id",
-            _to_double(F.col("embedding")).alias("e"),
-            _norm_s(_RAW_E).alias("n"),
-        )
+    base = checkpoint_truncate(_vectors(cat))
+    a0 = checkpoint_truncate(
+        nearest_cell(cell_scores(base, seed_centroids(base, SEM_CELLS)))
     )
-
-    def assign_against(cent: DataFrame) -> DataFrame:
-        return (
-            base.join(F.broadcast(cent))
-            .select(
-                "vec_id",
-                "cid",
-                (_dot(F.col("e"), F.col("ce")) / (F.col("n") * F.col("cn"))).alias(
-                    "score"
-                ),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("cid"), F.struct(F.col("score"), (-F.col("cid")).alias("t"))
-                ).alias("cell")
-            )
-        )
-
-    cent0 = base.where(F.col("vec_id") < SEM_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n").alias("cn")
-    )
-    a0 = checkpoint_truncate(assign_against(cent0))
-    # r12: the 64 exact-decimal mean aggregates are built as F.expr strings
-    # (one py4j call each) instead of 6-call Column-method chains — measured
-    # construction for this query was 1.18 s, mostly this block's round
-    # trips. Identical aggregate semantics.
-    upd = (
-        a0.join(base.select("vec_id", "e"), "vec_id")
-        .groupBy("cell")
-        .agg(
-            *[
-                F.expr(
-                    f"CAST(SUM(CAST(e[{d}] AS DECIMAL(25,12))) AS DOUBLE)"
-                    " / COUNT(*)"
-                ).alias(f"m{d}")
-                for d in range(EMB_DIM)
-            ]
-        )
-        .select(
-            F.col("cell").alias("cid"),
-            F.array(*[F.col(f"m{d}") for d in range(EMB_DIM)]).alias("ce"),
-        )
-        .withColumn("cn", _norm_s("ce"))
-    )
-    a1 = assign_against(upd)
+    upd = update_centroids(a0, base, EMB_DIM)
+    a1 = nearest_cell(cell_scores(base, upd))
     return (
         a0.withColumnRenamed("cell", "cell_seed")
         .join(a1.withColumnRenamed("cell", "cell_refined"), "vec_id")
@@ -1632,7 +1484,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.embeddings.select(
             "vec_id",
             _to_double(F.col("embedding")).alias("r"),
-            _norm_s(_RAW_E).alias("nrm"),
+            _norm_s(_RAW_E, EMB_DIM).alias("nrm"),
         )
     )
     base = pre.select(
@@ -1710,7 +1562,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            _dot_s("qe", "ne").alias("cosine"),
+            _dot_s("qe", "ne", EMB_DIM).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -1771,11 +1623,11 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = cat.embeddings
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E).alias("qn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("cand_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E).alias("cn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
     )
     scored = (
         F.broadcast(q)
@@ -1890,11 +1742,11 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam, om = MMR_LAMBDA, round(1 - MMR_LAMBDA, 2)
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E).alias("qn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("cand_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E).alias("cn"),
+        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     short = persist(
@@ -1918,7 +1770,9 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(lam) * F.col("cosine")).alias("s1_score"),
     )
     rest = short.where(F.col("rank") > 1)
-    sim_s1 = _dot_s("ce", "s1e") / (_norm_s("ce") * _norm_s("s1e"))
+    sim_s1 = _dot_s("ce", "s1e", EMB_DIM) / (
+        _norm_s("ce", EMB_DIM) * _norm_s("s1e", EMB_DIM)
+    )
     r2 = (
         rest.join(s1, "query_id")
         .withColumn("mmr_score", F.lit(lam) * F.col("cosine") - F.lit(om) * sim_s1)
@@ -1934,7 +1788,9 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("mmr_score").alias("s2_score"),
         )
     )
-    sim_s2 = _dot_s("ce", "s2e") / (_norm_s("ce") * _norm_s("s2e"))
+    sim_s2 = _dot_s("ce", "s2e", EMB_DIM) / (
+        _norm_s("ce", EMB_DIM) * _norm_s("s2e", EMB_DIM)
+    )
     r3 = (
         rest.join(s1.select("query_id", "s1e"), "query_id")
         .join(s2.select("query_id", "s2_id", "s2e"), "query_id")

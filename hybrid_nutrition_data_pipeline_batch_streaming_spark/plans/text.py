@@ -64,6 +64,21 @@ _EN_SCORE_SQL = " + ".join(_occ_sql(_PADDED, m) for m in _EN_MARKERS)
 _ES_SCORE_SQL = " + ".join(_occ_sql(_PADDED, m) for m in _ES_MARKERS)
 
 
+def _lang_scores() -> tuple[Column, Column, Column]:
+    """(en, es, pred_lang) over ``text``: each lexicon's marker hits and the
+    language they predict — 'en' when English hits at least tie Spanish
+    ones, else 'es' on any Spanish hit, else 'und'."""
+    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
+    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
+    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
+    pred_lang = (
+        F.when((en >= es) & (en > 0), F.lit("en"))
+        .when(es > 0, F.lit("es"))
+        .otherwise(F.lit("und"))
+    )
+    return en, es, pred_lang
+
+
 @query(
     "lang_id",
     oracle=f"""
@@ -84,22 +99,36 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-analysis op). Pure column arithmetic — at 100 TB this is a
     map-only pass with zero shuffle."""
     cat = Catalog(spark, sf_dir)
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
-    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
+    en, es, pred_lang = _lang_scores()
     return cat.documents.select(
         "doc_id",
         en.cast("double").alias("en_score"),
         es.cast("double").alias("es_score"),
-        F.when((en >= es) & (en > 0), F.lit("en"))
-        .when(es > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-        .alias("pred_lang"),
+        pred_lang.alias("pred_lang"),
     )
 
 
 _STOPWORDS = ("the", "a", "and", "of", "is")
 _STOP_LIST_SQL = "['" + "', '".join(_STOPWORDS) + "']"
+
+
+def _quality_scores(toks: Column) -> tuple[Column, Column, Column]:
+    """(stopword_ratio, uniq_ratio, quality) of a token array: the
+    Gopher-style 0-3 score, one point each for a 20-400 token length, a
+    unique-token ratio above 0.3 and a stopword ratio in [0.01, 0.5]."""
+    n = F.size(toks)
+    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
+    stop_ratio = (
+        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).cast("double")
+        / n
+    )
+    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
+    quality = (
+        F.when(n.between(20, 400), 1).otherwise(0)
+        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
+        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
+    )
+    return stop_ratio, uniq_ratio, quality
 
 
 @query(
@@ -145,20 +174,8 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     re_toks = F.filter(F.split(F.col("text"), "[^a-z0-9]+"), lambda x: x != "")
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_ratio = (
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).cast("double")
-        / n
-    )
-    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
-    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
-    quality = (
-        F.when(n.between(20, 400), 1).otherwise(0)
-        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
-        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
-    )
+    stop_ratio, uniq_ratio, quality = _quality_scores(toks)
+    _, _, pred_lang = _lang_scores()
     return cat.documents.select(
         "doc_id",
         "n_chars",
@@ -171,10 +188,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(re_toks).alias("re_tokens"),
         stop_ratio.alias("stopword_ratio"),
         uniq_ratio.alias("uniq_ratio"),
-        F.when((en >= es) & (en > 0), F.lit("en"))
-        .when(es > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-        .alias("pred_lang"),
+        pred_lang.alias("pred_lang"),
         quality.cast("int").alias("quality"),
     )
 
@@ -209,15 +223,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_cnt = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-    stop_ratio = stop_cnt.cast("double") / n
-    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    quality = (
-        F.when(n.between(20, 400), 1).otherwise(0)
-        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
-        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
-    )
+    stop_ratio, uniq_ratio, quality = _quality_scores(toks)
     return cat.documents.select(
         "doc_id",
         n.alias("n_tokens"),
@@ -296,24 +302,8 @@ def pipeline_text_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum((_occurrences(padded, m) for m in _EN_MARKERS), F.lit(0))
-    es = sum((_occurrences(padded, m) for m in _ES_MARKERS), F.lit(0))
-    pred_lang = (
-        F.when((en >= es) & (en > 0), F.lit("en"))
-        .when(es > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-    )
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_ratio = (
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).cast("double") / n
-    )
-    uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    quality = (
-        F.when(n.between(20, 400), 1).otherwise(0)
-        + F.when(uniq_ratio > 0.3, 1).otherwise(0)
-        + F.when(stop_ratio.between(0.01, 0.5), 1).otherwise(0)
-    )
+    _, _, pred_lang = _lang_scores()
+    _, _, quality = _quality_scores(toks)
     from pyspark.sql.window import Window
 
     gated = cat.documents.select(
@@ -899,16 +889,8 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs|×3 census, and the row-share window runs on that bounded
     table."""
     cat = Catalog(spark, sf_dir)
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    en = sum(_occurrences(padded, m) for m in _EN_MARKERS)
-    es = sum(_occurrences(padded, m) for m in _ES_MARKERS)
-    pred = cat.documents.select(
-        "lang",
-        F.when((en >= es) & (en > 0), "en")
-        .when(es > 0, "es")
-        .otherwise("und")
-        .alias("pred_lang"),
-    )
+    _, _, pred_lang = _lang_scores()
+    pred = cat.documents.select("lang", pred_lang.alias("pred_lang"))
     cells = pred.groupBy("lang", "pred_lang").agg(
         F.count("*").cast("long").alias("n")
     )

@@ -238,19 +238,14 @@ def backfill_partitions(
 
     Contrast with mode="overwrite" under the default STATIC mode, which
     would truncate the whole table first — the classic
-    lost-everything-but-today backfill accident; the conf is set
-    per-write here rather than globally to keep the blast radius of the
-    dynamic semantics scoped to this call.
+    lost-everything-but-today backfill accident. The dynamic mode is this
+    write's own option, not a session conf, so the session's setting is
+    never touched and a concurrent query on it never sees the change.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(*[df[c] for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.repartition(*[df[c] for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )

@@ -317,16 +317,6 @@ class ParquetUpsertStore:
             return self._read_buckets(m, None).where(F.lit(False))
         return hits.where(F.col(self.key).isin(keys))
 
-    def _changed_buckets(self, v_from: int, v_to: int) -> list[int]:
-        """Bucket ids whose snapshot dir differs between two versions — the
-        manifest diff, no data I/O at all."""
-        mf = self._load_manifest(v_from)
-        mt = self._load_manifest(v_to)
-        # buckets present only in mf were fully emptied by a delete()
-        return sorted(
-            {b for b in mt if mf.get(b) != mt[b]} | {b for b in mf if b not in mt}
-        )
-
     def changes(self, v_from: int, v_to: int) -> DataFrame | None:
         """Row-level change feed between two committed versions (CDF).
 

@@ -26,7 +26,9 @@ def oracle_changes(store, v_from, v_to):
     classifies inserts and updates, and an anti join finds deletes. Both
     match keys null-safely; a side with no stored bucket reads as the other
     side with no rows."""
-    changed = store._changed_buckets(v_from, v_to)
+    mf, mt = store._manifest(v_from).buckets, store._manifest(v_to).buckets
+    # a bucket only in mf was fully emptied by a delete
+    changed = sorted({b for b in mt if mf.get(b) != mt[b]} | (mf.keys() - mt.keys()))
     if not changed:
         return None
 

@@ -547,9 +547,25 @@ def test_static_overwrite_would_truncate_other_partitions(spark, tmp_path):
     )
     backfill_partitions(full, path, ["day"])
     day2 = full.where(F.col("day") == "2026-08-02")
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     day2.repartition(1).write.mode("overwrite").partitionBy("day").parquet(path)
     assert spark.read.parquet(path).count() == 5  # day 1 is gone
+
+
+def test_backfill_leaves_the_session_overwrite_mode_unset(spark, tmp_path):
+    """backfill_partitions sets dynamic overwrite on its own write, not on
+    the session: a session where the conf was unset still has it unset
+    afterwards (it used to be left explicitly set to static, and read
+    dynamic to every other query on the session during the write)."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.sources.writers import (
+        backfill_partitions,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    days = spark.createDataFrame([("2026-08-01", 1)], "day string, k int")
+    backfill_partitions(days, str(tmp_path / "days"), ["day"])
+    assert spark.conf.get(key, None) is None
 
 
 def test_dynamic_partition_pruning_prunes_fact_scan(spark, tmp_path):

@@ -351,6 +351,32 @@ def test_kmeans_train_objective_monotone_and_reproducible(spark):
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
 
 
+def test_kmeans_train_one_round_is_the_oracle_checked_lloyd_step(spark):
+    """The standalone trainer runs the step ``kmeans_refine`` checks against
+    its DuckDB oracle: one round from the same seeds puts every vector in
+    that query's ``cell_refined``."""
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.operators.clustering import (
+        kmeans_train,
+    )
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans.similarity import (
+        EMB_DIM,
+        SEM_CELLS,
+    )
+
+    refined = {
+        r.vec_id: r.cell_refined
+        for r in plans.QUERIES["kmeans_refine"](spark, SF).collect()
+    }
+    base = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
+    )
+    assign, _ = kmeans_train(base, k=SEM_CELLS, dims=EMB_DIM, rounds=1)
+    trained = {r.vec_id: r.cell for r in assign.collect()}
+    assert len(refined) == base.count() > 0
+    assert trained == refined
+
+
 def test_pq_rerank_recall_vs_exact(spark):
     """Two-stage PQ (ADC shortlist → exact re-rank) must hold most of the
     exact top-5. The deterministic first-16 codebook bounds recall well
