@@ -42,13 +42,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Read events.parquet, normalizing the ns-precision ``ts``.
+    """Read events.parquet, normalizing ``ts`` whichever encoding it has.
 
-    The file stores INT64 TIMESTAMP(NANOS), which Spark's parquet reader
-    rejects; with ``nanosAsLong`` it surfaces as a long which we floor-divide
-    to microseconds (integer DIV — a double division would lose precision on
-    epoch-nanos magnitudes) and cast to TIMESTAMP_NTZ for DuckDB-identical
-    naive-timestamp semantics.
+    The shipped fixtures (sf0.001, sf0.01, sf0.1) store ``ts`` as INT64
+    TIMESTAMP(MICROS) (``timestamp[us]``), which Spark reads as-is.
+    Regenerated data may store INT64 TIMESTAMP(NANOS) instead, which Spark's
+    parquet reader rejects; with ``nanosAsLong`` it surfaces as a long which
+    we floor-divide to microseconds (integer DIV — a double division would
+    lose precision on epoch-nanos magnitudes) and cast to TIMESTAMP_NTZ for
+    DuckDB-identical naive-timestamp semantics.
     """
     df = spark.read.parquet(path)
     if dict(df.dtypes).get("ts") == "bigint":

@@ -1,5 +1,6 @@
-"""Bucket-occupancy-capped blocking self-join — the shared pair-generation
-scale lever for every banded/bucketed candidate generator.
+"""Pair generation: the bucket-occupancy-capped blocking self-join (the
+shared scale lever for every banded/bucketed candidate generator) and the
+packed-key pair count over sorted id bags.
 
 Motivation (round-5 M=100 scale study, SCALE.md): any blocking scheme with a
 FIXED key space — sign-LSH bands, minhash band buckets, content buckets —
@@ -24,13 +25,17 @@ key (output ≤ |distinct keys| rows — broadcastable by construction), a
 broadcast semi-filter of the left side, then ONE equi-join on the band key
 with the ordered-id predicate applied at the join. No sort, no window, no
 driver collect; survives any partitioning.
+
+``bag_pair_counts`` is the other pair generator: shared-member counts for
+every id pair from sorted distinct bags (posting lists, neighbor sets), one
+count shuffle over 8-byte packed keys.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -92,4 +97,56 @@ def capped_pair_sql(
         f"        JOIN (SELECT {keys} FROM {base} GROUP BY {keys}\n"
         f"              HAVING COUNT(*) <= {cap}) {ok} ON {ok_on}\n"
         f"        JOIN {base} b ON {on} AND a.{id_col} < b.{id_col}"
+    )
+
+
+def packable(bag: str, ids: str) -> Column:
+    """A NULL-valued check that the sorted id array ``bag`` fits the packed
+    pair key of :func:`bag_pair_counts`; it fails the query, naming
+    ``ids``, when it does not. Filter on ``packable(...).isNull()``.
+
+    Both ends of the id space are checked: the last element bounds the
+    top (a·2³² overflows a signed long once a reaches 2³¹) and the first
+    the bottom (a negative id passes a max-only check yet unpacks to the
+    wrong pair, since DIV and pmod disagree on negative keys)."""
+    return F.assert_true(
+        (F.element_at(F.col(bag), -1) < F.lit(2**31))
+        & (F.element_at(F.col(bag), 1) >= F.lit(0)),
+        F.lit(
+            f"{ids} outside [0, 2^31) breaks the packed long pair key;"
+            " repack into DECIMAL(38,0) for this id space"
+        ),
+    )
+
+
+def bag_pair_counts(bags: DataFrame, bag: str, a: str, b: str, n: str) -> DataFrame:
+    """``(a, b, n)``: for every pair ``a < b`` of ids that share a bag, the
+    number of bags holding both. Each ``bag`` is a sorted distinct id
+    array, so every pair is emitted once per shared bag in ``a < b``
+    orientation. The packed key holds any pair with ``0 <= a < 2³¹`` and
+    ``b < 2³²``; :func:`packable` enforces the stricter [0, 2³¹) per bag.
+
+    The C(L,2) pairs of each bag explode map-side through two chained
+    generators (posexplode the bag, then explode each element's tail
+    slice) — a nested transform-of-transforms materialized the whole
+    array-of-arrays per bag in the interpreted evaluator (0.85 s against
+    0.18 s for an 8.7 M-pair explode at sf0.1). Each pair crosses the one
+    count shuffle as a single long ``a·2³² + b`` instead of a two-field
+    struct and is unpacked after the count."""
+    pairs = (
+        bags.select(F.posexplode(bag).alias("i", "x"), bag)
+        .select(
+            F.col("x"),
+            F.explode(F.expr(f"slice({bag}, i + 2, size({bag}))")).alias("y"),
+        )
+        .select(F.expr("x * 4294967296 + y").alias("pk"))
+    )
+    return (
+        pairs.groupBy("pk")
+        .agg(F.count("*").alias(n))
+        .select(
+            F.expr("pk DIV 4294967296").cast("long").alias(a),
+            F.pmod("pk", F.lit(4294967296)).cast("long").alias(b),
+            n,
+        )
     )

@@ -101,6 +101,13 @@ from . import geo  # noqa: F401,E402
 # function (rows unchanged; see tools/plan_manifest.py). They take the last
 # two rule-3 seats, so stream_topk_live and stream_cusum_live join the
 # rule-3 backlog until the full r12+r13 rotation lands.
+#
+# Three more rule-2 seats: graph_jaccard_sim, dedup_ngram_jaccard and
+# dedup_ngram_jaccard_dfcut. r13 changed their plans (the chained pair
+# generators) and none has a driver row since; their pair count now lives
+# in one function, operators/blocking.py::bag_pair_counts (plans
+# unchanged by that move). They take the last three rule-3 seats, so
+# span_dedup, dedup_lines and stream_sliding_live join the rule-3 backlog.
 PRIORITY: tuple[str, ...] = (
     # -- 5 core regressions (driver-green r1-r11) --
     "flagship_revenue",
@@ -121,6 +128,10 @@ PRIORITY: tuple[str, ...] = (
     # -- rule 2: plan changed after r13 (shared curation rules) --
     "cluster_centroids",
     "lang_confusion_matrix",
+    # -- rule 2: plan changed in r13 (chained pair generators) --
+    "graph_jaccard_sim",
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_dfcut",
     # -- standing rows-only driver rows (no oracle by design) --
     "stream_dedup_state",
     "mm_decode_features",
@@ -145,7 +156,7 @@ PRIORITY: tuple[str, ...] = (
     "eval_gains_lift",
     "geo_hub_assign",
     "geo_grid_hotspots",
-    # -- rule 3 cont.: first 12 of the r5-age cohort (registry order) --
+    # -- rule 3 cont.: 9 of the r5-age cohort (registry order) --
     "join_asof_nearest",
     "pareto_frontier",
     "top_supplier_revenue",
@@ -154,10 +165,7 @@ PRIORITY: tuple[str, ...] = (
     "filter_exists_correlated",
     "xml_roundtrip_flatten",
     "window_cume_dist",
-    "span_dedup",
     "dedup_incremental",
-    "dedup_lines",
-    "stream_sliding_live",
 )
 
 #: Window seats that intentionally carry NO oracle (genuinely

@@ -24,7 +24,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..operators.blocking import capped_blocking_join, capped_pair_sql
+from ..operators.blocking import (
+    bag_pair_counts,
+    capped_blocking_join,
+    capped_pair_sql,
+    packable,
+)
 from ..session import checkpoint_truncate, persist
 from .registry import query
 
@@ -108,6 +113,33 @@ def _minhash_sql(k: int) -> str:
     )
 
 
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, mh0..mh3): the distinct word 3-gram shingles and
+    their ``N_MINHASHES`` min-hashes over any (doc_id, text, ...) DataFrame
+    — the minhash twin of ``simhash_signatures``. Lazy: every caller reads
+    it more than once, and cuts or persists it as its own plan needs."""
+    return (
+        docs.select("doc_id", _shingles(F.col("text")).alias("shingles"))
+        .withColumn("digests", F.transform(F.col("shingles"), F.md5))
+        .select(
+            "doc_id",
+            "shingles",
+            *[
+                _minhash(F.col("digests"), k).alias(f"mh{k}")
+                for k in range(N_MINHASHES)
+            ],
+        )
+    )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| of two distinct-shingle array columns:
+    one integer ratio, the same double in both engines."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    )
+
+
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
@@ -152,18 +184,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (signature → band explode → equi-self-join → verify) is exactly this.
     """
     cat = Catalog(spark, sf_dir)
-    sig = (
-        cat.documents.select("doc_id", _shingles(F.col("text")).alias("shingles"))
-        .withColumn("digests", F.transform(F.col("shingles"), F.md5))
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                _minhash(F.col("digests"), k).alias(f"mh{k}")
-                for k in range(N_MINHASHES)
-            ],
-        )
-    )
     # Materialize the signature table once: the self-join would otherwise
     # recompute shingling+hashing on BOTH sides (and Catalyst re-inlines the
     # shared md5 transform when the projection feeds an exchange). At
@@ -172,8 +192,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two scan legs materialize concurrently under AQE and raced to compute
     # the uncached table; eager also stops each downstream reference
     # re-paying Catalyst analysis of the shingling subtree.
-
-    sig = checkpoint_truncate(sig)
+    sig = checkpoint_truncate(minhash_signatures(cat.documents))
     a = sig.alias("a")
     b = sig.alias("b")
     band_eq = [F.col(f"a.mh{k}") == F.col(f"b.mh{k}") for k in range(N_MINHASHES)]
@@ -186,11 +205,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.shingles").alias("sh_a"),
         F.col("b.shingles").alias("sh_b"),
     )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     return (
-        cand.withColumn("jaccard", jaccard)
+        cand.withColumn("jaccard", _jaccard("sh_a", "sh_b"))
         .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -267,18 +283,7 @@ def banded_minhash_pairs(docs: DataFrame) -> DataFrame:
     # headline consumers each dropped 0.1-0.8 s (dedup_connected_components
     # 3.43 → 2.61 s, pipeline_corpus_build 4.15 → 3.24 s).
 
-    sig = checkpoint_truncate(
-        docs.select("doc_id", _shingles(F.col("text")).alias("shingles"))
-        .withColumn("digests", F.transform(F.col("shingles"), F.md5))
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                _minhash(F.col("digests"), k).alias(f"mh{k}")
-                for k in range(N_MINHASHES)
-            ],
-        )
-    )
+    sig = checkpoint_truncate(minhash_signatures(docs))
     cand = None
     for cols in _MINHASH_BANDS:
         pairs = capped_blocking_join(
@@ -297,13 +302,10 @@ def banded_minhash_pairs(docs: DataFrame) -> DataFrame:
     sb = sig.select(
         F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
     )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("jaccard", jaccard)
+        .withColumn("jaccard", _jaccard("sh_a", "sh_b"))
         .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -471,6 +473,45 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probe_pairs(sig: DataFrame, probes, block) -> DataFrame:
+    """Verified (doc_a, doc_b, hamming) pairs from the fused multiprobe join
+    over a ``simhash_signatures`` table: one equi-join per probe on the
+    computed block key, with the Hamming bound and first-probe-wins (no
+    earlier probe's block collides) as residual predicates inside the
+    join's codegen loop — no candidate row materializes, no DISTINCT, each
+    qualifying pair is emitted by exactly one probe.
+
+    ``probes`` lists ``(w, k)``: block ``k`` of signature word ``w``;
+    ``block(col, k)`` extracts it from a word column (``a0``, ``b1``...)."""
+    sa = sig.select(
+        F.col("doc_id").alias("doc_a"), F.col("w0").alias("a0"), F.col("w1").alias("a1")
+    )
+    sb = sig.select(
+        F.col("doc_id").alias("doc_b"), F.col("w0").alias("b0"), F.col("w1").alias("b1")
+    )
+
+    def collide(w: int, k: int) -> Column:
+        return block(f"a{w}", k) == block(f"b{w}", k)
+
+    hamming = (
+        F.bit_count(F.expr("a0 ^ b0")) + F.bit_count(F.expr("a1 ^ b1"))
+    ).cast("int")
+    out = None
+    for i, (w, k) in enumerate(probes):
+        cond = (
+            collide(w, k)
+            & (F.col("doc_a") < F.col("doc_b"))
+            & (hamming <= F.lit(HAMMING_MAX))
+        )
+        for w2, k2 in probes[:i]:  # first-probe-wins dedup
+            cond = cond & ~collide(w2, k2)
+        pairs = sa.join(sb, cond).select(
+            "doc_a", "doc_b", hamming.alias("hamming")
+        )
+        out = pairs if out is None else out.unionByName(pairs)
+    return out
+
+
 @query(
     "dedup_simhash_multiprobe",
     oracle=f"""
@@ -521,41 +562,11 @@ def dedup_simhash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     sig = simhash_signatures(cat.documents.select("doc_id", "text"))
 
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), F.col("w0").alias("a0"), F.col("w1").alias("a1")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), F.col("w0").alias("b0"), F.col("w1").alias("b1")
-    )
-
     def block(word: str, k: int) -> Column:
         # Byte k (0 = most significant) of a 32-bit word.
         return F.shiftright(F.col(word), 24 - 8 * k).bitwiseAND(F.lit(255))
 
-    # Probe i joins on byte-block i equality (Catalyst extracts the
-    # expression equality as the equi key); earlier-block inequality and
-    # the Hamming bound ride along as residual filters, evaluated inside
-    # the join's codegen loop — no candidate row is ever materialized.
-    probes = [("a0", "b0", k) for k in range(4)] + [
-        ("a1", "b1", k) for k in range(4)
-    ]
-    hamming = (
-        F.bit_count(F.expr("a0 ^ b0")) + F.bit_count(F.expr("a1 ^ b1"))
-    ).cast("int")
-    out = None
-    for i, (wa, wb, k) in enumerate(probes):
-        cond = (
-            (block(wa, k) == block(wb, k))
-            & (F.col("doc_a") < F.col("doc_b"))
-            & (hamming <= F.lit(HAMMING_MAX))
-        )
-        for wa2, wb2, k2 in probes[:i]:  # first-probe-wins dedup
-            cond = cond & (block(wa2, k2) != block(wb2, k2))
-        pairs = sa.join(sb, cond).select(
-            "doc_a", "doc_b", hamming.alias("hamming")
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out
+    return _probe_pairs(sig, [(w, k) for w in (0, 1) for k in range(4)], block)
 
 
 _WIDE_BLOCK_BITS = 16
@@ -600,37 +611,13 @@ def dedup_simhash_multiprobe_wide(spark: SparkSession, sf_dir: str) -> DataFrame
     cat = Catalog(spark, sf_dir)
     sig = simhash_signatures(cat.documents.select("doc_id", "text"))
 
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), F.col("w0").alias("a0"), F.col("w1").alias("a1")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), F.col("w0").alias("b0"), F.col("w1").alias("b1")
-    )
-
     def block(word: str, k: int) -> Column:
         # 16-bit half k (0 = most significant) of a 32-bit word.
         return F.shiftright(F.col(word), _WIDE_BLOCK_BITS - _WIDE_BLOCK_BITS * k).bitwiseAND(
             F.lit(_WIDE_MASK)
         )
 
-    probes = [("a0", "b0", 0), ("a0", "b0", 1), ("a1", "b1", 0), ("a1", "b1", 1)]
-    hamming = (
-        F.bit_count(F.expr("a0 ^ b0")) + F.bit_count(F.expr("a1 ^ b1"))
-    ).cast("int")
-    out = None
-    for i, (wa, wb, k) in enumerate(probes):
-        cond = (
-            (block(wa, k) == block(wb, k))
-            & (F.col("doc_a") < F.col("doc_b"))
-            & (hamming <= F.lit(HAMMING_MAX))
-        )
-        for wa2, wb2, k2 in probes[:i]:  # first-probe-wins dedup
-            cond = cond & (block(wa2, k2) != block(wb2, k2))
-        pairs = sa.join(sb, cond).select(
-            "doc_a", "doc_b", hamming.alias("hamming")
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out
+    return _probe_pairs(sig, [(w, k) for w in (0, 1) for k in (0, 1)], block)
 
 
 # ---------------------------------------------------------------------------
@@ -673,7 +660,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (reworked by the round-9 M=100 refresh, SCALE.md): ONE
     (source, shingle)-keyed shuffle collects each posting's sorted doc bag
     and the C(L,2) ordered pairs explode MAP-SIDE as packed longs — the
-    same wedge idiom as graph_jaccard_sim. The logically-equivalent
+    shared ``bag_pair_counts`` (operators/blocking.py) that
+    graph_jaccard_sim's wedges also use. The logically-equivalent
     explode-self-join additionally shuffles the 21 M-row posting table a
     second time and ships two-column pair structs through the count
     aggregation. Measured NEUTRAL at M=100 on the word-salad fixtures
@@ -699,24 +687,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # standard posting-list skew handling applies).
     sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sh.select("doc_id", "source", F.explode("shingles").alias("s"))
-    # The pair key packs doc_a·2³² + doc_b into ONE signed long (same
-    # contract as graph_jaccard_sim's wedge key): enforce the id-space
-    # assumption loudly, once per bag (sorted, so the max element covers
-    # every pair it emits), and refuse posting lists whose C(L,2) fan-out
-    # says the exact query is being pointed at df-cutoff-shaped data.
-    # Both halves of the id-space assumption are enforced: the sorted bag's
-    # last element bounds the top (overflow) and its FIRST element bounds
-    # the bottom — a negative doc_id would pass a max-only check yet
-    # silently corrupt pack/unpack (integer division floors toward -inf and
-    # pmod wraps, recovering the wrong pair).
-    packable = F.assert_true(
-        (F.element_at(F.col("ds"), -1) < F.lit(2**31))
-        & (F.element_at(F.col("ds"), 1) >= F.lit(0)),
-        F.lit(
-            "dedup_ngram_jaccard: doc_id outside [0, 2^31) breaks the packed"
-            " long pair key; repack into DECIMAL(38,0) for this id space"
-        ),
-    )
+    # The pair key packs doc_a·2³² + doc_b into ONE signed long: enforce
+    # the id-space assumption loudly, once per bag, and refuse posting
+    # lists whose C(L,2) fan-out says the exact query is being pointed at
+    # df-cutoff-shaped data.
     guard = F.assert_true(
         F.size("ds") <= _NGRAM_POSTING_GUARD,
         F.lit(
@@ -729,31 +703,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex.groupBy("source", "s")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds") >= 2)
-        .filter(packable.isNull())
+        .filter(packable("ds", "dedup_ngram_jaccard: doc_id").isNull())
         .filter(guard.isNull())
     )
     # doc_a < doc_b by construction (sorted distinct bag) — matches the
     # oracle's a.doc_id < b.doc_id orientation; _shingles is distinct per
     # doc, so each pair is counted once per SHARED shingle = |A∩B| exactly.
-    # r13: two chained generators instead of explode(flatten(nested
-    # transform)) — the nested HOF materialized the array-of-arrays per
-    # posting in the interpreted evaluator (the graph_jaccard_sim finding:
-    # its 8.7 M-wedge explode read 0.85 s nested vs 0.18 s chained at
-    # sf0.1); pair multiset identical by construction.
-    pairs = (
-        posting.select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select(
-            F.col("x"),
-            F.explode(F.expr("slice(ds, i + 2, size(ds))")).alias("y"),
-        )
-        .select(F.expr("x * 4294967296 + y").alias("pk"))
-    )
-    common = pairs.groupBy("pk").agg(F.count("*").alias("inter"))
-    common = common.select(
-        F.expr("pk DIV 4294967296").cast("long").alias("doc_a"),
-        F.pmod("pk", F.lit(4294967296)).cast("long").alias("doc_b"),
-        "inter",
-    )
+    common = bag_pair_counts(posting, "ds", "doc_a", "doc_b", "inter")
     return (
         common.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
@@ -863,15 +819,6 @@ def dedup_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"n_docs DIV {NGRAM_DF_CUTOFF_DIV}"),
     )
     ex = sh.select("doc_id", "source", F.explode("shingles").alias("s"))
-    packable = F.assert_true(
-        (F.element_at(F.col("ds"), -1) < F.lit(2**31))
-        & (F.element_at(F.col("ds"), 1) >= F.lit(0)),
-        F.lit(
-            "dedup_ngram_jaccard_dfcut: doc_id outside [0, 2^31) breaks the"
-            " packed long pair key; repack into DECIMAL(38,0) for this id"
-            " space"
-        ),
-    )
     posting = (
         ex.groupBy("source", "s")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
@@ -881,7 +828,7 @@ def dedup_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
         # size — never of per-shingle skew.
         .crossJoin(F.broadcast(ndocs))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= cutoff))
-        .filter(packable.isNull())
+        .filter(packable("ds", "dedup_ngram_jaccard_dfcut: doc_id").isNull())
     )
     # r12: eager cut (was a lazy persist) — the pair explode and the
     # per-doc size rollup materialize concurrently and raced to compute
@@ -895,21 +842,7 @@ def dedup_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= NGRAM_DFCUT_MIN_SIGNAL)
     )
-    # r13: chained generators, same rework as the base query above.
-    pairs = (
-        posting.select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select(
-            F.col("x"),
-            F.explode(F.expr("slice(ds, i + 2, size(ds))")).alias("y"),
-        )
-        .select(F.expr("x * 4294967296 + y").alias("pk"))
-    )
-    inter = pairs.groupBy("pk").agg(F.count("*").alias("i"))
-    inter = inter.select(
-        F.expr("pk DIV 4294967296").cast("long").alias("doc_a"),
-        F.pmod("pk", F.lit(4294967296)).cast("long").alias("doc_b"),
-        "i",
-    )
+    inter = bag_pair_counts(posting, "ds", "doc_a", "doc_b", "i")
     na = nsz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = nsz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     return (
@@ -1015,14 +948,7 @@ def dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb")),
             "doc_b",
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("sa", "sb")).cast("double")
-                / F.size(F.array_union("sa", "sb"))
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard("sa", "sb").alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_T)
     )
 
@@ -1161,18 +1087,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same b=2×r=2 banding as `dedup_minhash_banded`; left join keeps
     unmatched new docs (the common case) without a second scan."""
     cat = Catalog(spark, sf_dir)
-    sig = persist(
-        cat.documents.select("doc_id", _shingles(F.col("text")).alias("shingles"))
-        .withColumn("digests", F.transform(F.col("shingles"), F.md5))
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                _minhash(F.col("digests"), k).alias(f"mh{k}")
-                for k in range(N_MINHASHES)
-            ],
-        )
-    )
+    sig = persist(minhash_signatures(cat.documents))
     # Band joins and the pair-dedup ship IDS + band keys only — the shingle
     # arrays (the wide payload, ~100 tokens/doc) attach AFTERWARDS, to just
     # the deduped candidate pairs. At M=100 the arrays are ~50× the id
@@ -1183,7 +1098,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     newb = slim.where(F.col("doc_id") % 4 == 0)
     seen = slim.where(F.col("doc_id") % 4 != 0)
     cand = None
-    for cols in (("mh0", "mh1"), ("mh2", "mh3")):
+    for cols in _MINHASH_BANDS:
         n, s = newb.alias("n"), seen.alias("s")
         cond = (F.col(f"n.{cols[0]}") == F.col(f"s.{cols[0]}")) & (
             F.col(f"n.{cols[1]}") == F.col(f"s.{cols[1]}")
@@ -1210,11 +1125,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seen_id",
         )
     )
-    jaccard = F.size(F.array_intersect("sh_n", "sh_s")).cast("double") / F.size(
-        F.array_union("sh_n", "sh_s")
-    )
     hits = (
-        enriched.where(jaccard >= 0.5)
+        enriched.where(_jaccard("sh_n", "sh_s") >= 0.5)
         .groupBy("new_id")
         .agg(F.count("*").alias("n_dup_matches"))
     )

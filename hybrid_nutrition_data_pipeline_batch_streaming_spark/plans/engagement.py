@@ -34,8 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
-from ..session import checkpoint_truncate, persist
+from ..session import persist
 from .registry import query
+from .streaming_queries import CUSUM_SQL, cusum
 
 #: Overflow guard for the decayed score: weights are 2^weeks, so cap the
 #: horizon well below 2^63 / (cents·days). The fixture spans ~5 weeks; a
@@ -215,40 +216,7 @@ def agg_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "cusum_changepoint",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS c
-        FROM events GROUP BY event_type, CAST(ts AS DATE)
-    ), tot AS (
-        SELECT event_type,
-               CAST(SUM(c) AS BIGINT)   AS t,
-               CAST(COUNT(*) AS BIGINT) AS nd
-        FROM daily GROUP BY event_type
-    ), cus AS (
-        SELECT daily.event_type, d, c, t, nd,
-               CAST(SUM(c * nd - t) OVER (
-                   PARTITION BY daily.event_type ORDER BY d
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS s_scaled
-        FROM daily JOIN tot USING (event_type)
-    ), ranked AS (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY event_type ORDER BY ABS(s_scaled) DESC, d ASC) AS rk
-        FROM cus
-    )
-    SELECT event_type,
-           d        AS changepoint_day,
-           c        AS day_events,
-           s_scaled AS max_dev_scaled,
-           t        AS total_events,
-           nd       AS n_days,
-           ABS(s_scaled) > 2 * t AS shifted
-    FROM ranked WHERE rk = 1
-    """,
-)
+@query("cusum_changepoint", oracle=CUSUM_SQL)
 def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection on daily event volume per type: the
     cumulative sum of deviations from the per-type mean peaks at the point
@@ -267,44 +235,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "d")
         .agg(F.count("*").alias("c"))
     )
-    # Per-type totals come from an UNBOUNDED window over the same partition
-    # key instead of an aggregate + join back — the daily rollup is computed
-    # once and every subsequent window (totals, CUSUM, argmax rank) reuses
-    # the one event_type exchange; the event log is scanned exactly once.
-    w_all = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    w_cus = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cus = (
-        daily.withColumn("t", F.sum("c").over(w_all).cast("long"))
-        .withColumn("nd", F.count("*").over(w_all))
-        .withColumn(
-            "s_scaled",
-            F.sum(F.col("c") * F.col("nd") - F.col("t")).over(w_cus).cast("long"),
-        )
-    )
-    w_rk = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("s_scaled")).desc(), F.col("d").asc()
-    )
-    return (
-        cus.withColumn("rk", F.row_number().over(w_rk))
-        .where(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.col("d").alias("changepoint_day"),
-            F.col("c").alias("day_events"),
-            F.col("s_scaled").alias("max_dev_scaled"),
-            F.col("t").alias("total_events"),
-            F.col("nd").alias("n_days"),
-            (F.abs(F.col("s_scaled")) > 2 * F.col("t")).alias("shifted"),
-        )
-    )
+    return cusum(daily)
 
 
 @query(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
+from ..operators.blocking import bag_pair_counts, packable
 from ..session import checkpoint_truncate, scratch_checkpoint
 from .dedup import banded_minhash_pairs
 from .registry import ORACLE, query
@@ -844,28 +845,14 @@ def graph_jaccard_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the C(d,2) ordered pairs map-side from the bag — no adjacency
     # self-join (which shuffles the 60 M-row table twice), no separate
     # degree window. Bags are part-scale; checkpointed because both the
-    # wedge explode and the degree rollup read them.
-    # ADVICE r5: the pair key packs sa·2³² + sb into a SIGNED long, which
-    # silently wraps once ids reach 2³¹ (ANSI off) and collides at 2³² —
-    # enforce the documented assumption loudly, once per bag (the bag is
-    # sorted, so its last element bounds the top and its FIRST element the
-    # bottom: ADVICE r9 found at the dedup twin site that a negative id
-    # passes a max-only check yet corrupts pack/unpack — DIV floors toward
-    # -inf and pmod wraps, recovering the wrong pair).
-    packable = F.assert_true(
-        (F.element_at(F.col("ss"), -1) < F.lit(2**31))
-        & (F.element_at(F.col("ss"), 1) >= F.lit(0)),
-        F.lit(
-            "graph_jaccard_sim: supplier id outside [0, 2^31) breaks the"
-            " packed long pair key; repack into DECIMAL(38,0) for this id"
-            " space"
-        ),
-    )
+    # wedge explode and the degree rollup read them. The pair key packs
+    # sa·2³² + sb into a SIGNED long, so the id space is enforced loudly,
+    # once per bag.
     bags = checkpoint_truncate(
         adj0.groupBy("p")
         .agg(F.sort_array(F.collect_set("s")).alias("ss"))
         .filter(F.size("ss") <= _JACCARD_HUB_CAP)
-        .filter(packable.isNull())
+        .filter(packable("ss", "graph_jaccard_sim: supplier id").isNull())
     )
     deg = (
         bags.select(F.explode("ss").alias("s"))
@@ -873,35 +860,10 @@ def graph_jaccard_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("deg"))
     )
     # sa < sb by construction (sorted distinct bag), matching the oracle's
-    # b.s > a.s orientation. The pair key packs into ONE long
-    # (sa·2³² + sb) so the wedge shuffle — the biggest intermediate in the
-    # engine's graph family, Σ d(d−1)/2 rows — moves 8 bytes per row
-    # instead of a two-field struct; unpacked after the count. (Keys are
-    # suppkeys < 2³² on every shipped/generated dataset; a 100 TB id space
-    # beyond that packs into DECIMAL(38,0) the same way.)
-    #
-    # r13: TWO chained generators (posexplode the bag, then explode the
-    # tail slice per element) instead of one explode over a nested
-    # transform-of-transforms — the nested HOF materialized the full
-    # array-of-arrays per row in the interpreted expression evaluator
-    # before flattening (measured: 0.85 s for the 8.7 M-wedge explode at
-    # sf0.1 vs 0.18 s for the generator chain; explode+count 2.26 → 1.44 s;
-    # wedge multiset identical by construction — same (x, tail-slice)
-    # enumeration order).
-    wedges = (
-        bags.select(F.posexplode("ss").alias("i", "x"), "ss")
-        .select(
-            F.col("x"),
-            F.explode(F.expr("slice(ss, i + 2, size(ss))")).alias("y"),
-        )
-        .select(F.expr("x * 4294967296 + y").alias("pk"))
-    )
-    inter = wedges.groupBy("pk").agg(F.count("*").alias("i"))
-    inter = inter.select(
-        F.expr("pk DIV 4294967296").cast("long").alias("sa"),
-        F.pmod("pk", F.lit(4294967296)).cast("long").alias("sb"),
-        "i",
-    )
+    # b.s > a.s orientation. The wedge shuffle — the biggest intermediate
+    # in the engine's graph family, Σ d(d−1)/2 rows — moves one packed
+    # long per row.
+    inter = bag_pair_counts(bags, "ss", "sa", "sb", "i")
     da = deg.select(F.col("s").alias("sa"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("s").alias("sb"), F.col("deg").alias("deg_b"))
     return (

@@ -90,6 +90,37 @@ def _vectors(cat: Catalog) -> DataFrame:
     )
 
 
+def _side(emb: DataFrame, id_name: str, p: str) -> DataFrame:
+    """One side of a cosine join off the embeddings scan:
+    (``id_name``, ``{p}e``, ``{p}n``) — the double array and its norm."""
+    return emb.select(
+        F.col("vec_id").alias(id_name),
+        _to_double(F.col("embedding")).alias(f"{p}e"),
+        _norm_s(_RAW_E, EMB_DIM).alias(f"{p}n"),
+    )
+
+
+def _cosine_qc() -> Column:
+    """The cosine of the joined ``qe``/``ce`` arrays from their norms
+    ``qn``/``cn``, precomputed per side (not per candidate pair): the same
+    doubles as ``_cosine``, with ~3× less array work in the pairwise
+    stage."""
+    return _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
+
+
+def _top_k(scored: DataFrame, k: int = TOP_K) -> DataFrame:
+    """The ``k`` nearest neighbours per query of a (query_id, neighbor_id,
+    cosine) frame, ranked by cosine descending with ties to the lower
+    ``neighbor_id``: (query_id, neighbor_id, cosine, rank). The per-query
+    row_number keeps only k rows per partition past the window."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 # DuckDB twins (expressions over DOUBLE[] columns {x}, {y}).
 def _dot_sql(x: str, y: str) -> str:
     return (
@@ -132,34 +163,14 @@ def _cos_sql(x: str, y: str) -> str:
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k (X1 baseline): a bounded query set is
     broadcast against the corpus, scored JVM-side with higher-order array
-    functions, and ranked per query. The per-query row_number top-k keeps
-    only k rows per partition past the window."""
-    cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings
-    # Norms are precomputed per side (not per candidate pair) — same doubles
-    # (identical fold), ~3× less array work in the pairwise stage.
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
-    )
-    scored = (
+    functions, and ranked per query."""
+    emb = Catalog(spark, sf_dir).embeddings
+    q = _side(emb.where(F.col("vec_id") < N_QUERIES), "query_id", "q")
+    c = _side(emb, "neighbor_id", "c")
+    return _top_k(
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", _cosine_qc().alias("cosine"))
     )
 
 
@@ -195,6 +206,29 @@ def _band_sql(band: int) -> str:
         f"CASE WHEN e[{band * BAND_BITS + i + 1}] > 0 THEN {2**i} ELSE 0 END"
         for i in range(BAND_BITS)
     )
+
+
+def _band_candidates(probes: DataFrame, corpus: DataFrame, bands) -> DataFrame:
+    """Distinct (query_id, neighbor_id) pairs that collide on any of the
+    ``bands`` columns: one broadcast equi-join of the probe set per band,
+    unioned and deduped (OR-amplification). Both frames carry ``vec_id``
+    and the band columns; the probe side is bounded, so each join is
+    linear in the corpus."""
+    cand = None
+    for b in bands:
+        piece = (
+            F.broadcast(
+                probes.select(F.col("vec_id").alias("query_id"), F.col(b).alias(f"q{b}"))
+            )
+            .join(
+                corpus.select(F.col("vec_id").alias("neighbor_id"), b),
+                (F.col(f"q{b}") == F.col(b))
+                & (F.col("query_id") != F.col("neighbor_id")),
+            )
+            .select("query_id", "neighbor_id")
+        )
+        cand = piece if cand is None else cand.union(piece)
+    return cand.distinct()
 
 
 _BASE_SQL = f"""
@@ -285,27 +319,13 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             _norm_s(_RAW_E, EMB_DIM).alias("n"),
         )
     )
-    q = base.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-        *[F.col(f"b{b}").alias(f"qb{b}") for b in range(N_BANDS)],
+    probes = base.where(F.col("vec_id") < N_QUERIES)
+    cand = _band_candidates(probes, base, [f"b{b}" for b in range(N_BANDS)])
+    q = probes.select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("n").alias("qn")
     )
-    cand = None
-    for b in range(N_BANDS):
-        piece = (
-            F.broadcast(q.select("query_id", f"qb{b}"))
-            .join(
-                base.select(F.col("vec_id").alias("neighbor_id"), f"b{b}"),
-                (F.col(f"qb{b}") == F.col(f"b{b}"))
-                & (F.col("query_id") != F.col("neighbor_id")),
-            )
-            .select("query_id", "neighbor_id")
-        )
-        cand = piece if cand is None else cand.union(piece)
-    cand = cand.distinct()
-    scored = (
-        cand.join(F.broadcast(q.select("query_id", "qe", "qn")), "query_id")
+    return _top_k(
+        cand.join(F.broadcast(q), "query_id")
         .join(
             base.select(
                 F.col("vec_id").alias("neighbor_id"),
@@ -314,17 +334,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "neighbor_id",
         )
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", _cosine_qc().alias("cosine"))
     )
 
 
@@ -356,12 +366,7 @@ def similarity_ann_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("datasetB.vec_id").alias("neighbor_id"),
         (1 - F.col("dist") * F.col("dist") / 2).alias("cosine"),
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(joined)
 
 
 @query(
@@ -582,21 +587,7 @@ def similarity_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not re-derive an embeddings join per band — the query-side vectors
     # enter exactly once, in the broadcast rescore payload below.
     qb = index.where(F.col("vec_id") < N_QUERIES)
-    cand = None
-    for b in range(HP_BANDS):
-        piece = (
-            F.broadcast(
-                qb.select(F.col("vec_id").alias("query_id"), F.col(f"hb{b}").alias(f"qhb{b}"))
-            )
-            .join(
-                index.select(F.col("vec_id").alias("neighbor_id"), f"hb{b}"),
-                (F.col(f"qhb{b}") == F.col(f"hb{b}"))
-                & (F.col("query_id") != F.col("neighbor_id")),
-            )
-            .select("query_id", "neighbor_id")
-        )
-        cand = piece if cand is None else cand.union(piece)
-    cand = cand.distinct()
+    cand = _band_candidates(qb, index, [f"hb{b}" for b in range(HP_BANDS)])
     # Rescore: query vectors+norms as one bounded broadcast; corpus
     # vectors+norms as ONE payload join (vecs ⋈ index on vec_id — the
     # id-keyed payload lookup), so the candidate set crosses exactly one
@@ -614,22 +605,10 @@ def similarity_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
         index.select(F.col("vec_id").alias("neighbor_id"), F.col("n").alias("cn")),
         "neighbor_id",
     )
-    scored = (
+    return _top_k(
         cand.join(F.broadcast(q_pay), "query_id")
         .join(payload, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", _cosine_qc().alias("cosine"))
     )
 
 
@@ -780,18 +759,9 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "neighbor_id",
         )
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", _cosine_qc().alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored)
 
 
 NEAR_DUP_COS = 0.4
@@ -1019,22 +989,10 @@ def similarity_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d").alias("ce"),
         F.col("n").alias("cn"),
     )
-    scored = (
+    return _top_k(
         F.broadcast(qs)
         .join(cs, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", _cosine_qc().alias("cosine"))
     )
 
 
@@ -1349,19 +1307,14 @@ def pipeline_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("doc_id") < EMBED_QUERIES).select(
         F.col("doc_id").alias("query_id"), F.col("e").alias("qe")
     )
-    scored = (
+    return _top_k(
         F.broadcast(q)
         .join(
             emb.select(F.col("doc_id").alias("neighbor_id"), F.col("e").alias("ce")),
             F.col("query_id") != F.col("neighbor_id"),
         )
-        .select("query_id", "neighbor_id", _dot_s("qe", "ce", 8).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= EMBED_TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", _dot_s("qe", "ce", 8).alias("cosine")),
+        EMBED_TOP_K,
     )
 
 
@@ -1556,7 +1509,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the plain dot fold. Only SHORTLIST×queries rows touch full vectors.
     q_vec = base.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
     c_vec = base.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ne"))
-    reranked = (
+    return _top_k(
         shortlist.join(F.broadcast(q_vec), "query_id")
         .join(c_vec, "neighbor_id")
         .select(
@@ -1564,12 +1517,6 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             _dot_s("qe", "ne", EMB_DIM).alias("cosine"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -1619,26 +1566,13 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the scoring side swaps to the ANN tiers (LSH/IVF shortlist,
     exact re-rank) exactly as the search path does; mining quality follows
     shortlist recall, measured in tests for those tiers."""
-    cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
-    )
+    emb = Catalog(spark, sf_dir).embeddings
+    q = _side(emb.where(F.col("vec_id") < N_QUERIES), "query_id", "q")
+    c = _side(emb, "cand_id", "c")
     scored = (
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
+        .select("query_id", "cand_id", _cosine_qc().alias("cosine"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -1737,29 +1671,15 @@ def similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity tiers — bit-identical across engines. At 100 TB the
     shortlist comes from the ANN tiers; the MMR rounds never touch the
     corpus again."""
-    cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings
+    emb = Catalog(spark, sf_dir).embeddings
     lam, om = MMR_LAMBDA, round(1 - MMR_LAMBDA, 2)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("qe"),
-        _norm_s(_RAW_E, EMB_DIM).alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"), _to_double(F.col("embedding")).alias("ce"),
-        _norm_s(_RAW_E, EMB_DIM).alias("cn"),
-    )
+    q = _side(emb.where(F.col("vec_id") < N_QUERIES), "query_id", "q")
+    c = _side(emb, "cand_id", "c")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     short = persist(
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            "ce",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
+        .select("query_id", "cand_id", "ce", _cosine_qc().alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= MMR_SHORTLIST)
     )
@@ -2061,10 +1981,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             take(F.col("e")).alias("ce"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
+        return _top_k(
             F.broadcast(q)
             .join(c, F.col("query_id") != F.col("neighbor_id"))
             .select(
@@ -2072,10 +1989,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "neighbor_id",
                 _cosine(F.col("qe"), F.col("ce")).alias("cosine"),
             )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
+        ).select("query_id", "neighbor_id")
 
     full_k = _topk(None)
     short_k = _topk(MRL_DIMS).select(

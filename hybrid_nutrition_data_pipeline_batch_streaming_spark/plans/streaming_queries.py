@@ -387,9 +387,10 @@ def stream_user_growth_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_cusum_live",
-    oracle="""
+#: The CUSUM change-point oracle shared by ``stream_cusum_live`` and the
+#: batch ``cusum_changepoint`` (plans/engagement.py): the live detector must
+#: land exactly on the batch answer.
+CUSUM_SQL = """
     WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS d,
                CAST(COUNT(*) AS BIGINT) AS c
@@ -419,26 +420,17 @@ def stream_user_growth_live(spark: SparkSession, sf_dir: str) -> DataFrame:
            nd       AS n_days,
            ABS(s_scaled) > 2 * t AS shifted
     FROM ranked WHERE rk = 1
-    """,
-)
-def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM change-point detection over a LIVE stream — streaming anomaly
-    detection with the stream/batch parity contract: the stream maintains
-    per-(type, day) counters (linear, domain-bounded state — the same
-    reduction ``cusum_changepoint`` performs batch-side), and the CUSUM +
-    argmax windows run over the drained complete-mode counters, where
-    every day is final. Counter aggregation is arrival-order independent,
-    so the live detector lands exactly on the batch oracle however
-    micro-batches split. In production the drained-counter stage is the
-    maintained daily-rollup TABLE (foreachBatch merge → IVM) and the
-    detector re-runs per trigger over calendar-bounded rows."""
-    stream = read_events_stream(spark, sf_dir)
-    daily = (
-        stream.select("event_type", F.to_date("ts").alias("d"))
-        .groupBy("event_type", "d")
-        .agg(F.count("*").alias("c"))
-    )
-    drained = run_to_memory(daily, output_mode="complete")
+    """
+
+
+def cusum(daily: DataFrame) -> DataFrame:
+    """CUSUM change point per event type over (event_type, d, c) daily
+    counts: S_d·nd = Σ_{i≤d} (c_i·nd − total), scaled by n_days to stay in
+    exact BIGINT math; the peak |S| day (earliest on ties) is the change
+    point, flagged ``shifted`` past twice the mean. Per-type totals come
+    from an UNBOUNDED window over the same partition key instead of an
+    aggregate joined back, so all three windows (totals, CUSUM, argmax
+    rank) share one event_type exchange."""
     w_all = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -450,7 +442,7 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cus = (
-        drained.withColumn("t", F.sum("c").over(w_all).cast("long"))
+        daily.withColumn("t", F.sum("c").over(w_all).cast("long"))
         .withColumn("nd", F.count("*").over(w_all))
         .withColumn(
             "s_scaled",
@@ -473,6 +465,27 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.abs(F.col("s_scaled")) > 2 * F.col("t")).alias("shifted"),
         )
     )
+
+
+@query("stream_cusum_live", oracle=CUSUM_SQL)
+def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM change-point detection over a LIVE stream — streaming anomaly
+    detection with the stream/batch parity contract: the stream maintains
+    per-(type, day) counters (linear, domain-bounded state — the same
+    reduction ``cusum_changepoint`` performs batch-side), and the CUSUM +
+    argmax windows run over the drained complete-mode counters, where
+    every day is final. Counter aggregation is arrival-order independent,
+    so the live detector lands exactly on the batch oracle however
+    micro-batches split. In production the drained-counter stage is the
+    maintained daily-rollup TABLE (foreachBatch merge → IVM) and the
+    detector re-runs per trigger over calendar-bounded rows."""
+    stream = read_events_stream(spark, sf_dir)
+    daily = (
+        stream.select("event_type", F.to_date("ts").alias("d"))
+        .groupBy("event_type", "d")
+        .agg(F.count("*").alias("c"))
+    )
+    return cusum(run_to_memory(daily, output_mode="complete"))
 
 
 @query(

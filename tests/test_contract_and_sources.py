@@ -58,9 +58,11 @@ def test_registry_priority_window():
         "pipeline_corpus_build", "pipeline_drop_reasons",
         "graph_kcore", "similarity_ann_hyperplane_recall",
         "bm25_search", "tfidf_terms",
+        # rule 2: plans changed in r13 (the chained pair generators)
+        "graph_jaccard_sim", "dedup_ngram_jaccard", "dedup_ngram_jaccard_dfcut",
         # rule 3 sample: r4-age rows + the head of the r5-age cohort
         "sketch_bloom", "fk_audit", "geo_grid_hotspots",
-        "join_asof_nearest", "span_dedup",
+        "join_asof_nearest", "dedup_incremental",
     }
     assert rotated_in <= set(plans.PRIORITY)
 

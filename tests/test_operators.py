@@ -1069,6 +1069,37 @@ def test_ngram_jaccard_id_space_guard_trips_loudly(spark, tmp_path):
             plans.QUERIES["dedup_ngram_jaccard"](spark, sf).collect()
 
 
+def test_bag_pair_counts_matches_brute_force(spark):
+    """The packed-key pair count against a Python count over C(L,2) pairs
+    of generated sorted distinct bags: single-element bags emit nothing, a
+    pair shared by several bags counts once per bag, and a largest id in
+    [2^31, 2^32) still unpacks exactly (the low word of the packed key —
+    the fixtures' ids never reach it)."""
+    import random
+    from collections import Counter
+    from itertools import combinations
+
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.operators.blocking import (
+        bag_pair_counts,
+    )
+
+    rng = random.Random(7)
+    big = [2**31, 2**31 + 3, 2**32 - 1]
+    bags = [[5], [2**32 - 1], [2, 9], [2, 9, 11], [0, 2, 9, 2**32 - 1], [9, 2**32 - 1]]
+    for _ in range(60):
+        bag = sorted(rng.sample(range(40), rng.randint(1, 6)))
+        if rng.random() < 0.4:
+            bag.append(rng.choice(big))
+        bags.append(bag)
+    want = Counter(p for bag in bags for p in combinations(bag, 2))
+    df = spark.createDataFrame([(b,) for b in bags], "ds array<bigint>")
+    got = {
+        (r.a, r.b): r.n for r in bag_pair_counts(df, "ds", "a", "b", "n").collect()
+    }
+    assert want[(2, 9)] >= 3 and want[(9, 2**32 - 1)] >= 2  # shared pairs
+    assert got == dict(want)
+
+
 def test_multiprobe_emits_identical_docs_exactly_once(spark, tmp_path):
     """The r10 fused multiprobe replaces the cross-probe DISTINCT with a
     first-probe-wins predicate. The sharpest case: IDENTICAL documents
